@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    rows for that id, and a re-add refreshed AFTER the delete
   *    survives (the delete-then-refresh ordering q272 gates and the
   *    index specs pin).
-  *  - '''replay idempotence''' ([[alreadyDelivered]]): a refresh that
+  *  - '''replay idempotence''' ([[replayGuarded]]): a refresh that
   *    carries a caller-supplied delta id commits under `delta:<id>`;
   *    re-delivering the same id is a NO-OP returning the already-
   *    committed version — the protocol closes the duplicate-on-replay
@@ -86,14 +86,6 @@ private[graft] object IndexSegments {
     require(org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp,
       false /* deleteSource */, true /* overwrite */, conf),
       s"carry copy $src -> $dst failed")
-  }
-
-  /** Marker label for a refresh: `delta` (id-less, additive) or
-    * `delta:<id>` (replay-guarded).
-    */
-  def deltaLabel(deltaId: String): String = {
-    validDeltaId(deltaId)
-    if (deltaId.isEmpty) "delta" else s"delta:$deltaId"
   }
 
   /** The delta-id contract every family label shares: bounded in BYTES
@@ -210,15 +202,28 @@ private[graft] object IndexSegments {
     deliveredLabels(spark, stateDir,
       VersionedState.committed(spark, stateDir)).get(label)
 
-  /** The committed version carrying `delta:<deltaId>`, if the id was
-    * already delivered (None for id-less calls — those are never
-    * replay-guarded). Survives compaction via the delivered sidecar;
-    * reset only by a full build.
+  /** The marker label of a `kind` commit, validating `deltaId` FIRST
+    * (guard keys are always validated ids): `kind` (id-less: additive,
+    * never replay-guarded) or `kind:<id>`.
     */
-  def alreadyDelivered(spark: SparkSession, stateDir: String,
-                       deltaId: String): Option[Long] =
-    if (deltaId.isEmpty) None
-    else alreadyDeliveredLabel(spark, stateDir, s"delta:$deltaId")
+  def replayLabel(kind: String, deltaId: String): String = {
+    validDeltaId(deltaId)
+    if (deltaId.isEmpty) kind else s"$kind:$deltaId"
+  }
+
+  /** The replay-guard prelude every guarded commit shares: the
+    * [[replayLabel]], and the committed version answering for it if it
+    * was already delivered — otherwise `commit` runs with the label.
+    * Survives compaction via the delivered sidecar; reset only by a
+    * full build.
+    */
+  def replayGuarded(spark: SparkSession, stateDir: String, kind: String,
+                    deltaId: String)(commit: String => Long): Long = {
+    val label = replayLabel(kind, deltaId)
+    (if (deltaId.isEmpty) None
+     else alreadyDeliveredLabel(spark, stateDir, label))
+      .getOrElse(commit(label))
+  }
 
   /** The live index relation (see object doc), or None before the
     * first commit. Segment rows must carry an `id` column — the key
@@ -274,30 +279,22 @@ private[graft] object IndexSegments {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed index at $stateDir — nothing to delete from")
-    validDeltaId(deltaId)
-    val label = if (deltaId.isEmpty) "tombstone" else s"tombstone:$deltaId"
-    if (deltaId.nonEmpty) {
-      alreadyDeliveredLabel(spark, stateDir, label) match {
-        case Some(v) => return v // replayed delete: already committed
-        case None    =>
+    replayGuarded(spark, stateDir, "tombstone", deltaId) { label =>
+      val pdir = VersionedState.versionPath(stateDir, prev.get)
+      val tomb = ids.select(col(ids.columns.head).as("id")).distinct()
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        // dials are frozen: byte-identical FS carry, no Spark round-trip
+        dialDirs.foreach(d => carryDir(spark, s"$pdir/$d", s"$vdir/$d"))
+        tomb.write.mode("overwrite").parquet(s"$vdir/tombstones")
       }
-    }
-    val pdir = VersionedState.versionPath(stateDir, prev.get)
-    val tomb = ids.select(col(ids.columns.head).as("id")).distinct()
-    VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-      // dials are frozen: byte-identical FS carry, no Spark round-trip
-      dialDirs.foreach(d => carryDir(spark, s"$pdir/$d", s"$vdir/$d"))
-      tomb.write.mode("overwrite").parquet(s"$vdir/tombstones")
     }
   }
 
   /** Per-key count totals across a COUNT family's read horizon — the
-    * one shared reader behind [[graft.text.Bm25State]] postings/doclen,
-    * [[graft.dedup.ExactSubstr]] hash counts,
-    * [[graft.dedup.BandedIndex]] band rows and
-    * [[graft.multimodal.PerceptualIndex]] band rows (it existed as four
-    * hand-copies until the nonzero-fold compaction fix had to be
-    * applied to every one of them). Semantics:
+    * reader behind [[graft.operators.CountedState]] (postings/doclen,
+    * window-hash counts, band rows). `cs` is the read's non-empty
+    * committed (version, label) list, already cut at its `asOf`.
+    * Semantics:
     *
     *  - every segment since the latest base reads with the BASE
     *    segment's explicit schema (a partitionBy write of an all-empty
@@ -314,13 +311,10 @@ private[graft] object IndexSegments {
     *    same as 0 + x).
     */
   def liveCounts(spark: SparkSession, stateDir: String,
-                 asOf: Option[Long], table: String, keys: Seq[String],
+                 cs: Seq[(Long, String)], table: String, keys: Seq[String],
                  cnts: Seq[String],
                  pre: DataFrame => DataFrame = identity,
-                 liveOnly: Boolean = true): Option[DataFrame] = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    if (cs.isEmpty) return None
+                 liveOnly: Boolean = true): DataFrame = {
     val base = lastBase(cs, stateDir)
     val vs = cs.map(_._1).filter(_ >= base)
     val sch = spark.read.parquet(
@@ -333,12 +327,12 @@ private[graft] object IndexSegments {
     val all = vs.map(n => spark.read.schema(sch).parquet(
         s"${VersionedState.versionPath(stateDir, n)}/$table"))
       .reduce(_.unionByName(_))
-    Some(pre(all)
+    pre(all)
       .groupBy(keys.map(col): _*)
       .agg(sum(cnts.head).cast("long").as(cnts.head),
         cnts.tail.map(c => sum(c).cast("long").as(c)): _*)
       .where(if (liveOnly) col(cnts.head) > 0
-             else cnts.map(col(_) =!= 0).reduce(_ || _)))
+             else cnts.map(col(_) =!= 0).reduce(_ || _))
   }
 
   /** The GC floor a compaction commit should use: `next` (reclaim

@@ -124,20 +124,17 @@ object IvfIndex {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.alreadyDelivered(spark, stateDir, deltaId) match {
-      case Some(v) => return v // replayed delta: already committed
-      case None    =>
-    }
-    val pdir = VersionedState.versionPath(stateDir, prev.get)
-    VersionedState.commit(spark, stateDir, prev,
-      label = IndexSegments.deltaLabel(deltaId)) { vdir =>
-      // centroids are frozen off a build: byte-identical FS carry (no
-      // Spark round-trip); the routing still reads the COMMITTED
-      // artifact back from the fresh version dir
-      IndexSegments.carryDir(spark, s"$pdir/centroids", s"$vdir/centroids")
-      assignTo(delta, idCol, vecCol,
-          spark.read.parquet(s"$vdir/centroids"))
-        .write.mode("overwrite").parquet(s"$vdir/segment")
+    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
+      val pdir = VersionedState.versionPath(stateDir, prev.get)
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        // centroids are frozen off a build: byte-identical FS carry (no
+        // Spark round-trip); the routing still reads the COMMITTED
+        // artifact back from the fresh version dir
+        IndexSegments.carryDir(spark, s"$pdir/centroids", s"$vdir/centroids")
+        assignTo(delta, idCol, vecCol,
+            spark.read.parquet(s"$vdir/centroids"))
+          .write.mode("overwrite").parquet(s"$vdir/segment")
+      }
     }
   }
 

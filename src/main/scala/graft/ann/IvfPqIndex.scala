@@ -70,29 +70,26 @@ object IvfPqIndex {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.alreadyDelivered(spark, stateDir, deltaId) match {
-      case Some(v) => return v // replayed delta: already committed
-      case None    =>
-    }
-    val pdir = VersionedState.versionPath(stateDir, prev.get)
-    val cbStored = spark.read.parquet(s"$pdir/codebooks")
-    val mRow = cbStored.agg(max("sub")).head()
-    require(!mRow.isNullAt(0),
-      s"stored codebook table at $stateDir is empty — the index is " +
-        "unusable; run build() with a non-empty seed set")
-    val m = mRow.getInt(0) + 1
-    VersionedState.commit(spark, stateDir, prev,
-      label = IndexSegments.deltaLabel(deltaId)) { vdir =>
-      // coarse table + codebooks are frozen off a build: byte-identical
-      // FS carries (no Spark round-trips)
-      IndexSegments.carryDir(spark, s"$pdir/coarse", s"$vdir/coarse")
-      IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
-      val res = IvfPq.residuals(delta, idCol, vecCol,
-        spark.read.parquet(s"$vdir/coarse")).localCheckpoint()
-      Pq.assign(Pq.subvectors(res, "id", "rv", m),
-          spark.read.parquet(s"$vdir/codebooks"))
-        .join(res.select("id", "bid"), "id")
-        .write.mode("overwrite").parquet(s"$vdir/segment")
+    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
+      val pdir = VersionedState.versionPath(stateDir, prev.get)
+      val cbStored = spark.read.parquet(s"$pdir/codebooks")
+      val mRow = cbStored.agg(max("sub")).head()
+      require(!mRow.isNullAt(0),
+        s"stored codebook table at $stateDir is empty — the index is " +
+          "unusable; run build() with a non-empty seed set")
+      val m = mRow.getInt(0) + 1
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        // coarse table + codebooks are frozen off a build: byte-identical
+        // FS carries (no Spark round-trips)
+        IndexSegments.carryDir(spark, s"$pdir/coarse", s"$vdir/coarse")
+        IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
+        val res = IvfPq.residuals(delta, idCol, vecCol,
+          spark.read.parquet(s"$vdir/coarse")).localCheckpoint()
+        Pq.assign(Pq.subvectors(res, "id", "rv", m),
+            spark.read.parquet(s"$vdir/codebooks"))
+          .join(res.select("id", "bid"), "id")
+          .write.mode("overwrite").parquet(s"$vdir/segment")
+      }
     }
   }
 

@@ -73,26 +73,23 @@ object PqIndex {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.alreadyDelivered(spark, stateDir, deltaId) match {
-      case Some(v) => return v // replayed delta: already committed
-      case None    =>
-    }
-    val stored = spark.read.parquet(
-      s"${VersionedState.versionPath(stateDir, prev.get)}/codebooks")
-    // bounded collect: the codebook table is m·k rows by construction
-    val mRow = stored.agg(max("sub")).head()
-    require(!mRow.isNullAt(0),
-      s"stored codebook table at $stateDir is empty — the index is " +
-        "unusable; run build() with a non-empty seed set")
-    val m = mRow.getInt(0) + 1
-    val pdir = VersionedState.versionPath(stateDir, prev.get)
-    VersionedState.commit(spark, stateDir, prev,
-      label = IndexSegments.deltaLabel(deltaId)) { vdir =>
-      // codebooks are frozen off a build: byte-identical FS carry
-      IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
-      Pq.assign(Pq.subvectors(delta, idCol, vecCol, m),
-          spark.read.parquet(s"$vdir/codebooks"))
-        .write.mode("overwrite").parquet(s"$vdir/segment")
+    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
+      val stored = spark.read.parquet(
+        s"${VersionedState.versionPath(stateDir, prev.get)}/codebooks")
+      // bounded collect: the codebook table is m·k rows by construction
+      val mRow = stored.agg(max("sub")).head()
+      require(!mRow.isNullAt(0),
+        s"stored codebook table at $stateDir is empty — the index is " +
+          "unusable; run build() with a non-empty seed set")
+      val m = mRow.getInt(0) + 1
+      val pdir = VersionedState.versionPath(stateDir, prev.get)
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        // codebooks are frozen off a build: byte-identical FS carry
+        IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
+        Pq.assign(Pq.subvectors(delta, idCol, vecCol, m),
+            spark.read.parquet(s"$vdir/codebooks"))
+          .write.mode("overwrite").parquet(s"$vdir/segment")
+      }
     }
   }
 

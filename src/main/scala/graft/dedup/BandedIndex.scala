@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.ann.IndexSegments
-import graft.operators.VersionedState
+import graft.operators.{Bucket, CountedState, CountedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,10 +46,10 @@ import org.apache.spark.sql.functions._
   * (`base:bands=<n>,rows=<r>,B=<n>[,dims=<d>]`) and are recovered from
   * disk on
   * every later commit and probe, so maintainers cannot desynchronize
-  * them. Replay (`delta:<id>`/`retract:<id>`/`drop:<id>` markers +
-  * the compaction-carried delivered sidecar), torn commits, GC,
-  * retention and second-writer surfacing are the family's shared
-  * guarantees.
+  * them. The lifecycle — replay (`delta:<id>`/`retract:<id>`/`drop:<id>`
+  * markers + the compaction-carried delivered sidecar), compaction,
+  * torn commits, GC, retention and second-writer surfacing — is the
+  * [[graft.operators.CountedState]] engine's.
   *
   * == Scale shape (100 TB) ==
   *
@@ -65,13 +65,9 @@ import org.apache.spark.sql.functions._
   */
 object BandedIndex {
 
-  /** The chunk-hash bucket COLUMN: first 8 md5 hex digits mod B (the
-    * repo's portable-hash discipline; bucketing is invisible in
-    * results, so no oracle twin is needed — probes collect the fresh
-    * side's buckets from this same expression).
-    */
+  /** The chunk-hash bucket COLUMN ([[CountedState.bucketExpr]]). */
   def bucketExpr(chunk: Column, nB: Int): Column =
-    (conv(substring(md5(chunk), 1, 8), 16, 10).cast("long") % nB).cast("int")
+    CountedState.bucketExpr(chunk, nB)
 
   /** One batch's band rows as COUNTS: (band, chunk, id, c=1) — the
     * map-side signature + banding pass. `dims = 0` (the text modality)
@@ -95,34 +91,25 @@ object BandedIndex {
         .select(col("band"), col("chunk"), col(idCol).as("id"),
           lit(1L).as("c"))
 
-  private def baseLabel(kind: String, nBands: Int, rowsPerBand: Int,
-                        nB: Int, dims: Int) =
-    s"$kind:bands=$nBands,rows=$rowsPerBand,B=$nB" +
-      (if (dims > 0) s",dims=$dims" else "")
+  private val Bands = CountedTable("bands", Seq("band", "chunk", "id"),
+    Seq("c"), Some(Bucket("bb", "chunk", "doc with a joinable band row " +
+      "(a non-empty token array / a nonzero-norm vector)")))
 
-  private val DialPattern =
-    """.*:bands=(\d+),rows=(\d+),B=(\d+)(?:,dims=(\d+))?""".r
-
-  private def lastBaseOf(cs: Seq[(Long, String)],
-                         stateDir: String): (Long, Int, Int, Int, Int) =
-    cs.filter(_._2.startsWith("base")).lastOption match {
-      case Some((n, DialPattern(b, r, nb, d))) =>
-        (n, b.toInt, r.toInt, nb.toInt,
-          Option(d).map(_.toInt).getOrElse(0))
-      case Some((_, bad)) => throw new IllegalStateException(
-        s"base marker at $stateDir carries no banding dials (label '$bad') " +
-          "— not a BandedIndex state directory")
-      case None => throw new IllegalStateException(
-        s"$stateDir has committed versions but no base — corrupt state")
-    }
+  // dials ride the base label as `bands=<n>,rows=<r>,B=<n>[,dims=<d>]`
+  private val State = new CountedState(Seq(Bands),
+    dialNames = Seq("bands", "rows", "B"), optionalDials = Seq("dims"),
+    dialNoun = "banding dials", dirNoun = "a BandedIndex state directory",
+    id = Some("id"),
+    derive = (docs, idCol, toksCol, d) => Seq(bandRows(docs, idCol, toksCol,
+      d("bands"), d("rows"), d.getOrElse("dims", 0))))
 
   /** The (nBands, rowsPerBand, buckets) dials the stored state was
     * built with. `asOf` pins the read to a committed version.
     */
   def storedDials(spark: SparkSession, stateDir: String,
                   asOf: Option[Long] = None): (Int, Int, Int) = {
-    val (b, r, nb, _) = allDials(spark, stateDir, asOf)
-    (b, r, nb)
+    val d = State.storedDials(spark, stateDir, asOf)
+    (d("bands"), d("rows"), d("B"))
   }
 
   /** The SRP dimensionality the stored state was built with — 0 for a
@@ -132,39 +119,7 @@ object BandedIndex {
     */
   def storedDims(spark: SparkSession, stateDir: String,
                  asOf: Option[Long] = None): Int =
-    allDials(spark, stateDir, asOf)._4
-
-  private def allDials(spark: SparkSession, stateDir: String,
-                       asOf: Option[Long]): (Int, Int, Int, Int) = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    require(cs.nonEmpty, s"no committed state at $stateDir")
-    val (_, b, r, nb, d) = lastBaseOf(cs, stateDir)
-    (b, r, nb, d)
-  }
-
-  /** Write a band table bucket-partitioned. `splits ≤ 1` keeps ONE
-    * file per bucket per commit (right for deltas); `splits > 1`
-    * co-hashes the doc id into the exchange so a corpus-sized write
-    * (build/compact) spreads each bucket over ~that many tasks/files —
-    * the [[graft.text.Bm25State]] write-straggler dial, purely
-    * physical (the bucket stays the partition directory; live sums
-    * are file-count-blind).
-    */
-  private def writeBands(rows: DataFrame, nB: Int, vdir: String,
-                         splits: Int = 1): Unit = {
-    val withB = rows.withColumn("bb", bucketExpr(col("chunk"), nB))
-    // salted, not keyed on the raw id: distinct partitioner keys stay
-    // at nB·splits, so each bucket spreads over ~splits tasks/files —
-    // keying on (bb, id) would spread every bucket over ALL tasks
-    // (≈ nB·splits files per bucket, the small-file failure mode)
-    val parted =
-      if (splits <= 1) withB.repartition(nB, col("bb"))
-      else withB.repartition(nB * splits, col("bb"),
-        pmod(hash(col("id")), lit(splits)))
-    parted.write.mode("overwrite").partitionBy("bb")
-      .parquet(s"$vdir/bands")
-  }
+    State.storedDials(spark, stateDir, asOf).getOrElse("dims", 0)
 
   /** Full (re)build: band rows of the entire corpus given, committed
     * as a base carrying the dials; prior versions (and the replay
@@ -172,7 +127,9 @@ object BandedIndex {
     * it with corpus size like the Bm25State postings dial.
     * `writeSplits` as in [[graft.text.Bm25State.build]]: parallelize
     * the corpus-sized write (size so bucket files land near the input
-    * split size; over-splitting costs per-file overhead).
+    * split size; over-splitting costs per-file overhead). A corpus
+    * whose docs are all token-less (resp. zero-norm vectors) derives no
+    * band row and is refused.
     */
   def build(docs: DataFrame, idCol: String, toksCol: String,
             stateDir: String, nBands: Int = 4, rowsPerBand: Int = 2,
@@ -186,52 +143,9 @@ object BandedIndex {
     // mid-plan after the label convention already accepted the dials
     require(dims == 0 || rowsPerBand <= 31,
       s"SRP banding packs ≤ 31 sign bits per band chunk, got rows=$rowsPerBand")
-    val rows = bandRows(docs, idCol, toksCol, nBands, rowsPerBand, dims)
-    // guard on the DERIVED payload, not the raw input: a corpus whose
-    // docs are all token-less (resp. zero-norm vectors) passes a raw
-    // non-empty check while bandRows drops every row — the bucket-
-    // partitioned base would commit zero parquet footers and poison
-    // later reads
-    require(!rows.isEmpty,
-      "build() needs at least one doc with a joinable band row (a " +
-        "non-empty token array / a nonzero-norm vector) — an " +
-        "all-dropped base commits no parquet footers to anchor later " +
-        "reads; build on the first real batch instead")
-    val spark = docs.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val next = prev.getOrElse(0L) + 1L
-    VersionedState.commit(spark, stateDir, prev,
-      label = baseLabel("base", nBands, rowsPerBand, buckets, dims),
-      gcBelow = next) { vdir =>
-      writeBands(rows, buckets, vdir, writeSplits)
-    }
-  }
-
-  private def deltaCommit(docs: DataFrame, idCol: String, toksCol: String,
-                          stateDir: String, kind: String, deltaId: String,
-                          negate: Boolean): Long = {
-    val spark = docs.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before $kind()")
-    IndexSegments.validDeltaId(deltaId) // validate-first (family invariant)
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"$kind:$deltaId")
-    delivered match {
-      case Some(v) => return v // replayed batch id: already committed
-      case None    =>
-    }
-    val (nBands, rowsPerBand, nB, dims) = allDials(spark, stateDir, None)
-    val rows = bandRows(docs, idCol, toksCol, nBands, rowsPerBand, dims)
-    val signed =
-      if (negate) rows.select(col("band"), col("chunk"), col("id"),
-        (-col("c")).as("c"))
-      else rows
-    val label = if (deltaId.isEmpty) kind else s"$kind:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label)(
-      writeBands(signed, nB, _))
+    State.build(docs, idCol, toksCol, stateDir, Seq("bands" -> nBands,
+      "rows" -> rowsPerBand, "B" -> buckets) ++
+      (if (dims > 0) Seq("dims" -> dims) else Nil), writeSplits)
   }
 
   /** Incremental refresh: band rows of ONLY the delta docs, at the
@@ -240,8 +154,7 @@ object BandedIndex {
     */
   def refresh(docs: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(docs, idCol, toksCol, stateDir, "delta", deltaId,
-      negate = false)
+    State.refresh(docs, idCol, toksCol, stateDir, deltaId)
 
   /** Remove docs by their token rows: the batch's band rows NEGATED.
     * ⚠ The [[graft.text.Bm25State.retract]] hazard note applies:
@@ -250,8 +163,7 @@ object BandedIndex {
     */
   def retract(docs: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(docs, idCol, toksCol, stateDir, "retract", deltaId,
-      negate = true)
+    State.retract(docs, idCol, toksCol, stateDir, deltaId)
 
   /** Erasure BY ID ALONE: negate the ids' LIVE band rows (the rows
     * name the doc, so the negation re-derives from the state itself —
@@ -260,28 +172,8 @@ object BandedIndex {
     * against the broadcast erasure batch.
     */
   def delete(ids: DataFrame, idCol: String, stateDir: String,
-             deltaId: String = ""): Long = {
-    val spark = ids.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before delete()")
-    IndexSegments.validDeltaId(deltaId)
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"drop:$deltaId")
-    delivered match {
-      case Some(v) => return v // replayed erasure id: already committed
-      case None    =>
-    }
-    val (_, _, nB) = storedDials(spark, stateDir)
-    val victims = broadcast(ids.select(col(idCol).as("id")).distinct())
-    val neg = liveBands(spark, stateDir).get.join(victims, "id")
-      .select(col("band"), col("chunk"), col("id"), (-col("c")).as("c"))
-    val label = if (deltaId.isEmpty) "drop" else s"drop:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label)(
-      writeBands(neg, nB, _))
-  }
+             deltaId: String = ""): Long =
+    State.delete(ids, idCol, stateDir, deltaId)
 
   /** The LIVE band rows (band, chunk, id, c): per-key totals summed
     * across every version since the latest base, positive totals only.
@@ -293,139 +185,84 @@ object BandedIndex {
   def liveBands(spark: SparkSession, stateDir: String,
                 asOf: Option[Long] = None,
                 buckets: Option[Seq[Int]] = None): Option[DataFrame] =
-    summedBands(spark, stateDir, asOf, buckets, liveOnly = true)
+    State.live(spark, stateDir, Bands, asOf,
+      buckets.map(bs => col("bb").isin(bs: _*)))
 
-  private def summedBands(spark: SparkSession, stateDir: String,
-                          asOf: Option[Long], buckets: Option[Seq[Int]],
-                          liveOnly: Boolean): Option[DataFrame] =
-    // the family-shared reader (explicit base schema, nonzero compact
-    // fold); the bucket filter rides `pre` so it lands BELOW the
-    // live-sum agg as a partition filter
-    IndexSegments.liveCounts(spark, stateDir, asOf, "bands",
-      Seq("band", "chunk", "id"), Seq("c"),
-      pre = df => buckets.fold(df)(bs => df.where(col("bb").isin(bs: _*))),
-      liveOnly = liveOnly)
+  /** The banded screen [[BandedIndex]] and
+    * [[graft.multimodal.PerceptualIndex]] share: the fresh batch's band
+    * rows (derived map-side at the stored dials, local-checkpointed),
+    * its ≤ B DISTINCT bucket ids collected driver-side (bounded by the
+    * dial, not the batch), the stored side read ONLY from those bucket
+    * partitions, the skew cap counting BOTH sides' bucket members
+    * (exactly like the one-shot path), and the (band, chunk) join of
+    * fresh rows `f` to stored rows `c` — the family projects (and
+    * verifies) the pairs.
+    */
+  private[graft] def bandedScreen(state: CountedState, fresh: DataFrame,
+                                  idCol: String, payloadCol: String,
+                                  stateDir: String, maxBucketSize: Int,
+                                  asOf: Option[Long]): DataFrame = {
+    val spark = fresh.sparkSession
+    val t = state.tables.head
+    val b = t.bucket.get
+    val d = state.storedDials(spark, stateDir, asOf)
+    val f = state.derive(fresh, idCol, payloadCol, d).head
+      .withColumn(b.column, CountedState.bucketExpr(col(b.key), d("B")))
+      .localCheckpoint() // batch-bounded; bucket collect + probe read it
+    val buckets = f.select(b.column).distinct().collect().map(_.getInt(0)).toSeq
+    val keys = t.keys.map(col)
+    // .get is safe: storedDials above already refused an uncommitted
+    // (or empty-asOf) state
+    val stored = state.live(spark, stateDir, t, asOf,
+        Some(col(b.column).isin(buckets: _*))).get
+      .select(keys :+ lit(0).as("_side"): _*)
+    val tagged = stored.unionByName(f.select(keys :+ lit(1).as("_side"): _*))
+    val kept = Dedup.capBuckets(tagged, Seq("band", "chunk"), maxBucketSize)
+    val c = kept.where(col("_side") === 0)
+    val fr = kept.where(col("_side") === 1)
+    fr.alias("f").join(c.alias("c"),
+      col("f.band") === col("c.band") && col("f.chunk") === col("c.chunk"))
+  }
 
   /** Screen a fresh batch against the maintained index: candidate
     * (id_new, id_corpus) pairs sharing any banded minhash chunk with a
     * LIVE corpus doc — ≡ [[Dedup.incrementalNearDupCandidates]] with
     * the corpus side read from state instead of re-banded (q285 gates
-    * the identity hash-exact). The skew cap counts BOTH sides' bucket
-    * members, exactly like the one-shot path. The stored side reads
-    * ONLY the fresh batch's chunk-hash bucket partitions (≤ B distinct
-    * bucket ids, collected driver-side from the map-side fresh rows).
+    * the identity hash-exact), through the shared [[bandedScreen]].
     * Fresh ids must be disjoint from the live corpus ids (the dedup
     * universe contract).
     */
   def screen(fresh: DataFrame, idCol: String, toksCol: String,
              stateDir: String, maxBucketSize: Int = Int.MaxValue,
-             asOf: Option[Long] = None): DataFrame = {
-    val spark = fresh.sparkSession
-    val (nBands, rowsPerBand, nB, dims) = allDials(spark, stateDir, asOf)
-    val f = bandRows(fresh, idCol, toksCol, nBands, rowsPerBand, dims)
-      .withColumn("bb", bucketExpr(col("chunk"), nB))
-      .localCheckpoint() // batch-bounded; bucket collect + probe read it
-    // ≤ B distinct ints — bounded by the dial, not the batch
-    val buckets = f.select("bb").distinct().collect().map(_.getInt(0)).toSeq
-    // .get is safe: storedDials above already refused an uncommitted
-    // (or empty-asOf) state
-    val stored = liveBands(spark, stateDir, asOf, Some(buckets)).get
-      .select(col("band"), col("chunk"), col("id"), lit(0).as("_side"))
-    val tagged = stored.unionByName(
-      f.select(col("band"), col("chunk"), col("id"), lit(1).as("_side")))
-    val kept = Dedup.capBuckets(tagged, Seq("band", "chunk"), maxBucketSize)
-    val c = kept.where(col("_side") === 0)
-    val fr = kept.where(col("_side") === 1)
-    fr.alias("f")
-      .join(c.alias("c"),
-        col("f.band") === col("c.band") && col("f.chunk") === col("c.chunk"))
+             asOf: Option[Long] = None): DataFrame =
+    bandedScreen(State, fresh, idCol, toksCol, stateDir, maxBucketSize, asOf)
       .select(col("f.id").as("id_new"), col("c.id").as("id_corpus"))
       .distinct()
-  }
 
-  /** Fold every count table since the last base into ONE base-compact
-    * version (dials carried in the label; zero totals dropped, nonzero
-    * totals — negatives included — preserved, so compaction never
-    * changes observable state), carry the replay guard's delivered-id
-    * sidecar, and GC below the retention floor. `writeSplits` as in
-    * [[build]] — the fold is the other corpus-sized write.
+  /** Fold the horizon into ONE base-compact version carrying the dials
+    * ([[graft.operators.CountedState.compact]]; a fully-erased state is
+    * refused). `writeSplits` as in [[build]] — the fold is the other
+    * corpus-sized write.
     */
   def compact(spark: SparkSession, stateDir: String,
               retainHorizons: Int = 1,
               maxDelivered: Int = IndexSegments.DefaultMaxDelivered,
-              writeSplits: Int = 1): Long = {
-    val cs = VersionedState.committed(spark, stateDir)
-    require(cs.nonEmpty, s"no committed state at $stateDir — nothing to compact")
-    val (base, nBands, rowsPerBand, nB, dims) = lastBaseOf(cs, stateDir)
-    val cur = cs.last._1
-    if (cur == base) return cur
-    // nonzero fold: negatives from a contract-violating retract are
-    // preserved, so compaction never changes observable state
-    val folded = summedBands(spark, stateDir, None, None, liveOnly = false).get
-    // a fully-erased state must not fold (the Bm25State.compact guard):
-    // an empty bucket-partitioned base commits zero parquet footers and
-    // poisons every later explicit-schema read
-    require(!folded.isEmpty,
-      s"refusing to compact $stateDir: the live band table is EMPTY " +
-        "(every doc erased) — an empty base-compact would leave no " +
-        "schema anchor; keep the horizon and build() on the next corpus")
-    val delivered = IndexSegments.retainDelivered(
-      IndexSegments.deliveredLabelsOrdered(spark, stateDir, cs),
-      maxDelivered, stateDir)
-    val next = cur + 1
-    VersionedState.commit(spark, stateDir, Some(cur),
-      label = baseLabel("base-compact", nBands, rowsPerBand, nB, dims),
-      gcBelow = IndexSegments.compactGcFloor(cs, next, retainHorizons)) { vdir =>
-      writeBands(folded, nB, vdir, writeSplits)
-      VersionedState.writeLines(spark, vdir, IndexSegments.DeliveredFile,
-        delivered)
-    }
-  }
+              writeSplits: Int = 1): Long =
+    State.compact(spark, stateDir, retainHorizons, maxDelivered, writeSplits)
 
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
+  /** Reclaim the horizon a retaining [[compact]] left alive. */
   def gc(spark: SparkSession, stateDir: String): Unit =
     IndexSegments.gcOldHorizons(spark, stateDir)
 
-  /** The runbook as code — one call per ingest batch: refresh with the
-    * delta (replay-guarded), compact when the marker dial trips, and —
-    * when `auditCorpus` (the full live token table) is supplied — gate
-    * the maintained band rows against a one-shot re-banding: band rows
-    * are a pure function of the tokens, so ANY difference is
-    * corruption, never approximation.
+  /** The runbook as code ([[graft.operators.CountedState.maintain]]):
+    * band rows are a pure function of the tokens, so the drift gate's
+    * one-shot re-banding must match them exactly.
     */
   def maintain(deltaDocs: DataFrame, idCol: String, toksCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                auditCorpus: Option[DataFrame] = None):
-      graft.operators.MaintainReport = {
-    import graft.operators.{GateVerdict, Maintain, MaintainReport}
-    val spark = deltaDocs.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(deltaDocs, idCol, toksCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = auditCorpus.toSeq.map { corpus =>
-      val (nBands, rowsPerBand, _, dims) = allDials(spark, stateDir, None)
-      val diff = liveBands(spark, stateDir).get
-        .join(bandRows(corpus, idCol, toksCol, nBands, rowsPerBand, dims)
-            .select(col("band"), col("chunk"), col("id"),
-              col("c").as("c_one")),
-          Seq("band", "chunk", "id"), "full_outer")
-        .where(col("c").isNull || col("c_one").isNull ||
-          col("c") =!= col("c_one"))
-        .count()
-      if (diff == 0)
-        GateVerdict.Ok("drift", "maintained band rows ≡ one-shot re-banding")
-      else
-        GateVerdict.Corruption("drift",
-          s"$diff band rows differ from the one-shot re-banding — rows " +
-            "are a pure function of the tokens, so this is lost/replayed " +
-            "state, not approximation; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
-  }
+      graft.operators.MaintainReport =
+    State.maintain(deltaDocs, idCol, toksCol, stateDir, deltaId,
+      maxLiveMarkers, auditCorpus)
 }

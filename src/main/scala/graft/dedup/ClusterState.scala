@@ -141,91 +141,88 @@ object ClusterState {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed state at $stateDir — run build() before refresh()")
-    IndexSegments.alreadyDelivered(spark, stateDir, deltaId) match {
-      case Some(v) => return v // replayed batch: already committed
-      case None    =>
-    }
-    val newIdTable = newIds.select(col(idCol).as("id")).distinct()
-      .localCheckpoint() // batch-bounded; probe, guard, nodes, adds read it
-    // ONE scan of the stored live table: project the batch's endpoint
-    // ids (and the overlap guard's probe) through it with the
-    // delta-bounded probe broadcast — never a second corpus-sized read,
-    // never a corpus-sized write
-    val probe = pairs.select(col("id_a").as("id"))
-      .unionByName(pairs.select(col("id_b").as("id")))
-      .unionByName(newIdTable)
-      .distinct()
-    val hits = labels(spark, stateDir).get
-      .join(broadcast(probe), Seq("id"))
-      .localCheckpoint() // delta-bounded (id, label) of every known endpoint
-    // BOTH contract guards ride ONE driver action off the shared hits
-    // checkpoint (they were two separate limit(3).collect()s — two full
-    // job launches per refresh for probes that are almost always empty):
-    //  - overlap: a batch must not re-ingest ids already LIVE (a second
-    //    adds row, possibly divergently labeled);
-    //  - unknown: every pair endpoint must be LIVE or IN THIS BATCH —
-    //    an unknown endpoint (deleted, or never ingested, e.g. an
-    //    at-least-once edge source re-delivering an edge after its
-    //    endpoint's erasure) would be minted as a node, could become a
-    //    cluster LABEL that is a dead doc id, and a later re-ingest of
-    //    that id would spuriously merge unrelated clusters.
-    val endpoints = pairs.select(col("id_a").as("id"))
-      .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-    val violations = hits.join(newIdTable, Seq("id"))
-      .select(col("id"), lit("overlap").as("kind")).limit(3)
-      .unionByName(endpoints
-        .join(hits.select("id"), Seq("id"), "left_anti")
-        .join(newIdTable, Seq("id"), "left_anti")
-        .select(col("id"), lit("unknown").as("kind")).limit(3))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val overlap = violations.collect { case (id, "overlap") => id }
-    require(overlap.isEmpty,
-      s"refresh newIds overlap ids already LIVE in $stateDir (e.g. " +
-        s"${overlap.mkString(", ")}) — a batch must not re-ingest live " +
-        "docs; delete() them first or drop them from the batch")
-    val unknown = violations.collect { case (id, "unknown") => id }
-    require(unknown.isEmpty,
-      s"pairs reference ids that are neither live in $stateDir nor in " +
-        s"this batch (e.g. ${unknown.mkString(", ")}) — deleted or never " +
-        "ingested; drop stale edges before refreshing (an at-least-once " +
-        "edge source must filter re-delivered edges against erasures)")
-    // contract: each endpoint to its current label (new docs have no
-    // stored label and stay themselves)
-    val e = pairs
-      .join(broadcast(hits.select(col("id").as("_pa"), col("label").as("_mla"))),
-        col("id_a") === col("_pa"), "left")
-      .join(broadcast(hits.select(col("id").as("_pb"), col("label").as("_mlb"))),
-        col("id_b") === col("_pb"), "left")
-      .select(coalesce(col("_mla"), col("id_a")).as("id_a"),
-        coalesce(col("_mlb"), col("id_b")).as("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-    val nodes = e.select(col("id_a").as("id"))
-      .unionByName(e.select(col("id_b").as("id")))
-      .unionByName(newIdTable)
-      .distinct()
-    val (rl, _) = Dedup.nearDupClustersConverged(nodes, "id", e)
-    val reduced = rl.select(col("id").as("node"), col("cluster_id"))
-      .localCheckpoint() // the remap filter AND the adds join read it
-    // remap rows: old labels whose component minimum changed. Every
-    // old-label node entered the reduced graph as SOME endpoint's
-    // projection, so the delta-bounded hits cover them all — the
-    // stored table is not re-read
-    val remap = reduced
-      .join(broadcast(hits.select(col("label")).distinct()),
-        col("node") === col("label"))
-      .where(col("cluster_id") =!= col("node"))
-      .select(col("node").as("old_label"), col("cluster_id").as("new_label"))
-    // adds: every new doc's final label (isolated docs label themselves
-    // — they are in `nodes`, so the reduced CC covers them)
-    val adds = reduced.join(broadcast(newIdTable), col("node") === col("id"))
-      .select(col("id"), col("cluster_id").as("label"))
-    VersionedState.commit(spark, stateDir, prev,
-      label = IndexSegments.deltaLabel(deltaId)) { vdir =>
-      graft.operators.Par.run[Unit](Seq(
-        () => adds.write.mode("overwrite").parquet(s"$vdir/adds"),
-        () => remap.write.mode("overwrite").parquet(s"$vdir/remap"),
-        () => pairs.select(col("id_a"), col("id_b"))
-          .write.mode("overwrite").parquet(s"$vdir/edges")))
+    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
+      val newIdTable = newIds.select(col(idCol).as("id")).distinct()
+        .localCheckpoint() // batch-bounded; probe, guard, nodes, adds read it
+      // ONE scan of the stored live table: project the batch's endpoint
+      // ids (and the overlap guard's probe) through it with the
+      // delta-bounded probe broadcast — never a second corpus-sized read,
+      // never a corpus-sized write
+      val probe = pairs.select(col("id_a").as("id"))
+        .unionByName(pairs.select(col("id_b").as("id")))
+        .unionByName(newIdTable)
+        .distinct()
+      val hits = labels(spark, stateDir).get
+        .join(broadcast(probe), Seq("id"))
+        .localCheckpoint() // delta-bounded (id, label) of every known endpoint
+      // BOTH contract guards ride ONE driver action off the shared hits
+      // checkpoint (they were two separate limit(3).collect()s — two full
+      // job launches per refresh for probes that are almost always empty):
+      //  - overlap: a batch must not re-ingest ids already LIVE (a second
+      //    adds row, possibly divergently labeled);
+      //  - unknown: every pair endpoint must be LIVE or IN THIS BATCH —
+      //    an unknown endpoint (deleted, or never ingested, e.g. an
+      //    at-least-once edge source re-delivering an edge after its
+      //    endpoint's erasure) would be minted as a node, could become a
+      //    cluster LABEL that is a dead doc id, and a later re-ingest of
+      //    that id would spuriously merge unrelated clusters.
+      val endpoints = pairs.select(col("id_a").as("id"))
+        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
+      val violations = hits.join(newIdTable, Seq("id"))
+        .select(col("id"), lit("overlap").as("kind")).limit(3)
+        .unionByName(endpoints
+          .join(hits.select("id"), Seq("id"), "left_anti")
+          .join(newIdTable, Seq("id"), "left_anti")
+          .select(col("id"), lit("unknown").as("kind")).limit(3))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      val overlap = violations.collect { case (id, "overlap") => id }
+      require(overlap.isEmpty,
+        s"refresh newIds overlap ids already LIVE in $stateDir (e.g. " +
+          s"${overlap.mkString(", ")}) — a batch must not re-ingest live " +
+          "docs; delete() them first or drop them from the batch")
+      val unknown = violations.collect { case (id, "unknown") => id }
+      require(unknown.isEmpty,
+        s"pairs reference ids that are neither live in $stateDir nor in " +
+          s"this batch (e.g. ${unknown.mkString(", ")}) — deleted or never " +
+          "ingested; drop stale edges before refreshing (an at-least-once " +
+          "edge source must filter re-delivered edges against erasures)")
+      // contract: each endpoint to its current label (new docs have no
+      // stored label and stay themselves)
+      val e = pairs
+        .join(broadcast(hits.select(col("id").as("_pa"), col("label").as("_mla"))),
+          col("id_a") === col("_pa"), "left")
+        .join(broadcast(hits.select(col("id").as("_pb"), col("label").as("_mlb"))),
+          col("id_b") === col("_pb"), "left")
+        .select(coalesce(col("_mla"), col("id_a")).as("id_a"),
+          coalesce(col("_mlb"), col("id_b")).as("id_b"))
+        .where(col("id_a") =!= col("id_b"))
+      val nodes = e.select(col("id_a").as("id"))
+        .unionByName(e.select(col("id_b").as("id")))
+        .unionByName(newIdTable)
+        .distinct()
+      val (rl, _) = Dedup.nearDupClustersConverged(nodes, "id", e)
+      val reduced = rl.select(col("id").as("node"), col("cluster_id"))
+        .localCheckpoint() // the remap filter AND the adds join read it
+      // remap rows: old labels whose component minimum changed. Every
+      // old-label node entered the reduced graph as SOME endpoint's
+      // projection, so the delta-bounded hits cover them all — the
+      // stored table is not re-read
+      val remap = reduced
+        .join(broadcast(hits.select(col("label")).distinct()),
+          col("node") === col("label"))
+        .where(col("cluster_id") =!= col("node"))
+        .select(col("node").as("old_label"), col("cluster_id").as("new_label"))
+      // adds: every new doc's final label (isolated docs label themselves
+      // — they are in `nodes`, so the reduced CC covers them)
+      val adds = reduced.join(broadcast(newIdTable), col("node") === col("id"))
+        .select(col("id"), col("cluster_id").as("label"))
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        graft.operators.Par.run[Unit](Seq(
+          () => adds.write.mode("overwrite").parquet(s"$vdir/adds"),
+          () => remap.write.mode("overwrite").parquet(s"$vdir/remap"),
+          () => pairs.select(col("id_a"), col("id_b"))
+            .write.mode("overwrite").parquet(s"$vdir/edges")))
+      }
     }
   }
 
@@ -250,47 +247,41 @@ object ClusterState {
     val prev = VersionedState.currentVersion(spark, stateDir)
     require(prev.nonEmpty,
       s"no committed state at $stateDir — nothing to delete from")
-    IndexSegments.validDeltaId(deltaId)
-    val label = if (deltaId.isEmpty) "drop" else s"drop:$deltaId"
-    if (deltaId.nonEmpty) {
-      IndexSegments.alreadyDeliveredLabel(spark, stateDir, label) match {
-        case Some(v) => return v // replayed delete
-        case None    =>
+    IndexSegments.replayGuarded(spark, stateDir, "drop", deltaId) { label =>
+      val victims = ids.select(col(ids.columns.head).as("id")).distinct()
+        .localCheckpoint() // batch-bounded; two scans + the edge filter read it
+      val stored = labels(spark, stateDir).get
+      // scan 1 of the label table: which clusters are affected
+      val affected = stored.join(broadcast(victims), Seq("id"))
+        .select(col("label")).distinct()
+        .localCheckpoint() // bounded by the victims' cluster count
+      // scan 2: the affected clusters' SURVIVING members (id, old label)
+      val members = stored
+        .join(broadcast(affected), Seq("label"))
+        .join(broadcast(victims), Seq("id"), "left_anti")
+        .select(col("id"), col("label").as("old_label"))
+        .localCheckpoint() // bounded by the affected clusters' sizes
+      // one scan of the live edge relation: edges fully inside the
+      // affected clusters between survivors (an edge incident to an
+      // affected cluster has BOTH endpoints in it, so inner-joining both
+      // ends against the members keeps exactly the induced subgraph)
+      val mIds = members.select(col("id"))
+      val edges = liveEdges(spark, stateDir).get
+        .join(broadcast(mIds.select(col("id").as("_ea"))), col("id_a") === col("_ea"))
+        .join(broadcast(mIds.select(col("id").as("_eb"))), col("id_b") === col("_eb"))
+        .select(col("id_a"), col("id_b"))
+      val (rl, _) = Dedup.nearDupClustersConverged(mIds, "id", edges)
+      // survivors whose component minimum changed (a split's far side,
+      // or any component that lost its minimum doc)
+      val relabel = rl.select(col("id"), col("cluster_id"))
+        .join(broadcast(members), Seq("id"))
+        .where(col("cluster_id") =!= col("old_label"))
+        .select(col("id"), col("cluster_id").as("label"))
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        graft.operators.Par.both(
+          () => victims.write.mode("overwrite").parquet(s"$vdir/removals"),
+          () => relabel.write.mode("overwrite").parquet(s"$vdir/relabel"))
       }
-    }
-    val victims = ids.select(col(ids.columns.head).as("id")).distinct()
-      .localCheckpoint() // batch-bounded; two scans + the edge filter read it
-    val stored = labels(spark, stateDir).get
-    // scan 1 of the label table: which clusters are affected
-    val affected = stored.join(broadcast(victims), Seq("id"))
-      .select(col("label")).distinct()
-      .localCheckpoint() // bounded by the victims' cluster count
-    // scan 2: the affected clusters' SURVIVING members (id, old label)
-    val members = stored
-      .join(broadcast(affected), Seq("label"))
-      .join(broadcast(victims), Seq("id"), "left_anti")
-      .select(col("id"), col("label").as("old_label"))
-      .localCheckpoint() // bounded by the affected clusters' sizes
-    // one scan of the live edge relation: edges fully inside the
-    // affected clusters between survivors (an edge incident to an
-    // affected cluster has BOTH endpoints in it, so inner-joining both
-    // ends against the members keeps exactly the induced subgraph)
-    val mIds = members.select(col("id"))
-    val edges = liveEdges(spark, stateDir).get
-      .join(broadcast(mIds.select(col("id").as("_ea"))), col("id_a") === col("_ea"))
-      .join(broadcast(mIds.select(col("id").as("_eb"))), col("id_b") === col("_eb"))
-      .select(col("id_a"), col("id_b"))
-    val (rl, _) = Dedup.nearDupClustersConverged(mIds, "id", edges)
-    // survivors whose component minimum changed (a split's far side,
-    // or any component that lost its minimum doc)
-    val relabel = rl.select(col("id"), col("cluster_id"))
-      .join(broadcast(members), Seq("id"))
-      .where(col("cluster_id") =!= col("old_label"))
-      .select(col("id"), col("cluster_id").as("label"))
-    VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-      graft.operators.Par.both(
-        () => victims.write.mode("overwrite").parquet(s"$vdir/removals"),
-        () => relabel.write.mode("overwrite").parquet(s"$vdir/relabel"))
     }
   }
 

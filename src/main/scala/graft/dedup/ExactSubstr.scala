@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.ann.IndexSegments
-import graft.operators.VersionedState
+import graft.operators.{CountedState, CountedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,23 +23,15 @@ import org.apache.spark.sql.functions._
   * == State layout ==
   *
   * One versioned-state directory; every version's payload is a
-  * `hashes/` parquet table (h STRING, c BIGINT) — window-hash counts.
-  * Labels: `base:L=<n>` (a [[build]] — counts of the whole corpus
-  * given), `delta` / `delta:<id>` (a [[refresh]] — counts of ONLY the
-  * delta docs; history is never re-tokenized), `retract:<id>`* (a
-  * [[retract]] — NEGATIVE counts of removed docs; counts are linear,
-  * so deletion is a merge, where the ANN index family needs
-  * tombstones), `base-compact:L=<n>` (a [[compact]] — all counts
-  * since the last base folded into one table of the nonzero
-  * totals). The LIVE multiset is the per-hash SUM across
-  * every table since the latest base ([[hashCounts]]); a hash is a
-  * duplicate when its live total ≥ 2 ([[dupHashes]]).
-  *
-  * A refresh carrying `deltaId` is replay-idempotent (the id rides in
-  * the marker; a re-delivered id is a no-op) — the
-  * [[graft.ann.IndexSegments]] contract, shared here by label
-  * convention. Torn commits, GC and second-writer surfacing are
-  * [[graft.operators.VersionedState]]'s guarantees.
+  * `hashes/` parquet table (h STRING, c BIGINT) — window-hash counts;
+  * a hash is a duplicate when its live total ≥ 2 ([[dupHashes]]).
+  * Counts are linear, so deletion ([[retract]]) is a merge where the
+  * ANN index family needs tombstones. Labels (`base:L=<n>`,
+  * `delta:<id>`, `retract:<id>`, `base-compact:L=<n>`), replay,
+  * compaction and the live sum ([[hashCounts]]) are the
+  * [[graft.operators.CountedState]] engine's; `hashes/` is
+  * unpartitioned, so an empty build or fully-retracted fold commits
+  * (an unpartitioned write keeps its schema footer).
   *
   * Scale shape (100 TB): window hashing is one stateless projection
   * per doc (n−L+1 md5s — corpus-token-sized, like the inverted
@@ -73,76 +65,28 @@ object ExactSubstr {
     windowHashes(toks, idCol, toksCol, L)
       .groupBy("h").agg(count(lit(1)).as("c"))
 
-  private def baseLabel(kind: String, L: Int) = s"$kind:L=$L"
+  private val Hashes = CountedTable("hashes", Seq("h"), Seq("c"))
 
-  private val LPattern = """.*:L=(\d+)""".r
-
-  private def lastBaseOf(cs: Seq[(Long, String)],
-                         stateDir: String): (Long, Int) =
-    cs.filter(_._2.startsWith("base")).lastOption match {
-      case Some((n, LPattern(l))) => (n, l.toInt)
-      case Some((_, bad)) => throw new IllegalStateException(
-        s"base marker at $stateDir carries no L dial (label '$bad') — " +
-          "not an ExactSubstr state directory")
-      case None => throw new IllegalStateException(
-        s"$stateDir has committed versions but no base — corrupt state")
-    }
+  private val State = new CountedState(Seq(Hashes), dialNames = Seq("L"),
+    dialNoun = "L dial", dirNoun = "an ExactSubstr state directory",
+    id = None,
+    derive = (toks, idCol, toksCol, d) => Seq(counts(toks, idCol, toksCol, d("L"))))
 
   /** The window length the stored state was built with. `asOf` pins
     * the read to a committed version (a manifest cut).
     */
   def storedL(spark: SparkSession, stateDir: String,
-              asOf: Option[Long] = None): Int = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    require(cs.nonEmpty, s"no committed state at $stateDir")
-    lastBaseOf(cs, stateDir)._2
-  }
+              asOf: Option[Long] = None): Int =
+    State.storedDials(spark, stateDir, asOf)("L")
 
   /** Full (re)build: window-hash counts of the entire corpus given,
     * committed as `base:L=<L>`; prior versions GC'd (their counts
     * were computed at a possibly different L).
     */
   def build(toks: DataFrame, idCol: String, toksCol: String, L: Int,
-            stateDir: String): Long = {
-    val spark = toks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val next = prev.getOrElse(0L) + 1L
-    VersionedState.commit(spark, stateDir, prev,
-      label = baseLabel("base", L), gcBelow = next) { vdir =>
-      counts(toks, idCol, toksCol, L)
-        .write.mode("overwrite").parquet(s"$vdir/hashes")
-    }
-  }
-
-  private def alreadyDelivered(spark: SparkSession, stateDir: String,
-                               kind: String, deltaId: String): Option[Long] =
-    if (deltaId.isEmpty) None
-    else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-      s"$kind:$deltaId") // marker OR the base's compaction-carried sidecar
-
-  private def deltaCommit(toks: DataFrame, idCol: String, toksCol: String,
-                          stateDir: String, kind: String, deltaId: String,
-                          negate: Boolean): Long = {
-    val spark = toks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before $kind()")
-    // validate-first, the family-wide invariant (commitTombstone's
-    // order): guard keys are always VALIDATED ids
-    IndexSegments.validDeltaId(deltaId) // byte-bounded: marker + sidecar safe
-    alreadyDelivered(spark, stateDir, kind, deltaId) match {
-      case Some(v) => return v // replayed batch id: already committed
-      case None    =>
-    }
-    val l = storedL(spark, stateDir) // the dial comes from disk, not the caller
-    val c = counts(toks, idCol, toksCol, l)
-    val signed = if (negate) c.select(col("h"), (-col("c")).as("c")) else c
-    val label = if (deltaId.isEmpty) kind else s"$kind:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-      signed.write.mode("overwrite").parquet(s"$vdir/hashes")
-    }
-  }
+            stateDir: String): Long =
+    State.build(toks, idCol, toksCol, stateDir,
+      Seq("L" -> L))
 
   /** Incremental refresh: window-hash counts of ONLY the delta docs,
     * at the L recovered from the stored base. `deltaId` (optional)
@@ -150,8 +94,7 @@ object ExactSubstr {
     */
   def refresh(toks: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(toks, idCol, toksCol, stateDir, "delta", deltaId,
-      negate = false)
+    State.refresh(toks, idCol, toksCol, stateDir, deltaId)
 
   /** Remove docs from the maintained multiset: commit their counts
     * NEGATED (counts are linear — the dedup pipeline's deletions are
@@ -168,8 +111,7 @@ object ExactSubstr {
     */
   def retract(toks: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(toks, idCol, toksCol, stateDir, "retract", deltaId,
-      negate = true)
+    State.retract(toks, idCol, toksCol, stateDir, deltaId)
 
   /** The LIVE window-hash multiset: per-hash totals summed across
     * every version since the latest base (zero/negative totals — from
@@ -180,24 +122,7 @@ object ExactSubstr {
     */
   def hashCounts(spark: SparkSession, stateDir: String,
                  asOf: Option[Long] = None): Option[DataFrame] =
-    summedCounts(spark, stateDir, asOf, liveOnly = true)
-
-  /** Per-hash totals across the read horizon — the family-shared
-    * [[graft.ann.IndexSegments.liveCounts]] reader (`liveOnly = false`
-    * for the observable-state-invariant [[compact]] fold). The local
-    * `lastBaseOf` runs first so a foreign state directory still fails
-    * with the L-dial remedy, not a generic schema error.
-    */
-  private def summedCounts(spark: SparkSession, stateDir: String,
-                           asOf: Option[Long],
-                           liveOnly: Boolean): Option[DataFrame] = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    if (cs.isEmpty) return None
-    lastBaseOf(cs, stateDir) // label validation only
-    IndexSegments.liveCounts(spark, stateDir, asOf, "hashes",
-      Seq("h"), Seq("c"), liveOnly = liveOnly)
-  }
+    State.live(spark, stateDir, Hashes, asOf)
 
   /** Hashes whose live count ≥ 2 — the duplicated-window set
     * [[spans]] excises against. `asOf` pins the read to a committed
@@ -209,85 +134,32 @@ object ExactSubstr {
       throw new IllegalStateException(s"no committed state at $stateDir"))
       .where(col("c") >= 2).select("h")
 
-  /** Fold every count table since the last base into ONE
-    * `base-compact:L=<L>` version (zero totals dropped, NONZERO
-    * totals — negatives from a contract-violating retract included —
-    * preserved, so compaction never changes observable state) and GC
-    * below the retention floor (default keeps the
-    * folded horizon alive for in-flight readers — reclaim with [[gc]]
-    * or the next compact) — bounds the union fan-out and the
-    * driver-side marker reads, like the ANN family's compact. The
-    * delivered delta/retract ids ride the sidecar, so the replay guard
-    * survives compaction; only a full [[build]] resets it.
+  /** Fold the horizon into ONE `base-compact:L=<L>` version
+    * ([[graft.operators.CountedState.compact]]) — bounds the union
+    * fan-out and the driver-side marker reads, like the ANN family's
+    * compact.
     */
   def compact(spark: SparkSession, stateDir: String,
               retainHorizons: Int = 1,
-              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long = {
-    val cs = VersionedState.committed(spark, stateDir)
-    require(cs.nonEmpty, s"no committed state at $stateDir — nothing to compact")
-    val (base, l) = lastBaseOf(cs, stateDir)
-    val cur = cs.last._1
-    if (cur == base) return cur
-    val folded = summedCounts(spark, stateDir, None, liveOnly = false).get
-    val delivered = IndexSegments.retainDelivered(
-      IndexSegments.deliveredLabelsOrdered(spark, stateDir, cs),
-      maxDelivered, stateDir)
-    val next = cur + 1
-    VersionedState.commit(spark, stateDir, Some(cur),
-      label = baseLabel("base-compact", l),
-      gcBelow = IndexSegments.compactGcFloor(cs, next, retainHorizons)) { vdir =>
-      folded.write.mode("overwrite").parquet(s"$vdir/hashes")
-      VersionedState.writeLines(spark, vdir, IndexSegments.DeliveredFile,
-        delivered)
-    }
-  }
+              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long =
+    State.compact(spark, stateDir, retainHorizons, maxDelivered, 1)
 
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
+  /** Reclaim the horizon a retaining [[compact]] left alive. */
   def gc(spark: SparkSession, stateDir: String): Unit =
     IndexSegments.gcOldHorizons(spark, stateDir)
 
-  /** The runbook as code — one call per ingest batch: refresh with the
-    * delta (replay-guarded by `deltaId`), compact when the read
-    * horizon's marker count exceeds `maxLiveMarkers`, and — when
-    * `auditCorpus` (the full live token table) is supplied — gate the
-    * maintained multiset against a one-shot recount: counts are linear,
-    * so ANY difference is corruption (a replayed id-less delta, a lost
-    * table), never approximation. MaintainSpec pins the marker bound
-    * and the gate's tripping semantics.
+  /** The runbook as code ([[graft.operators.CountedState.maintain]]):
+    * the drift gate audits the multiset against a one-shot recount.
+    * MaintainSpec pins the marker bound and the gate's tripping
+    * semantics.
     */
   def maintain(deltaToks: DataFrame, idCol: String, toksCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                auditCorpus: Option[DataFrame] = None):
-      graft.operators.MaintainReport = {
-    import graft.operators.{GateVerdict, Maintain, MaintainReport}
-    val spark = deltaToks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(deltaToks, idCol, toksCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = auditCorpus.toSeq.map { corpus =>
-      val l = storedL(spark, stateDir)
-      val diff = hashCounts(spark, stateDir).get
-        .join(counts(corpus, idCol, toksCol, l)
-          .select(col("h"), col("c").as("c_one")), Seq("h"), "full_outer")
-        .where(col("c").isNull || col("c_one").isNull ||
-          col("c") =!= col("c_one"))
-        .count()
-      if (diff == 0)
-        GateVerdict.Ok("drift", "maintained window-hash multiset ≡ one-shot recount")
-      else
-        GateVerdict.Corruption("drift",
-          s"$diff window hashes whose maintained count differs from the " +
-            "one-shot recount — counts are linear, so this is lost/replayed " +
-            "state, not approximation; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
-  }
+      graft.operators.MaintainReport =
+    State.maintain(deltaToks, idCol, toksCol, stateDir, deltaId,
+      maxLiveMarkers, auditCorpus)
 
   /** Maximal duplicated spans of `toks` against a duplicated-hash set
     * (one row per span: doc, span_start, span_end [token extents,

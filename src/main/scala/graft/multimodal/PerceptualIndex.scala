@@ -1,7 +1,8 @@
 package graft.multimodal
 
 import graft.ann.IndexSegments
-import graft.operators.VersionedState
+import graft.dedup.BandedIndex
+import graft.operators.{Bucket, CountedState, CountedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,8 @@ import org.apache.spark.sql.functions._
   * observable state, even on contract-violating retracts), and ANY
   * drift vs a one-shot re-banding is corruption ([[maintain]]'s gate).
   * Replay ids, torn commits, GC, retention, delivered-sidecar carriage
-  * and second-writer surfacing are the family's shared guarantees.
+  * and second-writer surfacing are the [[graft.operators.CountedState]]
+  * engine's.
   *
   * == Scale shape (100 TB) ==
   *
@@ -60,13 +62,12 @@ object PerceptualIndex {
     */
   val NBands = 4
 
-  /** The chunk-hash bucket COLUMN (md5 of the chunk's decimal string,
-    * first 8 hex digits mod B — uniform even when perceptual chunks
-    * cluster, and byte-portable across engines).
+  /** The chunk-hash bucket COLUMN ([[CountedState.bucketExpr]] — md5
+    * of the chunk's decimal string, uniform even when perceptual chunks
+    * cluster).
     */
   def bucketExpr(chunk: Column, nB: Int): Column =
-    (conv(substring(md5(chunk.cast("string")), 1, 8), 16, 10)
-      .cast("long") % nB).cast("int")
+    CountedState.bucketExpr(chunk, nB)
 
   /** One batch's band rows as COUNTS: (band, chunk, id, hsh, c=1) —
     * the map-side band explode of [[Multimodal.bandedIndex]] with the
@@ -82,93 +83,30 @@ object PerceptualIndex {
       .select(col("band"), col("chunk"), col("id"), col("hsh"),
         lit(1L).as("c"))
 
-  private def baseLabel(kind: String, nB: Int) = s"$kind:B=$nB"
+  // hsh is functionally dependent on id, so it rides the count key
+  // unchanged
+  private val Bands = CountedTable("bands", Seq("band", "chunk", "id", "hsh"),
+    Seq("c"), Some(Bucket("bb", "chunk", "item with a non-NULL perceptual hash")))
 
-  private val BPattern = """.*:B=(\d+)""".r
-
-  private def lastBaseOf(cs: Seq[(Long, String)],
-                         stateDir: String): (Long, Int) =
-    cs.filter(_._2.startsWith("base")).lastOption match {
-      case Some((n, BPattern(b))) => (n, b.toInt)
-      case Some((_, bad)) => throw new IllegalStateException(
-        s"base marker at $stateDir carries no bucket dial (label '$bad') " +
-          "— not a PerceptualIndex state directory")
-      case None => throw new IllegalStateException(
-        s"$stateDir has committed versions but no base — corrupt state")
-    }
+  private val State = new CountedState(Seq(Bands), dialNames = Seq("B"),
+    dialNoun = "bucket dial", dirNoun = "a PerceptualIndex state directory",
+    id = Some("id"),
+    derive = (h, idCol, hashCol, _) => Seq(bandRows(h, idCol, hashCol)))
 
   /** The bucket count the stored state was partitioned with. */
   def storedBuckets(spark: SparkSession, stateDir: String,
-                    asOf: Option[Long] = None): Int = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    require(cs.nonEmpty, s"no committed state at $stateDir")
-    lastBaseOf(cs, stateDir)._2
-  }
-
-  /** Bucket-partitioned write; `splits > 1` spreads a corpus-sized
-    * write over ~that many tasks/files per bucket (the family's
-    * write-straggler dial, purely physical).
-    */
-  private def writeBands(rows: DataFrame, nB: Int, vdir: String,
-                         splits: Int = 1): Unit = {
-    val withB = rows.withColumn("bb", bucketExpr(col("chunk"), nB))
-    val parted =
-      if (splits <= 1) withB.repartition(nB, col("bb"))
-      else withB.repartition(nB * splits, col("bb"),
-        pmod(hash(col("id")), lit(splits)))
-    parted.write.mode("overwrite").partitionBy("bb")
-      .parquet(s"$vdir/bands")
-  }
+                    asOf: Option[Long] = None): Int =
+    State.storedDials(spark, stateDir, asOf)("B")
 
   /** Full (re)build from the corpus's (id, hash) rows; prior versions
-    * (and the replay guard) GC'd.
+    * (and the replay guard) GC'd. An all-NULL-hash corpus is refused.
     */
   def build(h: DataFrame, idCol: String, hashCol: String,
             stateDir: String, buckets: Int = 16,
             writeSplits: Int = 1): Long = {
     require(buckets >= 1, s"buckets must be ≥ 1, got $buckets")
-    val rows = bandRows(h, idCol, hashCol)
-    // derived-payload guard (the family discipline): an all-NULL-hash
-    // corpus would commit a footer-less bucket-partitioned base
-    require(!rows.isEmpty,
-      "build() needs at least one item with a non-NULL perceptual hash " +
-        "— an all-dropped base commits no parquet footers to anchor " +
-        "later reads; build on the first real batch instead")
-    val spark = h.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val next = prev.getOrElse(0L) + 1L
-    VersionedState.commit(spark, stateDir, prev,
-      label = baseLabel("base", buckets), gcBelow = next) { vdir =>
-      writeBands(rows, buckets, vdir, writeSplits)
-    }
-  }
-
-  private def deltaCommit(h: DataFrame, idCol: String, hashCol: String,
-                          stateDir: String, kind: String, deltaId: String,
-                          negate: Boolean): Long = {
-    val spark = h.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before $kind()")
-    IndexSegments.validDeltaId(deltaId) // validate-first (family invariant)
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"$kind:$deltaId")
-    delivered match {
-      case Some(v) => return v // replayed batch id: already committed
-      case None    =>
-    }
-    val nB = storedBuckets(spark, stateDir)
-    val rows = bandRows(h, idCol, hashCol)
-    val signed =
-      if (negate) rows.select(col("band"), col("chunk"), col("id"),
-        col("hsh"), (-col("c")).as("c"))
-      else rows
-    val label = if (deltaId.isEmpty) kind else s"$kind:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label)(
-      writeBands(signed, nB, _))
+    State.build(h, idCol, hashCol, stateDir,
+      Seq("B" -> buckets), writeSplits)
   }
 
   /** Incremental refresh with ONLY the delta's (id, hash) rows;
@@ -176,8 +114,7 @@ object PerceptualIndex {
     */
   def refresh(h: DataFrame, idCol: String, hashCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(h, idCol, hashCol, stateDir, "delta", deltaId,
-      negate = false)
+    State.refresh(h, idCol, hashCol, stateDir, deltaId)
 
   /** Remove items by their hash rows, NEGATED. ⚠ The family's retract
     * hazard note applies (see [[graft.text.Bm25State.retract]]):
@@ -186,50 +123,15 @@ object PerceptualIndex {
     */
   def retract(h: DataFrame, idCol: String, hashCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(h, idCol, hashCol, stateDir, "retract", deltaId,
-      negate = true)
+    State.retract(h, idCol, hashCol, stateDir, deltaId)
 
   /** Erasure BY ID ALONE: negate the ids' LIVE band rows (the rows
     * name the item and carry its hash, so the negation re-derives from
     * the state itself — idempotent at the algebra level).
     */
   def delete(ids: DataFrame, idCol: String, stateDir: String,
-             deltaId: String = ""): Long = {
-    val spark = ids.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before delete()")
-    IndexSegments.validDeltaId(deltaId)
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"drop:$deltaId")
-    delivered match {
-      case Some(v) => return v // replayed erasure id: already committed
-      case None    =>
-    }
-    val nB = storedBuckets(spark, stateDir)
-    val victims = broadcast(ids.select(col(idCol).as("id")).distinct())
-    val neg = summedBands(spark, stateDir, None, None, liveOnly = true).get
-      .join(victims, "id")
-      .select(col("band"), col("chunk"), col("id"), col("hsh"),
-        (-col("c")).as("c"))
-    val label = if (deltaId.isEmpty) "drop" else s"drop:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label)(
-      writeBands(neg, nB, _))
-  }
-
-  private def summedBands(spark: SparkSession, stateDir: String,
-                          asOf: Option[Long], buckets: Option[Seq[Int]],
-                          liveOnly: Boolean): Option[DataFrame] =
-    // the family-shared reader (explicit base schema, nonzero compact
-    // fold); hsh is functionally dependent on id, so it rides the
-    // count key unchanged, and the bucket filter rides `pre` as a
-    // partition filter below the live-sum agg
-    IndexSegments.liveCounts(spark, stateDir, asOf, "bands",
-      Seq("band", "chunk", "id", "hsh"), Seq("c"),
-      pre = df => buckets.fold(df)(bs => df.where(col("bb").isin(bs: _*))),
-      liveOnly = liveOnly)
+             deltaId: String = ""): Long =
+    State.delete(ids, idCol, stateDir, deltaId)
 
   /** The LIVE banded index (band, chunk, id, hsh) — the static
     * relation [[graft.streaming.EventStreams.perceptualCollisions]]
@@ -240,128 +142,54 @@ object PerceptualIndex {
   def liveIndex(spark: SparkSession, stateDir: String,
                 asOf: Option[Long] = None,
                 buckets: Option[Seq[Int]] = None): Option[DataFrame] =
-    summedBands(spark, stateDir, asOf, buckets, liveOnly = true)
+    State.live(spark, stateDir, Bands, asOf,
+        buckets.map(bs => col("bb").isin(bs: _*)))
       .map(_.select(col("band"), col("chunk"), col("id"), col("hsh")))
 
   /** Screen a fresh batch of (id, hash) rows against the maintained
     * index: (id, matched_id, hamming) rows for every fresh item within
     * `maxHamming` of a LIVE corpus item — ≡ the one-shot cross-side
     * banded screen over the live corpus (q289 gates the identity
-    * hash-exact). The skew cap counts BOTH sides' bucket members
-    * (q217's dial); the stored side reads ONLY the fresh batch's
-    * chunk-hash bucket partitions (≤ 4·|batch| and ≤ B distinct ids,
-    * collected driver-side from the map-side fresh rows). Fresh ids
-    * must be disjoint from the live corpus ids.
+    * hash-exact). The shared [[BandedIndex.bandedScreen]] blocks
+    * (skew cap over BOTH sides, q217's dial; the stored side reads
+    * ONLY the fresh batch's bucket partitions), then candidates are
+    * verified by exact `bit_count(xor)`. Fresh ids must be disjoint
+    * from the live corpus ids.
     */
   def screen(fresh: DataFrame, idCol: String, hashCol: String,
              stateDir: String, maxHamming: Int,
              maxBucketSize: Int = Int.MaxValue,
-             asOf: Option[Long] = None): DataFrame = {
-    val spark = fresh.sparkSession
-    val nB = storedBuckets(spark, stateDir, asOf)
-    val f = bandRows(fresh, idCol, hashCol)
-      .withColumn("bb", bucketExpr(col("chunk"), nB))
-      .localCheckpoint() // batch-bounded; bucket collect + probe read it
-    // ≤ B distinct ints — bounded by the dial, not the batch
-    val bs = f.select("bb").distinct().collect().map(_.getInt(0)).toSeq
-    val stored = summedBands(spark, stateDir, asOf, Some(bs),
-        liveOnly = true).get
-      .select(col("band"), col("chunk"), col("id"), col("hsh"),
-        lit(0).as("_side"))
-    val tagged = stored.unionByName(
-      f.select(col("band"), col("chunk"), col("id"), col("hsh"),
-        lit(1).as("_side")))
-    val kept = graft.dedup.Dedup.capBuckets(tagged, Seq("band", "chunk"),
-      maxBucketSize)
-    val c = kept.where(col("_side") === 0)
-    val fr = kept.where(col("_side") === 1)
-    fr.alias("f")
-      .join(c.alias("c"),
-        col("f.band") === col("c.band") && col("f.chunk") === col("c.chunk"))
+             asOf: Option[Long] = None): DataFrame =
+    BandedIndex.bandedScreen(State, fresh, idCol, hashCol, stateDir,
+        maxBucketSize, asOf)
       .select(col("f.id").as("id"), col("c.id").as("matched_id"),
         expr("cast(bit_count(f.hsh ^ c.hsh) as int)").as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct()
-  }
 
-  /** Fold every count table since the last base into ONE base-compact
-    * version (NONZERO totals preserved — compaction never changes
-    * observable state), carry the delivered-id sidecar, GC below the
-    * retention floor.
+  /** Fold the horizon into ONE base-compact version
+    * ([[graft.operators.CountedState.compact]]; a fully-erased state is
+    * refused).
     */
   def compact(spark: SparkSession, stateDir: String,
               retainHorizons: Int = 1,
               maxDelivered: Int = IndexSegments.DefaultMaxDelivered,
-              writeSplits: Int = 1): Long = {
-    val cs = VersionedState.committed(spark, stateDir)
-    require(cs.nonEmpty, s"no committed state at $stateDir — nothing to compact")
-    val (base, nB) = lastBaseOf(cs, stateDir)
-    val cur = cs.last._1
-    if (cur == base) return cur
-    val folded = summedBands(spark, stateDir, None, None,
-      liveOnly = false).get
-    // a fully-erased state must not fold: an empty bucket-partitioned
-    // base commits zero parquet footers (the family guard)
-    require(!folded.isEmpty,
-      s"refusing to compact $stateDir: the live band table is EMPTY " +
-        "(every item erased) — an empty base-compact would leave no " +
-        "schema anchor; keep the horizon and build() on the next corpus")
-    val delivered = IndexSegments.retainDelivered(
-      IndexSegments.deliveredLabelsOrdered(spark, stateDir, cs),
-      maxDelivered, stateDir)
-    val next = cur + 1
-    VersionedState.commit(spark, stateDir, Some(cur),
-      label = baseLabel("base-compact", nB),
-      gcBelow = IndexSegments.compactGcFloor(cs, next, retainHorizons)) { vdir =>
-      writeBands(folded, nB, vdir, writeSplits)
-      VersionedState.writeLines(spark, vdir, IndexSegments.DeliveredFile,
-        delivered)
-    }
-  }
+              writeSplits: Int = 1): Long =
+    State.compact(spark, stateDir, retainHorizons, maxDelivered, writeSplits)
 
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
+  /** Reclaim the horizon a retaining [[compact]] left alive. */
   def gc(spark: SparkSession, stateDir: String): Unit =
     IndexSegments.gcOldHorizons(spark, stateDir)
 
-  /** The runbook as code — one call per ingest batch: refresh with the
-    * delta (replay-guarded), compact when the marker dial trips, and —
-    * when `auditCorpus` (the full live (id, hash) table) is supplied —
-    * gate the maintained rows against a one-shot re-banding: band rows
-    * are a pure function of the hash, so ANY difference is corruption.
+  /** The runbook as code ([[graft.operators.CountedState.maintain]]):
+    * band rows are a pure function of the hash, so the drift gate's
+    * one-shot re-banding of `auditCorpus` must match them exactly.
     */
   def maintain(delta: DataFrame, idCol: String, hashCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                auditCorpus: Option[DataFrame] = None):
-      graft.operators.MaintainReport = {
-    import graft.operators.{GateVerdict, Maintain, MaintainReport}
-    val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(delta, idCol, hashCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = auditCorpus.toSeq.map { corpus =>
-      val diff = summedBands(spark, stateDir, None, None, liveOnly = true)
-        .get
-        .join(bandRows(corpus, idCol, hashCol)
-            .select(col("band"), col("chunk"), col("id"), col("hsh"),
-              col("c").as("c_one")),
-          Seq("band", "chunk", "id", "hsh"), "full_outer")
-        .where(col("c").isNull || col("c_one").isNull ||
-          col("c") =!= col("c_one"))
-        .count()
-      if (diff == 0)
-        GateVerdict.Ok("drift", "maintained band rows ≡ one-shot re-banding")
-      else
-        GateVerdict.Corruption("drift",
-          s"$diff band rows differ from the one-shot re-banding — rows " +
-            "are a pure function of the hash, so this is lost/replayed " +
-            "state, not approximation; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
-  }
+      graft.operators.MaintainReport =
+    State.maintain(delta, idCol, hashCol, stateDir, deltaId,
+      maxLiveMarkers, auditCorpus)
 }

@@ -44,9 +44,9 @@ object VersionedModel {
     */
   def fitCommit(spark: SparkSession, stateDir: String, deltaId: String)
                (write: String => Unit): Long = {
-    IndexSegments.validDeltaId(deltaId) // validate-first (family invariant)
+    // validate-first (family invariant)
+    val label = IndexSegments.replayLabel("model", deltaId)
     val cs = VersionedState.committed(spark, stateDir)
-    val label = if (deltaId.isEmpty) "model" else s"model:$deltaId"
     if (deltaId.nonEmpty) {
       cs.collectFirst { case (n, l) if l == label => n } match {
         case Some(v) => return v // replayed trainer run: already committed

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.ann.IndexSegments
-import graft.operators.VersionedState
+import graft.operators.{Bucket, CountedState, CountedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,22 +38,11 @@ import org.apache.spark.sql.functions._
   * count algebra is unchanged — and the serving path never joins a
   * corpus-sized table (see the scale-shape note below). The
   * `doclen/` table remains the N/avgdl STATS source only (one
-  * doc-count-sized agg folding to one row per cut).
-  * Labels: `base:B=<n>` (a [[build]] — counts of the whole
-  * corpus given), `delta` / `delta:<id>` (a [[refresh]] — counts of
-  * ONLY the delta docs), `retract:<id>`* (a [[retract]] — NEGATIVE
-  * counts of removed docs, token rows supplied by the caller),
-  * `drop:<id>`* (a [[delete]] — the same negation re-derived from the
-  * LIVE state by id alone), `base-compact:B=<n>` (a [[compact]] —
-  * every count since the last base folded into one table). The LIVE index is the per-key SUM across every table since
-  * the latest base, positive totals only ([[livePostings]] /
-  * [[liveDocLens]]).
-  *
-  * A refresh/retract carrying `deltaId` is replay-idempotent — the id
-  * rides the commit marker, survives compaction in the delivered-id
-  * sidecar ([[graft.ann.IndexSegments.DeliveredFile]]), and is reset
-  * only by a full [[build]]. Torn commits, GC and second-writer
-  * surfacing are [[graft.operators.VersionedState]]'s guarantees.
+  * doc-count-sized agg folding to one row per cut). Labels
+  * (`base:B=<n>`, `delta:<id>`, `retract:<id>`, `drop:<id>`,
+  * `base-compact:B=<n>`), replay, compaction and the live sums
+  * ([[livePostings]] / [[liveDocLens]]) are the
+  * [[graft.operators.CountedState]] engine's.
   *
   * == Scale shape (100 TB) ==
   *
@@ -109,11 +98,12 @@ object Bm25State {
       .select(col("term"), col("doc"), col("tf"), col("dl"))
 
   /** The term-hash bucket COLUMN: first 8 md5 hex digits mod B —
-    * md5 for the repo's portable-hash discipline, byte-equal to
+    * md5 for the repo's portable-hash discipline (the family's
+    * [[graft.operators.CountedState.bucketExpr]]), byte-equal to
     * [[bucketOf]] (the driver-side twin query planning uses).
     */
   def bucketExpr(term: Column, nB: Int): Column =
-    (conv(substring(md5(term), 1, 8), 16, 10).cast("long") % nB).cast("int")
+    CountedState.bucketExpr(term, nB)
 
   /** Driver-side twin of [[bucketExpr]]: the bucket of one term. */
   def bucketOf(term: String, nB: Int): Int = {
@@ -124,78 +114,26 @@ object Bm25State {
     (v % nB).toInt
   }
 
-  private def baseLabel(kind: String, nB: Int) = s"$kind:B=$nB"
+  private val Postings = CountedTable("postings", Seq("term", "doc"),
+    Seq("tf", "dl"), Some(Bucket("b", "term", "doc with a non-empty token array")))
 
-  private val BPattern = """.*:B=(\d+)""".r
+  private val DocLens = CountedTable("doclen", Seq("doc"), Seq("dl"))
 
-  private def lastBaseOf(cs: Seq[(Long, String)],
-                         stateDir: String): (Long, Int) =
-    cs.filter(_._2.startsWith("base")).lastOption match {
-      case Some((n, BPattern(b))) => (n, b.toInt)
-      case Some((_, bad)) => throw new IllegalStateException(
-        s"base marker at $stateDir carries no bucket dial (label '$bad') " +
-          "— not a Bm25State directory")
-      case None => throw new IllegalStateException(
-        s"$stateDir has committed versions but no base — corrupt state")
-    }
+  // the guard is on the DERIVED postings, not the raw input: a corpus
+  // whose docs all have EMPTY token arrays passes a raw non-empty check
+  // while postings/doclen (filtered by size ≥ 1) derive no row
+  private val State = new CountedState(Seq(Postings, DocLens),
+    dialNames = Seq("B"), dialNoun = "bucket dial",
+    dirNoun = "a Bm25State directory", id = Some("doc"),
+    derive = (toks, idCol, toksCol, _) => Seq(
+      postingsWithDl(toks, idCol, toksCol), docLens(toks, idCol, toksCol)))
 
   /** The bucket count the stored state was partitioned with. `asOf`
     * pins the read to a committed version (a manifest cut).
     */
   def storedBuckets(spark: SparkSession, stateDir: String,
-                    asOf: Option[Long] = None): Int = {
-    val cs0 = VersionedState.committed(spark, stateDir)
-    val cs = asOf.fold(cs0)(v => cs0.filter(_._1 <= v))
-    require(cs.nonEmpty, s"no committed state at $stateDir")
-    lastBaseOf(cs, stateDir)._2
-  }
-
-  /** Write a postings table bucket-partitioned. `splits ≤ 1` keeps the
-    * historical ONE file per bucket per commit — right for delta-sized
-    * commits. A corpus-sized write (build/compact) with one file per
-    * bucket funnels 1/B of the corpus through a SINGLE task (a write
-    * straggler at scale) and later bin-packs a bucket's whole read
-    * into one input split; `splits > 1` co-hashes the doc id into the
-    * exchange so each bucket lands in ~`splits` parallel tasks → ~that
-    * many files, restoring both write and read parallelism. Purely
-    * physical: the read path is unchanged (the bucket stays the
-    * partition directory; readers sum per (term, doc) regardless of
-    * file count).
-    */
-  private def writePostings(p: DataFrame, nB: Int, vdir: String,
-                            splits: Int = 1): Unit = {
-    val withB = p.withColumn("b", bucketExpr(col("term"), nB))
-    // the salt keeps the distinct partitioner keys at nB·splits: keying
-    // the exchange on (b, doc) directly would spread EVERY bucket over
-    // all nB·splits tasks (≈ nB·splits files per bucket — nB× the
-    // documented fan-out; at B=1024/splits=32 that is 33M tiny files
-    // instead of 32k)
-    val parted =
-      if (splits <= 1) withB.repartition(nB, col("b"))
-      else withB.repartition(nB * splits, col("b"),
-        pmod(hash(col("doc")), lit(splits)))
-    parted.write.mode("overwrite").partitionBy("b")
-      .parquet(s"$vdir/postings")
-  }
-
-  private def writePayload(toks: DataFrame, idCol: String, toksCol: String,
-                           negate: Boolean, nB: Int, splits: Int = 1)
-                          (vdir: String): Unit = {
-    val p = postingsWithDl(toks, idCol, toksCol)
-    val l = docLens(toks, idCol, toksCol)
-    val (ps, ls) =
-      if (negate)
-        (p.select(col("term"), col("doc"), (-col("tf")).as("tf"),
-          (-col("dl")).as("dl")),
-          l.select(col("doc"), (-col("dl")).as("dl")))
-      else (p, l)
-    // two independent tables of one commit payload: overlap the writes
-    // from the driver pool (guide §2.6) — each write's content and
-    // layout are exactly the sequential ones
-    graft.operators.Par.both(
-      () => writePostings(ps, nB, vdir, splits),
-      () => ls.write.mode("overwrite").parquet(s"$vdir/doclen"))
-  }
+                    asOf: Option[Long] = None): Int =
+    State.storedDials(spark, stateDir, asOf)("B")
 
   /** Full (re)build: the inverted index of the entire corpus given,
     * committed as `base:B=<buckets>`; prior versions (and the
@@ -207,71 +145,15 @@ object Bm25State {
     * parallelizes each bucket's corpus-sized write/read into ~that
     * many files — size so bucket files land near the input split size
     * (bytes/B/splits ≈ `maxPartitionBytes`); deltas don't need it.
+    * A corpus with no non-empty token array is refused (start an
+    * index with the first real batch's build, not an empty one).
     */
   def build(toks: DataFrame, idCol: String, toksCol: String,
             stateDir: String, buckets: Int = 16,
             writeSplits: Int = 1): Long = {
     require(buckets >= 1, s"buckets must be ≥ 1, got $buckets")
-    // an all-empty base would commit zero part files under postings/,
-    // and every later read's explicit-schema inference off the base
-    // would then fail with an opaque AnalysisException — surface the
-    // contract here instead (start an empty index with the first real
-    // batch's build, not an empty one). The guard is on the DERIVED
-    // payload, not the raw input: a corpus whose docs all have EMPTY
-    // token arrays passes a raw non-empty check while postings/doclen
-    // (filtered by size ≥ 1) still write footer-less.
-    require(!toks.where(size(col(toksCol)) >= 1).isEmpty,
-      "build() needs a corpus with at least one non-empty token array " +
-        "— zero-token docs carry no postings, so the base would commit " +
-        "no parquet footers to anchor later reads; build on the first " +
-        "real batch instead")
-    val spark = toks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val next = prev.getOrElse(0L) + 1L
-    VersionedState.commit(spark, stateDir, prev,
-      label = baseLabel("base", buckets), gcBelow = next)(
-      writePayload(toks, idCol, toksCol, negate = false, buckets,
-        writeSplits))
-  }
-
-  private def deltaCommit(toks: DataFrame, idCol: String, toksCol: String,
-                          stateDir: String, kind: String, deltaId: String,
-                          negate: Boolean,
-                          requireNewDocs: Boolean = false): Long = {
-    val spark = toks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before $kind()")
-    // validate-first, the family-wide invariant (commitTombstone's
-    // order): guard keys are always VALIDATED ids
-    IndexSegments.validDeltaId(deltaId) // byte-bounded: marker + sidecar safe
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"$kind:$deltaId") // marker OR the base's compaction-carried sidecar
-    delivered match {
-      case Some(v) => return v // replayed batch id: already committed
-      case None    =>
-    }
-    // opt-in split-arrival guard, checked AFTER the replay guard (a
-    // crash-replayed batch legitimately names its own live docs): the
-    // denormalized dl layout needs each doc's tokens whole in ONE
-    // commit — a second refresh of a live doc leaves per-term dl
-    // divergent and scores silently wrong
-    if (requireNewDocs && !negate) {
-      val dup = liveDocLens(spark, stateDir).get
-        .join(broadcast(toks.select(col(idCol).as("doc")).distinct()), "doc")
-        .select("doc").limit(3).collect().map(_.get(0))
-      require(dup.isEmpty,
-        s"refresh delta names docs already LIVE in $stateDir (e.g. " +
-          s"${dup.mkString(", ")}) — a live doc is updated by delete() " +
-          "+ re-refresh(), never a second refresh (the denormalized dl " +
-          "rides each commit whole)")
-    }
-    val nB = storedBuckets(spark, stateDir) // the dial comes from disk
-    val label = if (deltaId.isEmpty) kind else s"$kind:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label)(
-      writePayload(toks, idCol, toksCol, negate, nB))
+    State.build(toks, idCol, toksCol, stateDir,
+      Seq("B" -> buckets), writeSplits)
   }
 
   /** Incremental refresh: postings + lengths of ONLY the delta docs.
@@ -294,8 +176,17 @@ object Bm25State {
   def refresh(toks: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = "",
               requireNewDocs: Boolean = false): Long =
-    deltaCommit(toks, idCol, toksCol, stateDir, "delta", deltaId,
-      negate = false, requireNewDocs = requireNewDocs)
+    State.refresh(toks, idCol, toksCol, stateDir, deltaId,
+      check = if (requireNewDocs) {
+        val dup = liveDocLens(toks.sparkSession, stateDir).get
+          .join(broadcast(toks.select(col(idCol).as("doc")).distinct()), "doc")
+          .select("doc").limit(3).collect().map(_.get(0))
+        require(dup.isEmpty,
+          s"refresh delta names docs already LIVE in $stateDir (e.g. " +
+            s"${dup.mkString(", ")}) — a live doc is updated by delete() " +
+            "+ re-refresh(), never a second refresh (the denormalized dl " +
+            "rides each commit whole)")
+      })
 
   /** Remove docs from the maintained index: commit their postings and
     * lengths NEGATED (counts are linear — the dedup pipeline's
@@ -318,8 +209,7 @@ object Bm25State {
     */
   def retract(toks: DataFrame, idCol: String, toksCol: String,
               stateDir: String, deltaId: String = ""): Long =
-    deltaCommit(toks, idCol, toksCol, stateDir, "retract", deltaId,
-      negate = true)
+    State.retract(toks, idCol, toksCol, stateDir, deltaId)
 
   /** Erasure BY ID ALONE: negate the docs' LIVE postings and lengths —
     * no token rows needed (unlike [[retract]] and ExactSubstr.retract,
@@ -335,48 +225,8 @@ object Bm25State {
     * broadcast against one scan of the live tables).
     */
   def delete(ids: DataFrame, idCol: String, stateDir: String,
-             deltaId: String = ""): Long = {
-    val spark = ids.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed state at $stateDir — run build() before delete()")
-    IndexSegments.validDeltaId(deltaId) // validate-first (family invariant)
-    val delivered =
-      if (deltaId.isEmpty) None
-      else IndexSegments.alreadyDeliveredLabel(spark, stateDir,
-        s"drop:$deltaId")
-    delivered match {
-      case Some(v) => return v // replayed erasure id: already committed
-      case None    =>
-    }
-    val nB = storedBuckets(spark, stateDir)
-    val victims = broadcast(ids.select(col(idCol).as("doc")).distinct())
-    val p = livePostings(spark, stateDir).get.join(victims, "doc")
-      .select(col("term"), col("doc"), (-col("tf")).as("tf"),
-        (-col("dl")).as("dl"))
-    val l = liveDocLens(spark, stateDir).get.join(victims, "doc")
-      .select(col("doc"), (-col("dl")).as("dl"))
-    val label = if (deltaId.isEmpty) "drop" else s"drop:$deltaId"
-    VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-      graft.operators.Par.both(
-        () => writePostings(p, nB, vdir),
-        () => l.write.mode("overwrite").parquet(s"$vdir/doclen"))
-    }
-  }
-
-  /** Per-key count totals across the read horizon — the family-shared
-    * [[graft.ann.IndexSegments.liveCounts]] reader (explicit base
-    * schema, legacy-layout remedy, `liveOnly = false` for the
-    * observable-state-invariant compact fold).
-    */
-  private def liveSum(spark: SparkSession, stateDir: String,
-                      asOf: Option[Long], table: String, keys: Seq[String],
-                      cnts: Seq[String],
-                      pre: DataFrame => DataFrame = identity,
-                      liveOnly: Boolean = true)
-      : Option[DataFrame] =
-    IndexSegments.liveCounts(spark, stateDir, asOf, table, keys, cnts,
-      pre, liveOnly)
+             deltaId: String = ""): Long =
+    State.delete(ids, idCol, stateDir, deltaId)
 
   /** The LIVE postings (term, doc, tf, dl): per-key totals summed
     * across every version since the latest base, positive tf totals
@@ -396,15 +246,12 @@ object Bm25State {
   def livePostings(spark: SparkSession, stateDir: String,
                    asOf: Option[Long] = None,
                    terms: Option[Seq[String]] = None): Option[DataFrame] = {
-    val pre: DataFrame => DataFrame = terms match {
-      case Some(ts) =>
-        val nB = storedBuckets(spark, stateDir, asOf)
-        val bs = ts.map(bucketOf(_, nB)).distinct
-        df => df.where(col("b").isin(bs: _*) && col("term").isin(ts: _*))
-      case None => identity
+    val where = terms.map { ts =>
+      val nB = storedBuckets(spark, stateDir, asOf)
+      val bs = ts.map(bucketOf(_, nB)).distinct
+      col("b").isin(bs: _*) && col("term").isin(ts: _*)
     }
-    liveSum(spark, stateDir, asOf, "postings", Seq("term", "doc"),
-      Seq("tf", "dl"), pre)
+    State.live(spark, stateDir, Postings, asOf, where)
   }
 
   /** The LIVE document lengths (doc, dl) — same algebra; the N/avgdl
@@ -413,7 +260,7 @@ object Bm25State {
     */
   def liveDocLens(spark: SparkSession, stateDir: String,
                   asOf: Option[Long] = None): Option[DataFrame] =
-    liveSum(spark, stateDir, asOf, "doclen", Seq("doc"), Seq("dl"))
+    State.live(spark, stateDir, DocLens, asOf)
 
   /** Corpus stats — one row (nd, avgdl) derived from the live doc
     * lengths (exact: derived, never maintained additively, so a
@@ -451,10 +298,7 @@ object Bm25State {
     require(terms.nonEmpty, "empty query")
     val tf = livePostings(spark, stateDir, asOf, Some(terms)).getOrElse(
       throw new IllegalStateException(s"no committed state at $stateDir"))
-    val stats = precomputedStats.getOrElse(
-      liveDocLens(spark, stateDir, asOf).get
-        .agg(count(lit(1)).as("nd"),
-          (sum("dl").cast("double") / count(lit(1))).as("avgdl")))
+    val stats = precomputedStats.getOrElse(Bm25State.stats(spark, stateDir, asOf))
     val dft = tf.groupBy("term").agg(countDistinct("doc").as("df"))
     tf.join(broadcast(dft), "term")
       .crossJoin(broadcast(stats))
@@ -467,111 +311,29 @@ object Bm25State {
       .orderBy(col("bm25").desc, col("doc")).limit(k)
   }
 
-  /** Fold every count table since the last base into ONE `base-compact`
-    * version (zero totals dropped, NONZERO totals — negatives from a
-    * contract-violating retract included — preserved, so compaction
-    * never changes observable state) and GC below
-    * the retention floor (default keeps the folded horizon alive for
-    * in-flight readers — reclaim with [[gc]] or the next compact).
-    * The delivered delta/retract ids ride the sidecar, so the replay
-    * guard survives compaction; only a full [[build]] resets it.
-    * `writeSplits` as in [[build]] — the fold is the other
+  /** Fold the horizon into ONE `base-compact` version
+    * ([[graft.operators.CountedState.compact]]; a fully-erased index is
+    * refused). `writeSplits` as in [[build]] — the fold is the other
     * corpus-sized write.
     */
   def compact(spark: SparkSession, stateDir: String,
               retainHorizons: Int = 1,
               maxDelivered: Int = IndexSegments.DefaultMaxDelivered,
-              writeSplits: Int = 1): Long = {
-    val cs = VersionedState.committed(spark, stateDir)
-    require(cs.nonEmpty, s"no committed state at $stateDir — nothing to compact")
-    val (base, nB) = lastBaseOf(cs, stateDir)
-    val cur = cs.last._1
-    if (cur == base) return cur
-    // the fold keeps every NONZERO total (not just positive): negative
-    // totals left by a contract-violating retract survive compaction
-    // verbatim, so the observable state (reads filter > 0) is
-    // IDENTICAL before and after a compact on any input — the old
-    // positive-only fold silently revived a violated-then-refreshed
-    // doc across a compact
-    val p = liveSum(spark, stateDir, None, "postings", Seq("term", "doc"),
-      Seq("tf", "dl"), liveOnly = false).get
-    val l = liveSum(spark, stateDir, None, "doclen", Seq("doc"),
-      Seq("dl"), liveOnly = false).get
-    // a fully-erased state must NOT fold: the bucket-partitioned write
-    // of zero rows commits zero parquet footers, and every later read's
-    // explicit-schema anchor off the new base would then fail — the
-    // same hole build()'s non-empty guard closes. Keep the unfolded
-    // horizon (reads stay healthy) and build() on the next real corpus.
-    require(!p.isEmpty,
-      s"refusing to compact $stateDir: the live index is EMPTY (every " +
-        "doc erased) — an empty base-compact would leave no schema " +
-        "anchor; keep the horizon and build() on the next corpus instead")
-    val delivered = IndexSegments.retainDelivered(
-      IndexSegments.deliveredLabelsOrdered(spark, stateDir, cs),
-      maxDelivered, stateDir)
-    val next = cur + 1
-    VersionedState.commit(spark, stateDir, Some(cur),
-      label = baseLabel("base-compact", nB),
-      gcBelow = IndexSegments.compactGcFloor(cs, next, retainHorizons)) { vdir =>
-      graft.operators.Par.both(
-        () => writePostings(p, nB, vdir, writeSplits),
-        () => l.write.mode("overwrite").parquet(s"$vdir/doclen"))
-      VersionedState.writeLines(spark, vdir, IndexSegments.DeliveredFile,
-        delivered)
-    }
-  }
+              writeSplits: Int = 1): Long =
+    State.compact(spark, stateDir, retainHorizons, maxDelivered, writeSplits)
 
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
+  /** Reclaim the horizon a retaining [[compact]] left alive. */
   def gc(spark: SparkSession, stateDir: String): Unit =
     IndexSegments.gcOldHorizons(spark, stateDir)
 
-  /** The runbook as code — one call per ingest batch: refresh with the
-    * delta (replay-guarded by `deltaId`), compact when the read
-    * horizon's marker count exceeds `maxLiveMarkers`, and — when
-    * `auditCorpus` (the full live token table) is supplied — gate BOTH
-    * maintained tables against a one-shot recount: counts are linear,
-    * so ANY difference is corruption (a replayed id-less delta, a lost
-    * table), never approximation.
+  /** The runbook as code ([[graft.operators.CountedState.maintain]]):
+    * the drift gate audits BOTH tables against a one-shot recount.
     */
   def maintain(deltaToks: DataFrame, idCol: String, toksCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                auditCorpus: Option[DataFrame] = None):
-      graft.operators.MaintainReport = {
-    import graft.operators.{GateVerdict, Maintain, MaintainReport}
-    val spark = deltaToks.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(deltaToks, idCol, toksCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = auditCorpus.toSeq.map { corpus =>
-      val pDiff = livePostings(spark, stateDir).get
-        .join(postingsWithDl(corpus, idCol, toksCol)
-            .select(col("term"), col("doc"), col("tf").as("tf_one"),
-              col("dl").as("dl_one")),
-          Seq("term", "doc"), "full_outer")
-        .where(col("tf").isNull || col("tf_one").isNull ||
-          col("tf") =!= col("tf_one") || col("dl") =!= col("dl_one"))
-        .count()
-      val lDiff = liveDocLens(spark, stateDir).get
-        .join(docLens(corpus, idCol, toksCol)
-            .select(col("doc"), col("dl").as("dl_one")),
-          Seq("doc"), "full_outer")
-        .where(col("dl").isNull || col("dl_one").isNull ||
-          col("dl") =!= col("dl_one"))
-        .count()
-      if (pDiff == 0 && lDiff == 0)
-        GateVerdict.Ok("drift", "maintained postings + doclen ≡ one-shot recount")
-      else
-        GateVerdict.Corruption("drift",
-          s"$pDiff postings / $lDiff doc lengths differ from the one-shot " +
-            "recount — counts are linear, so this is lost/replayed state, " +
-            "not approximation; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
-  }
+      graft.operators.MaintainReport =
+    State.maintain(deltaToks, idCol, toksCol, stateDir, deltaId,
+      maxLiveMarkers, auditCorpus)
 }

@@ -135,6 +135,10 @@ class BandedIndexSpec extends SparkTestBase {
     val bucketDirs = new java.io.File(s"$vdir/bands").listFiles()
       .count(_.getName.startsWith("bb="))
     assert(bucketDirs > 1, s"fixture spreads over $bucketDirs buckets")
+    // the on-disk format: every partition directory is bands/bb=<b>, b < B
+    assert(new java.io.File(s"$vdir/bands").listFiles().filter(_.isDirectory)
+      .forall(f => f.getName.matches("bb=\\d+") && f.getName.drop(3).toInt < 8),
+      "band rows must partition as bands/bb=<bucket>")
     val fresh = docsDf(99L -> "tok7a tok7b tok7c tok7d tok7e")
     val df = BandedIndex.screen(fresh, "doc_id", "tokens", dir)
     val bandScans = graft.plans.FileScans.executedScans(df, Some("bands"))
@@ -312,6 +316,9 @@ class BandedIndexSpec extends SparkTestBase {
     val delta = vhist.where(col("vec_id") > 2L)  // 3, 4
     BandedIndex.build(hist2, "vec_id", "embedding", dir,
       nBands = 4, rowsPerBand = 2, dims = 4)
+    assert(VersionedState.committed(spark, dir).map(_._2) ===
+      Seq("base:bands=4,rows=2,B=16,dims=4"),
+      "the SRP base label is an on-disk format")
     assert(BandedIndex.storedDials(spark, dir) === ((4, 2, 16)))
     assert(BandedIndex.storedDims(spark, dir) === 4,
       "the modality dial must be recovered from the base label")

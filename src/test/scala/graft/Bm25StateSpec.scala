@@ -380,6 +380,10 @@ class Bm25StateSpec extends SparkTestBase {
     val bucketDirs = new java.io.File(s"$vdir/postings").listFiles()
       .count(_.getName.startsWith("b="))
     assert(bucketDirs > 1, s"fixture spreads over $bucketDirs buckets")
+    // the on-disk format: every partition directory is postings/b=<b>, b < B
+    assert(new java.io.File(s"$vdir/postings").listFiles().filter(_.isDirectory)
+      .forall(f => f.getName.matches("b=\\d+") && f.getName.drop(2).toInt < 8),
+      "postings must partition as postings/b=<bucket>")
     val df = Bm25State.topK(spark, dir, Seq("x"), 10)
     val postingScans = graft.plans.FileScans.executedScans(df,
       Some("postings"))

@@ -189,6 +189,25 @@ class ExactSubstrSpec extends SparkTestBase {
         "contract-violating retract input")
   }
 
+  test("an unpartitioned hashes/ table needs no empty guard: an erased state compacts, an empty build commits") {
+    val dir = freshDir("erased")
+    ExactSubstr.build(hist, "doc_id", "tokens", 4, dir)
+    ExactSubstr.retract(hist, "doc_id", "tokens", dir, "all")
+    ExactSubstr.compact(spark, dir)
+    assert(ExactSubstr.hashCounts(spark, dir).get.count() === 0L,
+      "a fully retracted state folds to an empty, still readable base")
+    ExactSubstr.refresh(docsDf(9L -> "a b c d e"), "doc_id", "tokens",
+      dir, "re")
+    assert(ExactSubstr.hashCounts(spark, dir).get.count() === 2L,
+      "a refresh after the empty fold is readable")
+    val empty = freshDir("emptybuild")
+    ExactSubstr.build(hist.where(col("doc_id") > 100L), "doc_id", "tokens",
+      4, empty)
+    assert(VersionedState.committed(spark, empty).map(_._2) === Seq("base:L=4"))
+    assert(ExactSubstr.hashCounts(spark, empty).get.count() === 0L,
+      "an empty unpartitioned base still anchors its schema")
+  }
+
   test("an invalid delta id is rejected before the replay guard or any state is consulted") {
     val dir = freshDir("badid")
     ExactSubstr.build(hist, "doc_id", "tokens", 4, dir)

@@ -83,6 +83,8 @@ class PerceptualIndexSpec extends SparkTestBase {
     assert(afterDrop === oneShot(hist.where(col("id") =!= 3L), fresh, 6))
     assert(!afterDrop.exists(_._2 == 3L), "the erased item must stop matching")
     PerceptualIndex.compact(spark, dir)
+    assert(VersionedState.committed(spark, dir).last._2 === "base-compact:B=16",
+      "the compacted base label is an on-disk format")
     PerceptualIndex.gc(spark, dir)
     assert(PerceptualIndex.storedBuckets(spark, dir) === 16,
       "the bucket dial must survive the base-compact label")
