@@ -1,7 +1,7 @@
 package graft.ann
 
-import graft.operators.VersionedState
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.{GateVerdict, VersionedState}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The shared SEGMENT ALGEBRA of the durable index family
@@ -223,6 +223,146 @@ private[graft] object IndexSegments {
     (if (deltaId.isEmpty) None
      else alreadyDeliveredLabel(spark, stateDir, label))
       .getOrElse(commit(label))
+  }
+
+  /** The segment-refresh prelude every index family shares: a committed
+    * base must exist, the commit is replay-guarded by `deltaId` (label
+    * `delta` / `delta:<id>`), the frozen `dialDirs` are carried
+    * byte-identically into the new version, and `segment` derives the
+    * delta's segment from those dial tables read BACK from the new
+    * version (in `dialDirs` order) — the committed artifact, not an
+    * in-memory plan, is what every refresh derives from.
+    */
+  def refresh(spark: SparkSession, stateDir: String, deltaId: String,
+              dialDirs: Seq[String])(segment: Seq[DataFrame] => DataFrame): Long = {
+    val prev = VersionedState.currentVersion(spark, stateDir)
+    require(prev.nonEmpty,
+      s"no committed index at $stateDir — run build() before refresh()")
+    replayGuarded(spark, stateDir, "delta", deltaId) { label =>
+      val pdir = VersionedState.versionPath(stateDir, prev.get)
+      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
+        // dials are frozen off a build: byte-identical FS carry (no
+        // Spark round-trip)
+        dialDirs.foreach(d => carryDir(spark, s"$pdir/$d", s"$vdir/$d"))
+        segment(dialDirs.map(d => spark.read.parquet(s"$vdir/$d")))
+          .write.mode("overwrite").parquet(s"$vdir/segment")
+      }
+    }
+  }
+
+  /** A dial table (`centroids/`, `codebooks/`, `coarse/`) of the latest
+    * version — or of the latest version ≤ `asOf` (a manifest cut) — or
+    * None before the first build.
+    */
+  def dial(spark: SparkSession, stateDir: String, name: String,
+           asOf: Option[Long] = None): Option[DataFrame] = {
+    val v = asOf match {
+      case Some(a) => VersionedState.committed(spark, stateDir)
+        .filter(_._1 <= a).lastOption.map(_._1)
+      case None => VersionedState.currentVersion(spark, stateDir)
+    }
+    v.map(n => spark.read.parquet(s"${VersionedState.versionPath(stateDir, n)}/$name"))
+  }
+
+  /** The columns of an index audit row, in order (see [[auditRow]]). */
+  private val AuditColumns = Seq("drift", "n_live", "n_one_shot", "s_maintained",
+    "s_rebuilt", "hits_maintained", "hits_rebuilt", "n_brute")
+
+  /** One index audit's raw numbers as ONE lazily composed row — what
+    * the family's `maintain()` gates on and its oracle-gated catalog
+    * query (q266 / q267 / q270) projects, so the arithmetic is written
+    * once:
+    *
+    *  - `drift`: rows of the full-outer join of `live` and `oneShot` on
+    *    `keys` that are missing on a side or differ in a `payload`
+    *    column (exact — the maintenance algebra is pointwise);
+    *  - `n_live` / `n_one_shot`: both sides' row counts. A duplicated
+    *    segment matches pointwise, so the count difference is what
+    *    catches an id-less replay;
+    *  - `s_maintained` / `s_rebuilt`: Σ `micro` (a per-row micro-scaled
+    *    long — exact, order-free) over `live` and over the retrained
+    *    index's table `rebuilt`;
+    *  - `hits_maintained` / `hits_rebuilt` / `n_brute`: the row counts
+    *    of each index's search ⋈ the brute-force truth, and of the
+    *    truth.
+    *
+    * Every part contributes per-row terms to one union and ONE global
+    * sum, so the row costs one final exchange however many numbers it
+    * carries (a cross join of seven aggregates costs seven exchanges
+    * and six broadcasts).
+    */
+  def auditRow(live: DataFrame, oneShot: DataFrame, keys: Seq[String],
+               payload: Seq[String], micro: Column, rebuilt: DataFrame,
+               hitsMaintained: DataFrame, hitsRebuilt: DataFrame,
+               brute: DataFrame): DataFrame = {
+    def part(df: DataFrame, terms: (String, Column)*): DataFrame = {
+      val t = terms.toMap
+      df.select(AuditColumns.map(c => t.getOrElse(c, lit(0L)).cast("long").as(c)): _*)
+    }
+    def side(df: DataFrame, s: String) =
+      df.select(keys.map(col) ++ payload.map(p => col(p).as(s"$p$s")): _*)
+    val mismatch = payload.map(p => col(s"${p}_l") =!= col(s"${p}_o"))
+      .foldLeft(col(s"${payload.head}_l").isNull ||
+        col(s"${payload.head}_o").isNull)(_ || _)
+    val one = lit(1L)
+    val sums = AuditColumns.map(c => coalesce(sum(c), lit(0L)).as(c))
+    Seq(part(side(live, "_l").join(side(oneShot, "_o"), keys, "full_outer")
+          .where(mismatch), "drift" -> one),
+        part(live, "n_live" -> one, "s_maintained" -> micro),
+        part(oneShot, "n_one_shot" -> one),
+        part(rebuilt, "s_rebuilt" -> micro),
+        part(hitsMaintained, "hits_maintained" -> one),
+        part(hitsRebuilt, "hits_rebuilt" -> one),
+        part(brute, "n_brute" -> one))
+      .reduce(_.unionByName(_))
+      .agg(sums.head, sums.tail: _*)
+  }
+
+  /** Run an [[auditRow]] in ONE action and map it to the family's three
+    * typed verdicts: drift (Corruption — `drift == 0` and equal row
+    * counts, or segments were lost, duplicated or mixed across bases),
+    * the family's `fit` rule (BuildNeeded), and recall (BuildNeeded when
+    * the maintained hits trail the retrained ones by more than
+    * `recallSlack` of the truth). `what` names the one-shot derivation
+    * in the drift details; the row's numbers come back as `measured`.
+    */
+  def auditGates(row: DataFrame, what: String, recallSlack: Double,
+                 recallHint: String = "")(fit: Map[String, Long] => GateVerdict)
+      : (Seq[GateVerdict], Map[String, Double]) = {
+    val r = row.head()
+    val n = AuditColumns.map(c => c -> r.getAs[Long](c)).toMap
+    val (mism, nLive, nOne) = (n("drift"), n("n_live"), n("n_one_shot"))
+    val drift =
+      if (mism == 0 && nLive == nOne)
+        GateVerdict.Ok("drift", s"maintained ≡ one-shot $what over $nOne rows")
+      else GateVerdict.Corruption("drift",
+        s"$mism $what mismatches, $nLive live rows vs $nOne one-shot — " +
+          "segments lost, duplicated or mixed across bases; rebuild and " +
+          "check for id-less replays or a foreign writer")
+    val (hm, hr, nb) = (n("hits_maintained"), n("hits_rebuilt"), n("n_brute"))
+    val recall =
+      if (nb == 0 || hm >= hr - recallSlack * nb)
+        GateVerdict.Ok("recall", s"maintained $hm vs retrained $hr of $nb brute pairs")
+      else GateVerdict.BuildNeeded("recall",
+        s"maintained $hm vs retrained $hr of $nb brute pairs — recall " +
+          s"trails the retrain past the slack; schedule a build$recallHint")
+    (Seq(drift, fit(n), recall), n.map { case (k, v) => k -> v.toDouble })
+  }
+
+  /** The PQ families' fit rule over an [[auditRow]]: the maintained
+    * total quantization error may exceed a fresh codebook retrain's by
+    * at most `fitRatioMilli`/1000, compared in exact micro-scaled
+    * integers; `books` names the frozen dial in the verdict.
+    */
+  def errorFit(n: Map[String, Long], fitRatioMilli: Long,
+               books: String): GateVerdict = {
+    val (eInc, eReb) = (n("s_maintained"), n("s_rebuilt"))
+    if (eInc * 1000 <= eReb * fitRatioMilli)
+      GateVerdict.Ok("fit", s"maintained µerr $eInc vs retrain $eReb " +
+        s"(ratio dial $fitRatioMilli/1000)")
+    else GateVerdict.BuildNeeded("fit",
+      s"maintained µerr $eInc exceeds $fitRatioMilli/1000 of the " +
+        s"retrain's $eReb — the frozen $books no longer fit; schedule a build")
   }
 
   /** The live index relation (see object doc), or None before the

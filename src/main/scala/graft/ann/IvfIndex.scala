@@ -119,24 +119,11 @@ object IvfIndex {
     * behaviors pinned in IvfIndexSpec).
     */
   def refresh(delta: DataFrame, idCol: String, vecCol: String,
-              stateDir: String, deltaId: String = ""): Long = {
-    val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
-      val pdir = VersionedState.versionPath(stateDir, prev.get)
-      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-        // centroids are frozen off a build: byte-identical FS carry (no
-        // Spark round-trip); the routing still reads the COMMITTED
-        // artifact back from the fresh version dir
-        IndexSegments.carryDir(spark, s"$pdir/centroids", s"$vdir/centroids")
-        assignTo(delta, idCol, vecCol,
-            spark.read.parquet(s"$vdir/centroids"))
-          .write.mode("overwrite").parquet(s"$vdir/segment")
-      }
+              stateDir: String, deltaId: String = ""): Long =
+    IndexSegments.refresh(delta.sparkSession, stateDir, deltaId,
+        Seq("centroids")) { case Seq(cents) =>
+      assignTo(delta, idCol, vecCol, cents)
     }
-  }
 
   /** Delete `ids` (first column) from the live index: commits a
     * TOMBSTONE version (centroids carried forward + the id table).
@@ -191,94 +178,69 @@ object IvfIndex {
     * delta (replay-guarded by `deltaId`), compact when the read
     * horizon's marker count exceeds `maxLiveMarkers` (retention 1; the
     * next compact or [[gc]] reclaims the folded horizon), and — when
-    * an [[Audit]] is supplied — run the three gates and return their
-    * verdicts typed: drift (corruption), fit and recall (build-needed).
+    * an [[Audit]] is supplied — run [[audit]]'s row in one action and
+    * return the three gates' verdicts typed: drift (corruption), fit
+    * and recall (build-needed), with the row's numbers in `measured`.
     * MaintainSpec drives N batches through it and pins the marker
     * bound and each gate's tripping semantics; q266 oracle-gates the
-    * same three gates' arithmetic.
+    * same row.
     */
   def maintain(delta: DataFrame, idCol: String, vecCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                audit: Option[Audit] = None): MaintainReport = {
     val spark = delta.sparkSession
-    // a fresh commit returns prev+1; anything ≤ prev is a replay (one
-    // currentVersion listing instead of a second full delivered-set read)
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(delta, idCol, vecCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _)
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = audit.toSeq.flatMap { a =>
-      val cents = centroids(spark, stateDir).get.localCheckpoint()
-      // checkpoint + count fused (one job each — Lineage doc): the
-      // audit always counts what it just materialized
-      val (live, nLive) = graft.operators.Lineage.localCheckpointWithCount(
-        assignments(spark, stateDir).get)
-      val (oneShot, nOne) = graft.operators.Lineage.localCheckpointWithCount(
-        assignTo(a.corpus, idCol, vecCol, cents)) // drift + fit + search read it
-      // gate 1 — drift: the maintained union must equal routing
-      // everything at once under the frozen dials (value mismatches OR
-      // a row-count difference — duplicated segments match pointwise,
-      // so the count check is what catches an id-less replay)
-      val mism = live.select(col("id"), col("centroid_id").as("ci"))
-        .join(oneShot.select(col("id"), col("centroid_id").as("cf")),
-          Seq("id"), "full_outer")
-        .where(col("ci").isNull || col("cf").isNull || col("ci") =!= col("cf"))
-        .count()
-      val drift =
-        if (mism == 0 && nLive == nOne)
-          GateVerdict.Ok("drift", s"maintained ≡ one-shot over $nOne rows")
-        else GateVerdict.Corruption("drift",
-          s"$mism routing mismatches, $nLive live rows vs $nOne one-shot — " +
-            "segments lost, duplicated or mixed across bases; rebuild and " +
-            "check for id-less replays or a foreign writer")
-      // gate 2 — fit: a fresh Lloyd retrain may beat the frozen
-      // centroids by at most fitSlackMicro mean-cosine-micros per
-      // vector (exact integer space, q266's criterion)
-      val reCents = Knn.kmeansCentroids(a.corpus, idCol, vecCol,
-        a.seedPred, a.iters)
-      val reAsg = assignTo(a.corpus, idCol, vecCol, reCents)
-        .localCheckpoint() // fit sum + rebuilt search read it
-      val sInc = oneShot.agg(
-        sum(round(col("cs") * 1000000).cast("long"))).head().getLong(0)
-      val sReb = reAsg.agg(
-        sum(round(col("cs") * 1000000).cast("long"))).head().getLong(0)
-      val fit =
-        if (sReb - sInc <= a.fitSlackMicro * nOne)
-          GateVerdict.Ok("fit", s"retrain gains ${sReb - sInc} µcs over " +
-            s"$nOne vectors (slack ${a.fitSlackMicro}/vector)")
-        else GateVerdict.BuildNeeded("fit",
-          s"retrain gains ${sReb - sInc} µcs over $nOne vectors — the " +
-            "frozen centroids no longer fit the distribution; schedule a build")
-      // gate 3 — recall@k on the bounded query slice, maintained vs
-      // retrained, both against the brute-force truth
-      val (brute, nBrute) = graft.operators.Lineage.localCheckpointWithCount(
-        Knn.cosineKnn(a.corpus, idCol, vecCol, a.queryPred, a.k)
-          .select("q_id", "cand_id")) // 2 hit joins read it
-      def hits(asg: DataFrame, cts: DataFrame): Long =
-        searchStored(a.corpus, idCol, vecCol, asg, cts, a.queryPred,
-          a.k, a.nprobe)
-          .join(brute, Seq("q_id", "cand_id")).count()
-      val hm = hits(live, cents)
-      val hr = hits(reAsg, reCents)
-      val recall =
-        if (nBrute == 0 || hm >= hr - a.recallSlack * nBrute)
-          GateVerdict.Ok("recall",
-            s"maintained $hm vs retrained $hr of $nBrute brute pairs")
-        else GateVerdict.BuildNeeded("recall",
-          s"maintained $hm vs retrained $hr of $nBrute brute pairs — " +
-            "recall trails the retrain past the slack; schedule a build " +
-            "(consider raising nprobe until it lands)")
-      Seq(drift, fit, recall)
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
+    Maintain.run(spark, stateDir, maxLiveMarkers,
+      refresh(delta, idCol, vecCol, stateDir, deltaId), compact(spark, stateDir),
+      audit.fold((Seq.empty[GateVerdict], Map.empty[String, Double])) { a =>
+        IndexSegments.auditGates(this.audit(spark, stateDir, idCol, vecCol, a)._1,
+            "re-route", a.recallSlack,
+            " (consider raising nprobe until it lands)") { n =>
+          // a fresh Lloyd retrain may beat the frozen centroids by at
+          // most fitSlackMicro mean-cosine-micros per vector (exact
+          // integer space, q266's criterion)
+          val gain = n("s_rebuilt") - n("s_maintained")
+          if (gain <= a.fitSlackMicro * n("n_one_shot"))
+            GateVerdict.Ok("fit", s"retrain gains $gain µcs over " +
+              s"${n("n_one_shot")} vectors (slack ${a.fitSlackMicro}/vector)")
+          else GateVerdict.BuildNeeded("fit",
+            s"retrain gains $gain µcs over ${n("n_one_shot")} vectors — the " +
+              "frozen centroids no longer fit the distribution; schedule a build")
+        }
+      })
+  }
+
+  /** The audit's raw numbers ([[IndexSegments.auditRow]]), lazily
+    * composed — the ONE definition [[maintain]]'s gates and q266 read:
+    * the maintained assignments vs a one-shot re-route of `a.corpus`
+    * under the same frozen centroids (drift, row counts), Σ round(cs·1e6)
+    * of the maintained table vs a full Lloyd retrain's routing (fit),
+    * and IVF recall@k of both indexes against the brute-force cosine
+    * truth on the `a.queryPred` slice. Returned beside the row: the
+    * checkpointed maintained table it reads.
+    */
+  private[graft] def audit(spark: SparkSession, stateDir: String,
+                           idCol: String, vecCol: String,
+                           a: Audit): (DataFrame, DataFrame) = {
+    val cents = centroids(spark, stateDir).get.localCheckpoint()
+    val live = assignments(spark, stateDir).get.localCheckpoint()
+    val reCents = Knn.kmeansCentroids(a.corpus, idCol, vecCol, a.seedPred,
+      a.iters)
+    val reAsg = assignTo(a.corpus, idCol, vecCol, reCents)
+      .localCheckpoint() // fit sum + rebuilt search read it
+    val brute = Knn.cosineKnn(a.corpus, idCol, vecCol, a.queryPred, a.k)
+      .select("q_id", "cand_id").localCheckpoint() // 2 hit joins read it
+    def hits(asg: DataFrame, cts: DataFrame): DataFrame =
+      searchStored(a.corpus, idCol, vecCol, asg, cts, a.queryPred, a.k,
+        a.nprobe).join(brute, Seq("q_id", "cand_id"))
+    (IndexSegments.auditRow(live, assignTo(a.corpus, idCol, vecCol, cents),
+      Seq("id"), Seq("centroid_id"), round(col("cs") * 1000000).cast("long"),
+      reAsg, hits(live, cents), hits(reAsg, reCents), brute), live)
   }
 
   /** IVF search over a STORED (assignments, centroids) pair — queries
     * probe their `nprobe` most-similar buckets and score only those
-    * buckets' members (q266's audit search shape: windows partition by
+    * buckets' members (the audit's search shape: windows partition by
     * query, buckets join by equi-key).
     */
   private def searchStored(corpus: DataFrame, idCol: String, vecCol: String,
@@ -320,16 +282,8 @@ object IvfIndex {
     * pins the read to a committed version (a manifest cut).
     */
   def centroids(spark: SparkSession, stateDir: String,
-                asOf: Option[Long] = None): Option[DataFrame] = {
-    val v = asOf match {
-      case Some(a) => VersionedState.committed(spark, stateDir)
-        .filter(_._1 <= a).lastOption.map(_._1)
-      case None => VersionedState.currentVersion(spark, stateDir)
-    }
-    v.map { n =>
-      spark.read.parquet(s"${VersionedState.versionPath(stateDir, n)}/centroids")
-    }
-  }
+                asOf: Option[Long] = None): Option[DataFrame] =
+    IndexSegments.dial(spark, stateDir, "centroids", asOf)
 
   /** The live assignment relation — the union of every segment from
     * the latest base (`base`/`base-compact`) onward, minus tombstoned

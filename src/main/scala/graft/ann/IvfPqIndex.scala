@@ -65,45 +65,22 @@ object IvfPqIndex {
     * ([[IvfIndex.refresh]]'s contract, shared via [[IndexSegments]]).
     */
   def refresh(delta: DataFrame, idCol: String, vecCol: String,
-              stateDir: String, deltaId: String = ""): Long = {
-    val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
-      val pdir = VersionedState.versionPath(stateDir, prev.get)
-      val cbStored = spark.read.parquet(s"$pdir/codebooks")
-      val mRow = cbStored.agg(max("sub")).head()
-      require(!mRow.isNullAt(0),
-        s"stored codebook table at $stateDir is empty — the index is " +
-          "unusable; run build() with a non-empty seed set")
-      val m = mRow.getInt(0) + 1
-      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-        // coarse table + codebooks are frozen off a build: byte-identical
-        // FS carries (no Spark round-trips)
-        IndexSegments.carryDir(spark, s"$pdir/coarse", s"$vdir/coarse")
-        IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
-        val res = IvfPq.residuals(delta, idCol, vecCol,
-          spark.read.parquet(s"$vdir/coarse")).localCheckpoint()
-        Pq.assign(Pq.subvectors(res, "id", "rv", m),
-            spark.read.parquet(s"$vdir/codebooks"))
-          .join(res.select("id", "bid"), "id")
-          .write.mode("overwrite").parquet(s"$vdir/segment")
-      }
+              stateDir: String, deltaId: String = ""): Long =
+    IndexSegments.refresh(delta.sparkSession, stateDir, deltaId,
+        Seq("coarse", "codebooks")) { case Seq(cc, cb) =>
+      val m = Pq.storedM(cb, stateDir)
+      val res = IvfPq.residuals(delta, idCol, vecCol, cc).localCheckpoint()
+      Pq.assign(Pq.subvectors(res, "id", "rv", m), cb)
+        .join(res.select("id", "bid"), "id")
     }
-  }
 
   /** The live coarse quantizer, or None before the first build. */
   def coarse(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    VersionedState.currentVersion(spark, stateDir).map { n =>
-      spark.read.parquet(s"${VersionedState.versionPath(stateDir, n)}/coarse")
-    }
+    IndexSegments.dial(spark, stateDir, "coarse")
 
   /** The live residual codebooks, or None before the first build. */
   def codebooks(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    VersionedState.currentVersion(spark, stateDir).map { n =>
-      spark.read.parquet(s"${VersionedState.versionPath(stateDir, n)}/codebooks")
-    }
+    IndexSegments.dial(spark, stateDir, "codebooks")
 
   /** The live code table (id, bid, sub, code, d2) — the union of every
     * segment from the latest base (`base`/`base-compact`) onward,
@@ -154,90 +131,58 @@ object IvfPqIndex {
     * the coarse route and the residual codes per (id, sub); fit is the
     * residual-quantization error vs a codebook retrain (coarse table
     * is a fixed dial); recall is the two-stage ADC search vs exact-L2
-    * truth on the bounded query slice (q270's three gates, typed).
+    * truth on the bounded query slice — the verdicts typed from
+    * [[audit]]'s row (its numbers in `measured`).
     */
   def maintain(delta: DataFrame, idCol: String, vecCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                audit: Option[Audit] = None): MaintainReport = {
     val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(delta, idCol, vecCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = audit.toSeq.flatMap { a =>
-      val cc = coarse(spark, stateDir).get.localCheckpoint()
-      val cb = codebooks(spark, stateDir).get.localCheckpoint()
-      val m = cb.agg(max("sub")).head().getInt(0) + 1
-      // checkpoint + count fused (one job each — Lineage doc): the
-      // audit always counts what it just materialized
-      val (live, nLive) = graft.operators.Lineage.localCheckpointWithCount(
-        codes(spark, stateDir).get)
-      val res = IvfPq.residuals(a.corpus, idCol, vecCol, cc).localCheckpoint()
-      val (oneShot, nOne) = graft.operators.Lineage.localCheckpointWithCount(
-        Pq.assign(Pq.subvectors(res, "id", "rv", m), cb)
-          .join(res.select("id", "bid"), "id")) // drift + fit + search read it
-      // gate 1 — drift over BOTH halves: bucket and code per (id, sub)
-      val mism = live.select(col("id"), col("sub"),
-          col("bid").as("b1"), col("code").as("c1"))
-        .join(oneShot.select(col("id"), col("sub"),
-          col("bid").as("b2"), col("code").as("c2")),
-          Seq("id", "sub"), "full_outer")
-        .where(col("c1").isNull || col("c2").isNull ||
-          col("b1") =!= col("b2") || col("c1") =!= col("c2"))
-        .count()
-      val drift =
-        if (mism == 0 && nLive == nOne)
-          GateVerdict.Ok("drift",
-            s"maintained ≡ one-shot route+encode over $nOne code rows")
-        else GateVerdict.Corruption("drift",
-          s"$mism route/code mismatches, $nLive live rows vs $nOne " +
-            "one-shot — segments lost, duplicated or mixed across bases; " +
-            "rebuild and check replay discipline")
-      // gate 2 — residual-quantization fit vs a codebook retrain
-      val reCb = Pq.trainCodebooks(res, "id", "rv", m, a.seedPred, a.iters)
-        .localCheckpoint()
-      val reAsg = Pq.assign(Pq.subvectors(res, "id", "rv", m), reCb)
+    Maintain.run(spark, stateDir, maxLiveMarkers,
+      refresh(delta, idCol, vecCol, stateDir, deltaId), compact(spark, stateDir),
+      audit.fold((Seq.empty[GateVerdict], Map.empty[String, Double])) { a =>
+        IndexSegments.auditGates(this.audit(spark, stateDir, idCol, vecCol, a)._1,
+            "route+encode", a.recallSlack,
+            " (consider raising nprobe until it lands)")(
+          IndexSegments.errorFit(_, a.fitRatioMilli, "residual codebooks"))
+      })
+  }
+
+  /** The audit's raw numbers ([[IndexSegments.auditRow]]), lazily
+    * composed — the ONE definition [[maintain]]'s gates and q270 read:
+    * the maintained codes vs a one-shot re-route + re-encode of
+    * `a.corpus` under the same frozen coarse table and codebooks (drift
+    * over bucket AND code per (id, sub), row counts), Σ round(d2·1e6)
+    * of the maintained table vs a residual codebook retrain's encoding
+    * (fit), and two-stage ADC recall@k of both indexes against the
+    * exact-L2 truth on the `a.queryPred` slice. Returned beside the
+    * row: the checkpointed maintained table it reads.
+    */
+  private[graft] def audit(spark: SparkSession, stateDir: String,
+                           idCol: String, vecCol: String,
+                           a: Audit): (DataFrame, DataFrame) = {
+    val cc = coarse(spark, stateDir).get.localCheckpoint()
+    val cb = codebooks(spark, stateDir).get.localCheckpoint()
+    val m = Pq.storedM(cb, stateDir)
+    val live = codes(spark, stateDir).get.localCheckpoint()
+    val res = IvfPq.residuals(a.corpus, idCol, vecCol, cc)
+      .localCheckpoint() // frozen re-encode AND rebuilt encode read it
+    def encode(books: DataFrame): DataFrame =
+      Pq.assign(Pq.subvectors(res, "id", "rv", m), books)
         .join(res.select("id", "bid"), "id")
-        .localCheckpoint()
-      def errMicro(df: DataFrame): Long =
-        df.agg(coalesce(sum(round(col("d2") * 1000000).cast("long")), lit(0L)))
-          .head().getLong(0)
-      val eInc = errMicro(oneShot)
-      val eReb = errMicro(reAsg)
-      val fit =
-        if (eInc * 1000 <= eReb * a.fitRatioMilli)
-          GateVerdict.Ok("fit", s"maintained µerr $eInc vs retrain $eReb " +
-            s"(ratio dial ${a.fitRatioMilli}/1000)")
-        else GateVerdict.BuildNeeded("fit",
-          s"maintained µerr $eInc exceeds ${a.fitRatioMilli}/1000 of the " +
-            s"retrain's $eReb — the frozen residual codebooks no longer " +
-            "fit; schedule a build")
-      // gate 3 — two-stage ADC recall@k vs exact-L2 truth
-      val (brute, nBrute) = graft.operators.Lineage.localCheckpointWithCount(
-        Pq.exactL2TopK(a.corpus, idCol, vecCol, a.queryPred, a.k))
-      val queries = a.corpus.where(a.queryPred)
-      val probes = IvfPq.probeResiduals(queries, idCol, vecCol, cc, a.nprobe)
-        .localCheckpoint() // both searches read it
-      def hits(cds: DataFrame, books: DataFrame): Long =
-        IvfPq.searchAdc(probes, cds.select("id", "bid", "sub", "code"),
-            books, m, a.k)
-          .select("q_id", "cand_id")
-          .join(brute, Seq("q_id", "cand_id")).count()
-      val hm = hits(live, cb)
-      val hr = hits(reAsg, reCb)
-      val recall =
-        if (nBrute == 0 || hm >= hr - a.recallSlack * nBrute)
-          GateVerdict.Ok("recall",
-            s"maintained $hm vs retrained $hr of $nBrute brute pairs")
-        else GateVerdict.BuildNeeded("recall",
-          s"maintained $hm vs retrained $hr of $nBrute brute pairs — " +
-            "recall trails the retrain past the slack; schedule a build " +
-            "(consider raising nprobe until it lands)")
-      Seq(drift, fit, recall)
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
+    val reCb = Pq.trainCodebooks(res, "id", "rv", m, a.seedPred, a.iters)
+    val reAsg = encode(reCb).localCheckpoint() // fit sum + rebuilt ADC read it
+    val brute = Pq.exactL2TopK(a.corpus, idCol, vecCol, a.queryPred, a.k)
+      .localCheckpoint() // 2 hit joins read it
+    val probes = IvfPq.probeResiduals(a.corpus.where(a.queryPred), idCol,
+      vecCol, cc, a.nprobe).localCheckpoint() // both searches read it
+    def hits(cds: DataFrame, books: DataFrame): DataFrame =
+      IvfPq.searchAdc(probes, cds.select("id", "bid", "sub", "code"), books,
+          m, a.k)
+        .select("q_id", "cand_id").join(brute, Seq("q_id", "cand_id"))
+    (IndexSegments.auditRow(live, encode(cb), Seq("id", "sub"),
+      Seq("code", "bid"), round(col("d2") * 1000000).cast("long"), reAsg,
+      hits(live, cb), hits(reAsg, reCb), brute), live)
   }
 }

@@ -62,6 +62,19 @@ object Pq {
       .select("q_id", "cand_id")
   }
 
+  /** The subspace count `m` a stored codebook table was trained with:
+    * max(sub)+1, recovered from the table itself so refresh and audit
+    * callers cannot desynchronize the dial. An empty table fails with
+    * the rebuild remedy (bounded collect: the table is m·k rows).
+    */
+  def storedM(codebooks: DataFrame, stateDir: String): Int = {
+    val r = codebooks.agg(max("sub")).head()
+    require(!r.isNullAt(0),
+      s"stored codebook table at $stateDir is empty — the index is " +
+        "unusable; run build() with a non-empty seed set")
+    r.getInt(0) + 1
+  }
+
   /** Long-form subvector table (id, sub, sv): sub ∈ [0, m), sv the
     * sub-th length-(d/m) slice. d must be divisible by m (trailing
     * dims would silently vanish otherwise — refused at plan build

@@ -68,30 +68,11 @@ object PqIndex {
     * ([[IvfIndex.refresh]]'s contract, shared via [[IndexSegments]]).
     */
   def refresh(delta: DataFrame, idCol: String, vecCol: String,
-              stateDir: String, deltaId: String = ""): Long = {
-    val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    require(prev.nonEmpty,
-      s"no committed index at $stateDir — run build() before refresh()")
-    IndexSegments.replayGuarded(spark, stateDir, "delta", deltaId) { label =>
-      val stored = spark.read.parquet(
-        s"${VersionedState.versionPath(stateDir, prev.get)}/codebooks")
-      // bounded collect: the codebook table is m·k rows by construction
-      val mRow = stored.agg(max("sub")).head()
-      require(!mRow.isNullAt(0),
-        s"stored codebook table at $stateDir is empty — the index is " +
-          "unusable; run build() with a non-empty seed set")
-      val m = mRow.getInt(0) + 1
-      val pdir = VersionedState.versionPath(stateDir, prev.get)
-      VersionedState.commit(spark, stateDir, prev, label = label) { vdir =>
-        // codebooks are frozen off a build: byte-identical FS carry
-        IndexSegments.carryDir(spark, s"$pdir/codebooks", s"$vdir/codebooks")
-        Pq.assign(Pq.subvectors(delta, idCol, vecCol, m),
-            spark.read.parquet(s"$vdir/codebooks"))
-          .write.mode("overwrite").parquet(s"$vdir/segment")
-      }
+              stateDir: String, deltaId: String = ""): Long =
+    IndexSegments.refresh(delta.sparkSession, stateDir, deltaId,
+        Seq("codebooks")) { case Seq(cb) =>
+      Pq.assign(Pq.subvectors(delta, idCol, vecCol, Pq.storedM(cb, stateDir)), cb)
     }
-  }
 
   /** Delete `ids` (first column) from the live code table via a
     * TOMBSTONE version (codebooks carried forward); physical excision
@@ -133,89 +114,58 @@ object PqIndex {
 
   /** The runbook as code for the PQ code table — [[IvfIndex.maintain]]'s
     * sibling: replay-guarded refresh, self-compaction past the marker
-    * dial, and (on audit cadence) drift / fit / recall verdicts typed.
+    * dial, and (on audit cadence) drift / fit / recall verdicts typed
+    * from [[audit]]'s row (its numbers in `measured`).
     */
   def maintain(delta: DataFrame, idCol: String, vecCol: String,
                stateDir: String, deltaId: String = "",
                maxLiveMarkers: Int = 8,
                audit: Option[Audit] = None): MaintainReport = {
     val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(delta, idCol, vecCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = audit.toSeq.flatMap { a =>
-      val cb = codebooks(spark, stateDir).get.localCheckpoint()
-      val m = cb.agg(max("sub")).head().getInt(0) + 1
-      // checkpoint + count fused (one job each — Lineage doc): the
-      // audit always counts what it just materialized
-      val (live, nLive) = graft.operators.Lineage.localCheckpointWithCount(
-        codes(spark, stateDir).get)
-      val (oneShot, nOne) = graft.operators.Lineage.localCheckpointWithCount(
-        Pq.assign(Pq.subvectors(a.corpus, idCol, vecCol, m), cb)) // drift + fit + search read it
-      // gate 1 — drift: per-(id, sub) code identity + row-count check
-      // (duplicated segments match pointwise; the count catches them)
-      val mism = live.select(col("id"), col("sub"), col("code").as("c1"))
-        .join(oneShot.select(col("id"), col("sub"), col("code").as("c2")),
-          Seq("id", "sub"), "full_outer")
-        .where(col("c1").isNull || col("c2").isNull || col("c1") =!= col("c2"))
-        .count()
-      val drift =
-        if (mism == 0 && nLive == nOne)
-          GateVerdict.Ok("drift", s"maintained ≡ one-shot re-encode over $nOne code rows")
-        else GateVerdict.Corruption("drift",
-          s"$mism code mismatches, $nLive live rows vs $nOne one-shot — " +
-            "segments lost, duplicated or mixed across bases; rebuild and " +
-            "check for id-less replays or a foreign writer")
-      // gate 2 — fit: maintained total quantization error vs a fresh
-      // codebook retrain, exact micro-scaled integers (q267's gate)
-      val reCb = Pq.trainCodebooks(a.corpus, idCol, vecCol, m,
-        a.seedPred, a.iters).localCheckpoint()
-      val reAsg = Pq.assign(Pq.subvectors(a.corpus, idCol, vecCol, m), reCb)
-        .localCheckpoint() // fit sum + rebuilt search read it
-      def errMicro(df: DataFrame): Long =
-        df.agg(coalesce(sum(round(col("d2") * 1000000).cast("long")), lit(0L)))
-          .head().getLong(0)
-      val eInc = errMicro(oneShot)
-      val eReb = errMicro(reAsg)
-      val fit =
-        if (eInc * 1000 <= eReb * a.fitRatioMilli)
-          GateVerdict.Ok("fit", s"maintained µerr $eInc vs retrain $eReb " +
-            s"(ratio dial ${a.fitRatioMilli}/1000)")
-        else GateVerdict.BuildNeeded("fit",
-          s"maintained µerr $eInc exceeds ${a.fitRatioMilli}/1000 of the " +
-            s"retrain's $eReb — the frozen codebooks no longer fit; " +
-            "schedule a build")
-      // gate 3 — ADC recall@k vs exact-L2 truth on the query slice
-      val (brute, nBrute) = graft.operators.Lineage.localCheckpointWithCount(
-        Pq.exactL2TopK(a.corpus, idCol, vecCol, a.queryPred, a.k)) // 2 hit joins read it
-      val queries = a.corpus.where(a.queryPred)
-      def hits(cds: DataFrame, books: DataFrame): Long =
-        Pq.adcTopK(queries, idCol, vecCol, cds.select("id", "sub", "code"),
-            books, m, a.k)
-          .select("q_id", "cand_id")
-          .join(brute, Seq("q_id", "cand_id")).count()
-      val hm = hits(live, cb)
-      val hr = hits(reAsg, reCb)
-      val recall =
-        if (nBrute == 0 || hm >= hr - a.recallSlack * nBrute)
-          GateVerdict.Ok("recall",
-            s"maintained $hm vs retrained $hr of $nBrute brute pairs")
-        else GateVerdict.BuildNeeded("recall",
-          s"maintained $hm vs retrained $hr of $nBrute brute pairs — " +
-            "recall trails the retrain past the slack; schedule a build")
-      Seq(drift, fit, recall)
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
+    Maintain.run(spark, stateDir, maxLiveMarkers,
+      refresh(delta, idCol, vecCol, stateDir, deltaId), compact(spark, stateDir),
+      audit.fold((Seq.empty[GateVerdict], Map.empty[String, Double])) { a =>
+        IndexSegments.auditGates(this.audit(spark, stateDir, idCol, vecCol, a)._1,
+            "re-encode", a.recallSlack)(
+          IndexSegments.errorFit(_, a.fitRatioMilli, "codebooks"))
+      })
+  }
+
+  /** The audit's raw numbers ([[IndexSegments.auditRow]]), lazily
+    * composed — the ONE definition [[maintain]]'s gates and q267 read:
+    * the maintained codes vs a one-shot re-encode of `a.corpus` under
+    * the same frozen codebooks (drift per (id, sub), row counts),
+    * Σ round(d2·1e6) of the maintained table vs a full codebook
+    * retrain's encoding (fit), and ADC recall@k of both indexes against
+    * the exact-L2 truth on the `a.queryPred` slice. Returned beside the
+    * row: the checkpointed maintained table it reads.
+    */
+  private[graft] def audit(spark: SparkSession, stateDir: String,
+                           idCol: String, vecCol: String,
+                           a: Audit): (DataFrame, DataFrame) = {
+    val cb = codebooks(spark, stateDir).get.localCheckpoint()
+    val m = Pq.storedM(cb, stateDir)
+    val live = codes(spark, stateDir).get.localCheckpoint()
+    val sv = Pq.subvectors(a.corpus, idCol, vecCol, m)
+      .localCheckpoint() // frozen re-encode AND rebuilt encode read it
+    val reCb = Pq.trainCodebooks(a.corpus, idCol, vecCol, m, a.seedPred,
+      a.iters)
+    val reAsg = Pq.assign(sv, reCb)
+      .localCheckpoint() // fit sum + rebuilt ADC read it
+    val brute = Pq.exactL2TopK(a.corpus, idCol, vecCol, a.queryPred, a.k)
+      .localCheckpoint() // 2 hit joins read it
+    def hits(cds: DataFrame, books: DataFrame): DataFrame =
+      Pq.adcTopK(a.corpus.where(a.queryPred), idCol, vecCol,
+          cds.select("id", "sub", "code"), books, m, a.k)
+        .select("q_id", "cand_id").join(brute, Seq("q_id", "cand_id"))
+    (IndexSegments.auditRow(live, Pq.assign(sv, cb), Seq("id", "sub"),
+      Seq("code"), round(col("d2") * 1000000).cast("long"), reAsg,
+      hits(live, cb), hits(reAsg, reCb), brute), live)
   }
 
   /** The live codebook table, or None before the first build. */
   def codebooks(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    VersionedState.currentVersion(spark, stateDir).map { n =>
-      spark.read.parquet(s"${VersionedState.versionPath(stateDir, n)}/codebooks")
-    }
+    IndexSegments.dial(spark, stateDir, "codebooks")
 
   /** The live code table — the union of every segment from the latest
     * base (`base`/`base-compact`) onward, minus tombstoned rows (all

@@ -428,31 +428,26 @@ object ClusterState {
                maxLiveMarkers: Int = 8,
                audit: Option[(DataFrame, DataFrame)] = None):
       graft.operators.MaintainReport = {
-    import graft.operators.{GateVerdict, Maintain, MaintainReport}
+    import graft.operators.{GateVerdict, Maintain}
     val spark = newIds.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(newIds, idCol, pairs, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir)
-    val gates = audit.toSeq.map { case (allIds, allPairs) =>
-      val (truth, _) = Dedup.nearDupClustersConverged(allIds,
-        allIds.columns.head, allPairs)
-      val diff = labels(spark, stateDir).get
-        .join(truth.select(col(allIds.columns.head).as("id"),
-          col("cluster_id")), Seq("id"), "full_outer")
-        .where(col("label").isNull || col("cluster_id").isNull ||
-          col("label") =!= col("cluster_id"))
-        .count()
-      if (diff == 0)
-        GateVerdict.Ok("drift", "maintained labels ≡ from-scratch converged CC")
-      else
-        GateVerdict.Corruption("drift",
-          s"$diff docs whose maintained label differs from a from-scratch " +
-            "CC — contraction and cluster-local re-CC are exact, so this " +
-            "is lost/replayed state; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
+    Maintain.run(spark, stateDir, maxLiveMarkers,
+      refresh(newIds, idCol, pairs, stateDir, deltaId), compact(spark, stateDir),
+      (audit.toSeq.map { case (allIds, allPairs) =>
+        val (truth, _) = Dedup.nearDupClustersConverged(allIds,
+          allIds.columns.head, allPairs)
+        val diff = labels(spark, stateDir).get
+          .join(truth.select(col(allIds.columns.head).as("id"),
+            col("cluster_id")), Seq("id"), "full_outer")
+          .where(col("label").isNull || col("cluster_id").isNull ||
+            col("label") =!= col("cluster_id"))
+          .count()
+        if (diff == 0)
+          GateVerdict.Ok("drift", "maintained labels ≡ from-scratch converged CC")
+        else
+          GateVerdict.Corruption("drift",
+            s"$diff docs whose maintained label differs from a from-scratch " +
+              "CC — contraction and cluster-local re-CC are exact, so this " +
+              "is lost/replayed state; rebuild and check replay discipline")
+      }, Map.empty))
   }
 }

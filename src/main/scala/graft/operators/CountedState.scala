@@ -283,36 +283,32 @@ private[graft] final class CountedState(
                stateDir: String, deltaId: String, maxLiveMarkers: Int,
                auditCorpus: Option[DataFrame]): MaintainReport = {
     val spark = delta.sparkSession
-    val prev = VersionedState.currentVersion(spark, stateDir)
-    val v = refresh(delta, idCol, payloadCol, stateDir, deltaId)
-    val replayed = prev.exists(v <= _) // fresh commit ⇒ prev+1
-    val compacted = Maintain.liveMarkers(spark, stateDir) > maxLiveMarkers
-    if (compacted) compact(spark, stateDir, retainHorizons = 1,
-      maxDelivered = IndexSegments.DefaultMaxDelivered, writeSplits = 1)
-    val gates = auditCorpus.toSeq.map { corpus =>
-      val oneShot = derive(corpus, idCol, payloadCol, storedDials(spark, stateDir))
-      val diffs = tables.zip(oneShot).map { case (t, f) =>
-        live(spark, stateDir, t).get
-          .join(f.select(t.keys.map(col) ++
-              t.counts.map(c => col(c).as(s"${c}_one")): _*),
-            t.keys, "full_outer")
-          .where(t.counts.map(c => col(c) =!= col(s"${c}_one"))
-            .foldLeft(col(t.counts.head).isNull ||
-              col(s"${t.counts.head}_one").isNull)(_ || _))
-          .count()
-      }
-      val names = tables.map(_.name).mkString(" + ")
-      if (diffs.forall(_ == 0))
-        GateVerdict.Ok("drift", s"maintained $names ≡ one-shot re-derivation")
-      else
-        GateVerdict.Corruption("drift",
-          tables.zip(diffs).map { case (t, n) => s"$n ${t.name} rows" }
-            .mkString(" / ") + " differ from the one-shot re-derivation — " +
-            "counts are linear, so this is lost/replayed state, not " +
-            "approximation; rebuild and check replay discipline")
-    }
-    MaintainReport(v, replayed, compacted,
-      Maintain.liveMarkers(spark, stateDir), gates)
+    Maintain.run(spark, stateDir, maxLiveMarkers,
+      refresh(delta, idCol, payloadCol, stateDir, deltaId),
+      compact(spark, stateDir, retainHorizons = 1,
+        maxDelivered = IndexSegments.DefaultMaxDelivered, writeSplits = 1),
+      (auditCorpus.toSeq.map { corpus =>
+        val oneShot = derive(corpus, idCol, payloadCol, storedDials(spark, stateDir))
+        val diffs = tables.zip(oneShot).map { case (t, f) =>
+          live(spark, stateDir, t).get
+            .join(f.select(t.keys.map(col) ++
+                t.counts.map(c => col(c).as(s"${c}_one")): _*),
+              t.keys, "full_outer")
+            .where(t.counts.map(c => col(c) =!= col(s"${c}_one"))
+              .foldLeft(col(t.counts.head).isNull ||
+                col(s"${t.counts.head}_one").isNull)(_ || _))
+            .count()
+        }
+        val names = tables.map(_.name).mkString(" + ")
+        if (diffs.forall(_ == 0))
+          GateVerdict.Ok("drift", s"maintained $names ≡ one-shot re-derivation")
+        else
+          GateVerdict.Corruption("drift",
+            tables.zip(diffs).map { case (t, n) => s"$n ${t.name} rows" }
+              .mkString(" / ") + " differ from the one-shot re-derivation — " +
+              "counts are linear, so this is lost/replayed state, not " +
+              "approximation; rebuild and check replay discipline")
+      }, Map.empty))
   }
 }
 

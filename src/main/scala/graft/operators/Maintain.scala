@@ -73,4 +73,27 @@ private[graft] object Maintain {
     val base = graft.ann.IndexSegments.lastBase(cs, stateDir)
     cs.count(_._1 >= base)
   }
+
+  /** The runbook shell every family's `maintain()` shares: `refresh`
+    * the delta (replay-guarded by the family), `compact` when the read
+    * horizon's marker count exceeds `maxLiveMarkers`, then run `gates`
+    * (the audit verdicts and the numbers they read; empty when no audit
+    * was asked for). A fresh commit returns prev+1, so a version ≤ the
+    * one listed before the refresh is a replay — one `currentVersion`
+    * listing instead of a second full delivered-set read. The markers
+    * are listed again only when the compaction changed them.
+    */
+  def run(spark: org.apache.spark.sql.SparkSession, stateDir: String,
+          maxLiveMarkers: Int, refresh: => Long, compact: => Unit,
+          gates: => (Seq[GateVerdict], Map[String, Double])): MaintainReport = {
+    val prev = VersionedState.currentVersion(spark, stateDir)
+    val v = refresh
+    val markers = liveMarkers(spark, stateDir)
+    val compacted = markers > maxLiveMarkers
+    if (compacted) compact
+    val (verdicts, measured) = gates
+    MaintainReport(v, prev.exists(v <= _), compacted,
+      if (compacted) liveMarkers(spark, stateDir) else markers, verdicts,
+      measured)
+  }
 }

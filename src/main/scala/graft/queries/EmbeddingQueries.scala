@@ -2338,6 +2338,10 @@ object EmbeddingQueries {
     // within 0.2 of the rebuilt index, compared as exact integers
     // (5·hits — never a float share). When fit or recall trips, the
     // answer is a periodic IvfIndex.build, not per-batch retraining.
+    // The gates' raw numbers are IvfIndex.audit's one row — the same
+    // row IvfIndex.maintain's typed gates read — and this query only
+    // projects its oracle columns from it (n_history counts the
+    // maintained table the audit hands back).
     // Scale shape: training/routing are broadcast-codebook passes +
     // mergeable max-struct argmins (no corpus window anywhere);
     // searches touch probed buckets only; the exact brute-force truth
@@ -2436,98 +2440,19 @@ object EmbeddingQueries {
     }),
       (s, dir) => {
         import graft.ann.IvfIndex
-        import org.apache.spark.sql.expressions.Window
         val emb = Tables.read(s, dir, "embeddings")
-        val hist = emb.where(col("vec_id") % 5 =!= 4)
-        val delta = emb.where(col("vec_id") % 5 === 4)
-        // fresh state dir per execution: bench reps and repeated verify
-        // runs must each exercise the full build→refresh cycle, not
-        // append segments to a previous run's state
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q266_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = freshStateDirs(dir, "q266").head
         // stored index: trained + routed on HISTORY, committed
-        IvfIndex.build(hist, "vec_id", "embedding",
-          col("vec_id") % 50 === 0, iters = 2, stDir)
+        IvfIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
+          "embedding", col("vec_id") % 50 === 0, iters = 2, stDir)
         // incremental refresh: ONLY the delta routed, off the disk state
-        IvfIndex.refresh(delta, "vec_id", "embedding", stDir)
-        val cents = IvfIndex.centroids(s, stDir).get.localCheckpoint()
-        val inc = IvfIndex.assignments(s, stDir).get.localCheckpoint()
-        // gate 1: one-shot re-route under the same frozen centroids
-        val full = IvfIndex.assignTo(emb, "vec_id", "embedding", cents)
-        val drift = inc.select(col("id"), col("centroid_id").as("ci"))
-          .join(full.select(col("id"), col("centroid_id").as("cf")),
-            Seq("id"), "full_outer")
-          .agg(sum(when(col("ci").isNull || col("cf").isNull
-              || col("ci") =!= col("cf"), 1L).otherwise(0L)).as("drift"))
-        // retrain audit: full Lloyd rebuild over history ∪ delta
-        val centsReb = Knn.kmeansCentroids(emb, "vec_id", "embedding",
-            col("vec_id") % 50 === 0, iters = 2).localCheckpoint()
-        val reb = IvfIndex.assignTo(emb, "vec_id", "embedding", centsReb)
-          .localCheckpoint() // fit sum + rebuilt search read it
-        val qs = inc.agg(count(lit(1)).as("n"),
-          sum(when(col("id") % 5 =!= 4, 1L).otherwise(0L)).as("n_history"),
-          sum(round(col("cs") * 1000000).cast("long")).as("s_inc"))
-        val qr = reb.agg(
-          sum(round(col("cs") * 1000000).cast("long")).as("s_reb"))
-        // IVF search (nprobe 2, k 5) over an (assignments, centroids) pair
-        def search(asg: org.apache.spark.sql.DataFrame,
-                   cts: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-          val ee = emb.select(col("vec_id"), col("embedding"),
-              Knn.l2norm(col("embedding")).as("nrm"))
-            .where(col("nrm") > 0)
-          val cn = cts.select(col("centroid_id"), col("cent_vec"),
-              Knn.l2norm(col("cent_vec")).as("cnrm"))
-            .where(col("cnrm") > 0)
-          val wp = Window.partitionBy("q_id")
-            .orderBy(col("cs").desc, col("centroid_id"))
-          val probes = ee.where(col("vec_id") < 10).crossJoin(broadcast(cn))
-            .select(col("vec_id").as("q_id"), col("centroid_id"),
-              (Knn.dot(col("embedding"), col("cent_vec"))
-                / (col("nrm") * col("cnrm"))).as("cs"))
-            .withColumn("rk", row_number().over(wp)).where(col("rk") <= 2)
-            .select("q_id", "centroid_id")
-          val cand = probes
-            .join(asg.select(col("id").as("cand_id"), col("centroid_id")),
-              Seq("centroid_id"))
-            .where(col("cand_id") =!= col("q_id"))
-          val sims = cand
-            .join(ee.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-              col("nrm").as("qn")), "q_id")
-            .join(ee.select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-              col("nrm").as("cn2")), "cand_id")
-            .select(col("q_id"), col("cand_id"),
-              (Knn.dot(col("qv"), col("cv")) / (col("qn") * col("cn2"))).as("sim"))
-          val wk = Window.partitionBy("q_id")
-            .orderBy(col("sim").desc, col("cand_id"))
-          sims.withColumn("rk", row_number().over(wk)).where(col("rk") <= 5)
-            .select("q_id", "cand_id")
-        }
-        val bf = Knn.cosineKnn(emb, "vec_id", "embedding", col("vec_id") < 10, 5)
-          .select("q_id", "cand_id").localCheckpoint() // 2 hit joins read it
-        val hm = search(inc, cents).join(bf, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_maintained"))
-        val hr = search(reb, centsReb).join(bf, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_rebuilt"))
-        val nb = bf.agg(count(lit(1)).as("n_brute"))
-        qs.crossJoin(qr).crossJoin(drift)
-          .crossJoin(hm).crossJoin(hr).crossJoin(nb)
-          .select(col("n").as("n_vectors"), col("n_history"),
-            (col("n") - col("n_history")).as("n_delta"),
-            col("drift"), (col("drift") === 0).as("drift_ok"),
-            round(col("s_inc").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqs_maintained"),
-            round(col("s_reb").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqs_rebuilt"),
-            (col("s_reb") - col("s_inc") <= lit(50000L) * col("n")).as("fit_ok"),
-            col("hits_maintained"), col("hits_rebuilt"), col("n_brute"),
-            round(col("hits_maintained").cast("double") / col("n_brute"), 6)
-              .as("recall_maintained"),
-            round(col("hits_rebuilt").cast("double") / col("n_brute"), 6)
-              .as("recall_rebuilt"),
-            (col("hits_maintained") * 5 >= col("hits_rebuilt") * 5 - col("n_brute"))
-              .as("recall_ok"))
+        IvfIndex.refresh(emb.where(col("vec_id") % 5 === 4), "vec_id",
+          "embedding", stDir)
+        val (row, inc) = IvfIndex.audit(s, stDir, "vec_id", "embedding",
+          IvfIndex.Audit(emb, col("vec_id") % 50 === 0, iters = 2,
+            queryPred = col("vec_id") < 10))
+        auditResult(row, inc, "id", "mqs", col("s_rebuilt") -
+          col("s_maintained") <= lit(50000L) * col("n_live"))
       }),
 
     // ---- q267: incremental PQ code-table maintenance — q266's
@@ -2545,8 +2470,9 @@ object EmbeddingQueries {
     // strictly has more resolution), compared as exact micro-scaled
     // integers 4·s_maintained ≤ 5·s_rebuilt; (3) recall_ok — ADC
     // recall@5 vs the exact L2 truth within 0.2 of the rebuilt
-    // index's, as exact 5·hits integers. PqIndexSpec covers restart/
-    // replay/GC semantics the oracle can't see.
+    // index's, as exact 5·hits integers — all read off PqIndex.audit's
+    // one row, the same row PqIndex.maintain gates on. PqIndexSpec
+    // covers restart/replay/GC semantics the oracle can't see.
     QueryDef("q267_pq_maintain", Some({
       def encCte(p: String, cb: String, src: String): String = s"""
       ${p}enc AS (SELECT id, sub, code, d2 FROM (
@@ -2625,72 +2551,19 @@ object EmbeddingQueries {
            (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM exr) nb"""
     }),
       (s, dir) => {
-        import graft.ann.{Pq, PqIndex}
+        import graft.ann.PqIndex
         val emb = Tables.read(s, dir, "embeddings")
-        val hist = emb.where(col("vec_id") % 5 =!= 4)
-        val delta = emb.where(col("vec_id") % 5 === 4)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q267_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
-        PqIndex.build(hist, "vec_id", "embedding", m = 4,
-          seedPred = col("vec_id") < 16, iters = 2, stateDir = stDir)
-        PqIndex.refresh(delta, "vec_id", "embedding", stDir)
-        val cb = PqIndex.codebooks(s, stDir).get.localCheckpoint()
-        val inc = PqIndex.codes(s, stDir).get.localCheckpoint()
-        val sv = Pq.subvectors(emb, "vec_id", "embedding", 4)
-          .localCheckpoint() // frozen re-encode AND rebuilt encode read it
-        val full = Pq.assign(sv, cb)
-        val drift = inc.select(col("id"), col("sub"), col("code").as("ci"))
-          .join(full.select(col("id"), col("sub"), col("code").as("cf")),
-            Seq("id", "sub"), "full_outer")
-          .agg(sum(when(col("ci").isNull || col("cf").isNull
-              || col("ci") =!= col("cf"), 1L).otherwise(0L)).as("drift"))
-        val cbReb = Pq.trainCodebooks(emb, "vec_id", "embedding", 4,
-          col("vec_id") < 16, iters = 2).localCheckpoint()
-        val reb = Pq.assign(sv, cbReb)
-          .localCheckpoint() // fit sum + rebuilt ADC read it
-        val qs = inc.agg(count(lit(1)).as("n"),
-          sum(round(col("d2") * 1000000).cast("long")).as("s_inc"))
-        val qr = reb.agg(
-          sum(round(col("d2") * 1000000).cast("long")).as("s_reb"))
-        val counts = emb.agg(count(lit(1)).as("n_vectors"),
-          sum(when(col("vec_id") % 5 =!= 4, 1L).otherwise(0L)).as("n_history"))
-        val probes = emb.where(col("vec_id") < 10)
-        val adcM = Pq.adcTopK(probes, "vec_id", "embedding", inc, cb, 4, 5)
-          .select("q_id", "cand_id")
-        val adcR = Pq.adcTopK(probes, "vec_id", "embedding", reb, cbReb, 4, 5)
-          .select("q_id", "cand_id")
-        val q = probes.select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-        val exact = Knn.topKSelect(
-            broadcast(q).join(emb, col("vec_id") =!= col("q_id"))
-              .select(col("q_id"),
-                (-Pq.sqdist(col("qv"), col("embedding"))).as("sim"),
-                col("vec_id").as("cand_id")),
-            org.apache.spark.sql.types.LongType, 5)
-          .select("q_id", "cand_id").localCheckpoint() // 2 hit joins read it
-        val hm = adcM.join(exact, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_maintained"))
-        val hr = adcR.join(exact, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_rebuilt"))
-        val nb = exact.agg(count(lit(1)).as("n_brute"))
-        counts.crossJoin(qs).crossJoin(qr).crossJoin(drift)
-          .crossJoin(hm).crossJoin(hr).crossJoin(nb)
-          .select(col("n_vectors"), col("n_history"),
-            (col("n_vectors") - col("n_history")).as("n_delta"),
-            col("drift"), (col("drift") === 0).as("drift_ok"),
-            round(col("s_inc").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqe_maintained"),
-            round(col("s_reb").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqe_rebuilt"),
-            (lit(4L) * col("s_inc") <= lit(5L) * col("s_reb")).as("fit_ok"),
-            col("hits_maintained"), col("hits_rebuilt"), col("n_brute"),
-            round(col("hits_maintained").cast("double") / col("n_brute"), 6)
-              .as("recall_maintained"),
-            round(col("hits_rebuilt").cast("double") / col("n_brute"), 6)
-              .as("recall_rebuilt"),
-            (col("hits_maintained") * 5 >= col("hits_rebuilt") * 5 - col("n_brute"))
-              .as("recall_ok"))
+        val stDir = freshStateDirs(dir, "q267").head
+        PqIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
+          "embedding", m = 4, seedPred = col("vec_id") < 16, iters = 2,
+          stateDir = stDir)
+        PqIndex.refresh(emb.where(col("vec_id") % 5 === 4), "vec_id",
+          "embedding", stDir)
+        val (row, _) = PqIndex.audit(s, stDir, "vec_id", "embedding",
+          PqIndex.Audit(emb, col("vec_id") < 16, iters = 2,
+            queryPred = col("vec_id") < 10))
+        auditResult(row, emb, "vec_id", "mqe",
+          lit(4L) * col("s_maintained") <= lit(5L) * col("s_rebuilt"))
       }),
 
     // ---- q270: incremental IVF-PQ maintenance — the COMPOSED capstone
@@ -2710,8 +2583,10 @@ object EmbeddingQueries {
     // exact micro-scaled integers); recall_ok — ADC recall@5 (nprobe 2
     // probes, per-bucket residual distance tables — the q200 search)
     // vs the exact L2 truth, within 0.2 of the rebuilt index as exact
-    // 5·hits integers. The coarse quantizer is a fixed dial in both
-    // arms (production retrains it far more rarely than codebooks).
+    // 5·hits integers — all read off IvfPqIndex.audit's one row, the
+    // same row IvfPqIndex.maintain gates on. The coarse quantizer is a
+    // fixed dial in both arms (production retrains it far more rarely
+    // than codebooks).
     QueryDef("q270_ivfpq_maintain", Some({
       def encCte(p: String, cb: String, src: String): String = s"""
       ${p}enc AS (SELECT id, bid, sub, code, d2 FROM (
@@ -2821,84 +2696,21 @@ object EmbeddingQueries {
            (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM exr) nb"""
     }),
       (s, dir) => {
-        import graft.ann.{IvfPq, IvfPqIndex, Pq}
+        import graft.ann.IvfPqIndex
         val emb = Tables.read(s, dir, "embeddings")
-        val hist = emb.where(col("vec_id") % 5 =!= 4)
-        val delta = emb.where(col("vec_id") % 5 === 4)
         val coarse = emb.where(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("bid"), col("embedding").as("bvec"))
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q270_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
-        IvfPqIndex.build(hist, "vec_id", "embedding", coarse, m = 4,
-          seedPred = col("id") < 16, iters = 1, stateDir = stDir)
-        IvfPqIndex.refresh(delta, "vec_id", "embedding", stDir)
-        val cc = IvfPqIndex.coarse(s, stDir).get.localCheckpoint()
-        val cb = IvfPqIndex.codebooks(s, stDir).get.localCheckpoint()
-        val inc = IvfPqIndex.codes(s, stDir).get.localCheckpoint()
-        // frozen full re-route + re-encode (gate 1's comparison side)
-        val res = IvfPq.residuals(emb, "vec_id", "embedding", cc)
-          .localCheckpoint() // frozen re-encode AND rebuilt encode read it
-        val full = Pq.assign(Pq.subvectors(res, "id", "rv", 4), cb)
-          .join(res.select("id", "bid"), "id")
-        val drift = inc.select(col("id"), col("sub"),
-            col("bid").as("bi"), col("code").as("ci"))
-          .join(full.select(col("id"), col("sub"),
-            col("bid").as("bf"), col("code").as("cf")),
-            Seq("id", "sub"), "full_outer")
-          .agg(sum(when(col("ci").isNull || col("cf").isNull
-              || col("ci") =!= col("cf") || col("bi") =!= col("bf"), 1L)
-            .otherwise(0L)).as("drift"))
-        val cbReb = Pq.trainCodebooks(res, "id", "rv", 4,
-          col("id") < 16, iters = 1).localCheckpoint()
-        val reb = Pq.assign(Pq.subvectors(res, "id", "rv", 4), cbReb)
-          .join(res.select("id", "bid"), "id")
-          .localCheckpoint() // fit sum + rebuilt ADC read it
-        val qs = inc.agg(count(lit(1)).as("n"),
-          sum(round(col("d2") * 1000000).cast("long")).as("s_inc"))
-        val qr = reb.agg(
-          sum(round(col("d2") * 1000000).cast("long")).as("s_reb"))
-        val counts = emb.agg(count(lit(1)).as("n_vectors"),
-          sum(when(col("vec_id") % 5 =!= 4, 1L).otherwise(0L)).as("n_history"))
-        val probes = IvfPq.probeResiduals(emb.where(col("vec_id") < 10),
-            "vec_id", "embedding", cc, nprobe = 2)
-          .localCheckpoint() // both ADC sides read it
-        val adcM = IvfPq.searchAdc(probes, inc, cb, m = 4, k = 5)
-          .select("q_id", "cand_id")
-        val adcR = IvfPq.searchAdc(probes, reb, cbReb, m = 4, k = 5)
-          .select("q_id", "cand_id")
-        val q = emb.where(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-        val exact = Knn.topKSelect(
-            broadcast(q).join(emb, col("vec_id") =!= col("q_id"))
-              .select(col("q_id"),
-                (-Pq.sqdist(col("qv"), col("embedding"))).as("sim"),
-                col("vec_id").as("cand_id")),
-            org.apache.spark.sql.types.LongType, 5)
-          .select("q_id", "cand_id").localCheckpoint() // 2 hit joins read it
-        val hm = adcM.join(exact, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_maintained"))
-        val hr = adcR.join(exact, Seq("q_id", "cand_id"))
-          .agg(count(lit(1)).as("hits_rebuilt"))
-        val nb = exact.agg(count(lit(1)).as("n_brute"))
-        counts.crossJoin(qs).crossJoin(qr).crossJoin(drift)
-          .crossJoin(hm).crossJoin(hr).crossJoin(nb)
-          .select(col("n_vectors"), col("n_history"),
-            (col("n_vectors") - col("n_history")).as("n_delta"),
-            col("drift"), (col("drift") === 0).as("drift_ok"),
-            round(col("s_inc").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqe_maintained"),
-            round(col("s_reb").cast("double") / lit(1000000.0) / col("n"), 6)
-              .as("mqe_rebuilt"),
-            (lit(4L) * col("s_inc") <= lit(5L) * col("s_reb")).as("fit_ok"),
-            col("hits_maintained"), col("hits_rebuilt"), col("n_brute"),
-            round(col("hits_maintained").cast("double") / col("n_brute"), 6)
-              .as("recall_maintained"),
-            round(col("hits_rebuilt").cast("double") / col("n_brute"), 6)
-              .as("recall_rebuilt"),
-            (col("hits_maintained") * 5 >= col("hits_rebuilt") * 5 - col("n_brute"))
-              .as("recall_ok"))
+        val stDir = freshStateDirs(dir, "q270").head
+        IvfPqIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
+          "embedding", coarse, m = 4, seedPred = col("id") < 16, iters = 1,
+          stateDir = stDir)
+        IvfPqIndex.refresh(emb.where(col("vec_id") % 5 === 4), "vec_id",
+          "embedding", stDir)
+        val (row, _) = IvfPqIndex.audit(s, stDir, "vec_id", "embedding",
+          IvfPqIndex.Audit(emb, col("id") < 16, iters = 1,
+            queryPred = col("vec_id") < 10))
+        auditResult(row, emb, "vec_id", "mqe",
+          lit(4L) * col("s_maintained") <= lit(5L) * col("s_rebuilt"))
       }),
 
     // ---- q271: SEGMENT COMPACTION for the versioned index family —
@@ -2986,10 +2798,7 @@ object EmbeddingQueries {
         val hist = emb.where(col("vec_id") % 5 <= 2)
         val d1 = emb.where(col("vec_id") % 5 === 3)
         val d2 = emb.where(col("vec_id") % 5 === 4)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q271_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = freshStateDirs(dir, "q271").head
         IvfIndex.build(hist, "vec_id", "embedding",
           col("vec_id") % 50 === 0, iters = 2, stDir)
         IvfIndex.refresh(d1, "vec_id", "embedding", stDir, deltaId = "d1")
@@ -3106,10 +2915,7 @@ object EmbeddingQueries {
         val emb = Tables.read(s, dir, "embeddings")
         val hist = emb.where(col("vec_id") % 5 =!= 4)
         val delta = emb.where(col("vec_id") % 5 === 4)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q272_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = freshStateDirs(dir, "q272").head
         IvfIndex.build(hist, "vec_id", "embedding",
           col("vec_id") % 50 === 0, iters = 2, stDir)
         IvfIndex.refresh(delta, "vec_id", "embedding", stDir, deltaId = "d1")
@@ -3280,12 +3086,8 @@ object EmbeddingQueries {
         val trt = toks.where(col("doc_id") % 19 =!= 5)
         val emb = Tables.read(s, dir, "embeddings")
         val tre = emb.where(col("vec_id") % 19 =!= 5)
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        val bmDir = s"${System.getProperty("java.io.tmpdir")}/graft_q284bm_$tag"
-        val ivfDir = s"${System.getProperty("java.io.tmpdir")}/graft_q284iv_$tag"
-        val mDir = s"${System.getProperty("java.io.tmpdir")}/graft_q284mf_$tag"
-        Seq(bmDir, ivfDir, mDir).foreach(EventQueries.cleanupOnExit)
+        val Seq(bmDir, ivfDir, mDir) =
+          freshStateDirs(dir, "q284bm", "q284iv", "q284mf")
         // the serving stack exists BEFORE the verdict: cut 1 — the two
         // single-writer dirs are independent, so the builds overlap
         // from a driver pool (guide §2.6); commits/payloads unchanged
@@ -3432,10 +3234,7 @@ object EmbeddingQueries {
         val hist = corpusAll.where(col("vec_id") % 5 =!= 4)
         val delta = corpusAll.where(col("vec_id") % 5 === 4)
         val dead = corpusAll.where(col("vec_id") % 7 === 3)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q288_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = freshStateDirs(dir, "q288").head
         BandedIndex.build(hist, "vec_id", "embedding", stDir,
           nBands = 8, rowsPerBand = 4, dims = 64)
         // incremental refresh: ONLY the delta projected, replay-guarded
@@ -3685,16 +3484,8 @@ object EmbeddingQueries {
         val seed = toks.where(col("doc_id") % 3 === 0)
         val batch = toks.where(col("doc_id") % 3 === 1)
         val emb = Tables.read(s, dir, "embeddings")
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        val biDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294bi_$tag"
-        val bmDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294bm_$tag"
-        val ivfDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294iv_$tag"
-        val clDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294cl_$tag"
-        val qmDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294qm_$tag"
-        val mDir = s"${System.getProperty("java.io.tmpdir")}/graft_q294mf_$tag"
-        Seq(biDir, bmDir, ivfDir, clDir, qmDir, mDir)
-          .foreach(EventQueries.cleanupOnExit)
+        val Seq(biDir, bmDir, ivfDir, clDir, qmDir, mDir) = freshStateDirs(dir,
+          "q294bi", "q294bm", "q294iv", "q294cl", "q294qm", "q294mf")
         // the pinned quality model: trained ONCE on the seed split,
         // delivered twice under one id (replay no-op), then a cut
         // member like any index
@@ -3912,11 +3703,52 @@ object EmbeddingQueries {
       })
   )
 
-  /** q266/q267/q270/q271/q272/q275 run in a FRESH state dir per
-    * execution (see the query docs); this counter is what makes
-    * "fresh" true within one JVM.
+  /** The state-owning queries (q266, q267, q270–q272, q275, q284, q288,
+    * q294) run in FRESH state dirs per execution: bench reps and
+    * repeated verify runs must each exercise the full build → refresh
+    * cycle, not append segments to a previous run's state. One dir per
+    * name, `<tmpdir>/graft_<name>_<input dir>_p<pid>_<run>`, removed at
+    * JVM exit; the run counter is what makes "fresh" true within one
+    * JVM.
     */
-  private val q266Runs = new java.util.concurrent.atomic.AtomicLong()
+  private def freshStateDirs(dir: String, names: String*): Seq[String] = {
+    val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_p" +
+      ProcessHandle.current.pid + "_" + stateRuns.incrementAndGet()
+    val dirs = names.map(n =>
+      s"${System.getProperty("java.io.tmpdir")}/graft_${n}_$tag")
+    dirs.foreach(EventQueries.cleanupOnExit)
+    dirs
+  }
+  private val stateRuns = new java.util.concurrent.atomic.AtomicLong()
+
+  /** q266 / q267 / q270's result over an index audit row (`IvfIndex` /
+    * `PqIndex` / `IvfPqIndex.audit`): the history/delta split of
+    * `counted` (delta = `idCol` % 5 = 4), drift, both arms' mean
+    * per-vector fit (`mq` = mqs cosine / mqe error), the query's
+    * `fitOk` rule, and recall@k of both arms with the exact-integer
+    * verdict 5·hits_maintained ≥ 5·hits_rebuilt − n_brute (never a
+    * float share).
+    */
+  private def auditResult(row: DataFrame, counted: DataFrame, idCol: String,
+                          mq: String, fitOk: Column): DataFrame =
+    counted.agg(count(lit(1)).as("n_vectors"),
+        sum(when(col(idCol) % 5 =!= 4, 1L).otherwise(0L)).as("n_history"))
+      .crossJoin(row)
+      .select(col("n_vectors"), col("n_history"),
+        (col("n_vectors") - col("n_history")).as("n_delta"),
+        col("drift"), (col("drift") === 0).as("drift_ok"),
+        round(col("s_maintained").cast("double") / lit(1000000.0) / col("n_live"), 6)
+          .as(s"${mq}_maintained"),
+        round(col("s_rebuilt").cast("double") / lit(1000000.0) / col("n_live"), 6)
+          .as(s"${mq}_rebuilt"),
+        fitOk.as("fit_ok"),
+        col("hits_maintained"), col("hits_rebuilt"), col("n_brute"),
+        round(col("hits_maintained").cast("double") / col("n_brute"), 6)
+          .as("recall_maintained"),
+        round(col("hits_rebuilt").cast("double") / col("n_brute"), 6)
+          .as("recall_rebuilt"),
+        (col("hits_maintained") * 5 >= col("hits_rebuilt") * 5 - col("n_brute"))
+          .as("recall_ok"))
 
   /** q275: the dedup-verdict → index-excision composition (defined
     * outside the defs Seq for readability; registered at the end of
@@ -3995,10 +3827,7 @@ object EmbeddingQueries {
         import graft.ann.IvfIndex
         import graft.operators.VersionedState
         val emb = Tables.read(s, dir, "embeddings")
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q275_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q266Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = freshStateDirs(dir, "q275").head
         // the index predates the dedup verdict: built on EVERYTHING.
         // The build (embeddings) and the verdict derivation (documents)
         // are independent inputs — overlap them (guide §2.6)

@@ -56,6 +56,10 @@ class MaintainSpec extends SparkTestBase {
     assert(audited.gates.map(_.gate) === Seq("drift", "fit", "recall"))
     assert(audited.healthy, s"healthy state must pass: ${audited.gates}")
     assert(!audited.corrupted && !audited.buildNeeded)
+    // the audit row's raw numbers ride in `measured`
+    assert(audited.measured("drift") === 0.0)
+    assert(audited.measured("n_live") === 95.0)
+    assert(audited.measured("n_live") === audited.measured("n_one_shot"))
   }
 
   test("IVF maintain: an id-less replay trips the DRIFT gate as Corruption") {
@@ -76,6 +80,8 @@ class MaintainSpec extends SparkTestBase {
     assert(d.isInstanceOf[GateVerdict.Corruption])
     assert(d.detail.contains("replay"),
       "the verdict must point the operator at replay discipline")
+    assert(r.measured("n_live") > r.measured("n_one_shot"),
+      "the duplicated segment shows in the audit row's counts")
   }
 
   test("IVF maintain: a drifted delta distribution trips the FIT gate as BuildNeeded") {
@@ -155,13 +161,14 @@ class MaintainSpec extends SparkTestBase {
     assert(r.corrupted, s"duplicated code rows must trip drift: ${r.gates}")
   }
 
+  private def coarse: DataFrame = Seq(
+      (0L, Array.tabulate(8)(d => (d * 7 % 11).toFloat + 1f)),
+      (1L, Array.tabulate(8)(d => (17 + d * 7 % 11).toFloat % 11f + 1f)))
+    .toDF("bid", "bvec")
+
   test("IvfPqIndex maintain: three typed gates healthy on an undisturbed composed index") {
     import graft.ann.IvfPqIndex
     val dir = freshDir("ivfpq")
-    val coarse = Seq(
-      (0L, Array.tabulate(8)(d => (d * 7 % 11).toFloat + 1f)),
-      (1L, Array.tabulate(8)(d => (17 + d * 7 % 11).toFloat % 11f + 1f)))
-      .toDF("bid", "bvec")
     IvfPqIndex.build(vecs(0 until 30), "vec_id", "embedding", coarse,
       m = 2, col("id") < 8, iters = 2, dir)
     val r = IvfPqIndex.maintain(vecs(30 until 40), "vec_id", "embedding",
@@ -171,6 +178,26 @@ class MaintainSpec extends SparkTestBase {
     assert(r.gates.map(_.gate) === Seq("drift", "fit", "recall"))
     assert(r.healthy, s"healthy composed index must pass: ${r.gates}")
     assert(!r.compacted && r.liveMarkers === 2)
+  }
+
+  test("IvfPqIndex maintain: an id-less replay trips the DRIFT gate as Corruption") {
+    import graft.ann.IvfPqIndex
+    val dir = freshDir("ivfpqdrift")
+    IvfPqIndex.build(vecs(0 until 30), "vec_id", "embedding", coarse,
+      m = 2, col("id") < 8, iters = 1, dir)
+    // the same batch delivered twice WITHOUT a delta id
+    IvfPqIndex.refresh(vecs(30 until 35), "vec_id", "embedding", dir)
+    IvfPqIndex.refresh(vecs(30 until 35), "vec_id", "embedding", dir)
+    val r = IvfPqIndex.maintain(vecs(35 until 40), "vec_id", "embedding",
+      dir, deltaId = "b1", maxLiveMarkers = 99,
+      audit = Some(IvfPqIndex.Audit(vecs(0 until 40), col("id") < 8,
+        iters = 1, queryPred = col("vec_id") < 5)))
+    val d = r.gates.find(_.gate === "drift").get
+    assert(d.isInstanceOf[GateVerdict.Corruption],
+      s"duplicated code rows must surface as Corruption: ${r.gates}")
+    assert(d.detail.contains("replay"),
+      "the verdict must point the operator at replay discipline")
+    assert(r.measured("n_live") > r.measured("n_one_shot"))
   }
 
   test("streaming ingest drives maintain(): foreachBatch batchId as the delta id, restart-replay a no-op") {
