@@ -1,18 +1,20 @@
 package graft.er
 
+import graft.functions.{EvalOnce, RegexpGroups}
 import graft.similarity.DocSimilarity
 import graft.text.{TfIdf, Tokenize}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Ingest for the reference's CSV-with-regex data files
   * (reference: textanalyse/Utils.scala:10-11,14-25,37-49,51-73).
   *
   * The reference parses lines with anchored Java regexes rather than a CSV
   * reader, tags unparsable lines, drops the header by literal id match and
-  * strips `"` characters from ids. We reproduce those semantics with
-  * DataFrame-native `rlike`/`regexp_extract` (same java.util.regex engine →
+  * strips `"` characters from ids. We reproduce those semantics with one
+  * native match per line ([[graft.functions.RegexpGroups]]: the same
+  * java.util.regex engine and `find` as `rlike`/`regexp_extract` →
   * byte-identical group capture, including greedy backtracking across the
   * quoted fields), so corrupt-line accounting and all downstream goldens
   * match. Everything stays distributed — no driver-side parsing.
@@ -28,22 +30,26 @@ object ErIngest {
   private def stripQuotes(c: org.apache.spark.sql.Column) =
     regexp_replace(c, "\"", "")
 
+  /** The groups of `pattern` in each matching line of `path` (column
+    * `g`), the header line (first group `header`) dropped. One match per
+    * line: EvalOnce keeps the optimizer from copying the match into the
+    * filter (`rlike` + one `regexp_extract` per group matched up to six
+    * times per line).
+    */
+  private def parse(spark: SparkSession, path: String, pattern: String, groups: Int,
+                    header: String): DataFrame =
+    spark.read.text(path)
+      .select(EvalOnce(RegexpGroups(col("value"), pattern, groups)).as("g"))
+      .where(col("g").isNotNull && col("g")(0) =!= header)
+
   /** Product table `(id, text)`: text = title + " " + description + " " +
     * manufacturer (empty fields keep their separator — reference
     * Utils.scala:57 uses plain string concatenation).
     */
-  def products(spark: SparkSession, path: String): DataFrame = {
-    val lines = spark.read.text(path)
-    lines
-      .where(col("value").rlike(DataPattern))
-      .where(regexp_extract(col("value"), DataPattern, 1) =!= "\"id\"")
-      .select(
-        stripQuotes(regexp_extract(col("value"), DataPattern, 1)).as("id"),
-        concat(
-          regexp_extract(col("value"), DataPattern, 2), lit(" "),
-          regexp_extract(col("value"), DataPattern, 3), lit(" "),
-          regexp_extract(col("value"), DataPattern, 4)).as("text"))
-  }
+  def products(spark: SparkSession, path: String): DataFrame =
+    parse(spark, path, DataPattern, 4, "\"id\"")
+      .select(stripQuotes(col("g")(0)).as("id"),
+        concat(col("g")(1), lit(" "), col("g")(2), lit(" "), col("g")(3)).as("text"))
 
   /** Lines that fail the product regex (reference prints the first 10 —
     * Utils.scala:22-23; we return them as a DataFrame instead).
@@ -53,12 +59,8 @@ object ErIngest {
 
   /** Gold standard `(id_a, id_b)` of known duplicate pairs. */
   def goldStandard(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .where(col("value").rlike(GoldPattern))
-      .where(regexp_extract(col("value"), GoldPattern, 1) =!= "\"idAmazon\"")
-      .select(
-        stripQuotes(regexp_extract(col("value"), GoldPattern, 1)).as("id_a"),
-        stripQuotes(regexp_extract(col("value"), GoldPattern, 2)).as("id_b"))
+    parse(spark, path, GoldPattern, 2, "\"idAmazon\"")
+      .select(stripQuotes(col("g")(0)).as("id_a"), stripQuotes(col("g")(1)).as("id_b"))
 
   /** Driver-side stopword load (127 words — tiny by contract; reference
     * Utils.scala:27-35).
@@ -70,14 +72,23 @@ object ErIngest {
 /** The reference's end-to-end entity-resolution pipeline, Spark-first:
   * two product catalogs → tokenize → corpus-wide plain-ratio IDF →
   * TF-IDF weights → pairwise cosine (naive cartesian or inverted-index
-  * blocked) → gold-standard evaluation.
+  * broadcast probe) → gold-standard evaluation.
   *
   * Everything is a composition over long-form `(id, token, weight)`
-  * tables; nothing is ever collected to the driver (the reference
-  * collects its IDF dict and full weight maps —
+  * tables. Nothing is collected at construction (the
+  * reference collects its IDF dict and full weight maps —
   * textanalyse/EntityResolution.scala:121,
-  * textanalyse/ScalableEntityResolution.scala:59-62 — which caps it at
-  * driver memory; this formulation scales out).
+  * textanalyse/ScalableEntityResolution.scala:59-62); the scalable path
+  * broadcasts Amazon's packed index inside its own query.
+  *
+  * Only the tables whose recomputation costs more than their cache are
+  * persisted: the IDF (read by both weight tables) and the weight tables
+  * (read by the cosine kernel, the norms and the naive sample). The raw
+  * catalogs, gold and the norms are read once per pass and stay lazy.
+  * The token tables are read twice (corpus IDF, weights) but recomputing
+  * them is cheaper than caching: every scan of a cached table is its own
+  * cache-fill job under AQE, and it would keep the IDF's df and N
+  * branches from sharing one exchange.
   */
 final class ErPipeline(
     spark: SparkSession,
@@ -88,15 +99,15 @@ final class ErPipeline(
 
   val stopWords: Seq[String] = ErIngest.stopwords(spark, stopwordsPath)
 
-  val amazon: DataFrame = ErIngest.products(spark, amazonPath).cache()
-  val google: DataFrame = ErIngest.products(spark, googlePath).cache()
-  val gold: DataFrame = ErIngest.goldStandard(spark, goldPath).cache()
+  val amazon: DataFrame = ErIngest.products(spark, amazonPath)
+  val google: DataFrame = ErIngest.products(spark, googlePath)
+  val gold: DataFrame = ErIngest.goldStandard(spark, goldPath)
 
   private def tokenize(df: DataFrame): DataFrame =
     df.select(col("id"), Tokenize.tokens(col("text"), stopWords).as("tokens"))
 
-  val amazonTokens: DataFrame = tokenize(amazon).cache()
-  val googleTokens: DataFrame = tokenize(google).cache()
+  val amazonTokens: DataFrame = tokenize(amazon)
+  val googleTokens: DataFrame = tokenize(google)
 
   /** Bag union — reference EntityResolution.scala:86-96. */
   val corpus: DataFrame = amazonTokens.union(googleTokens)
@@ -109,6 +120,7 @@ final class ErPipeline(
   /** TF-IDF weights of one side against the CORPUS IDF (the reference
     * weighs both catalogs with the shared dict —
     * EntityResolution.scala:183, ScalableEntityResolution.scala:20).
+    * Per-document TF is narrow, and the IDF broadcasts: no shuffle.
     */
   def weights(tokens: DataFrame): DataFrame =
     TfIdf.termFrequency(tokens, "id", "tokens")
@@ -117,8 +129,8 @@ final class ErPipeline(
 
   lazy val amazonWeights: DataFrame = weights(amazonTokens).cache()
   lazy val googleWeights: DataFrame = weights(googleTokens).cache()
-  lazy val amazonNorms: DataFrame = TfIdf.norms(amazonWeights, "id").cache()
-  lazy val googleNorms: DataFrame = TfIdf.norms(googleWeights, "id").cache()
+  lazy val amazonNorms: DataFrame = TfIdf.norms(amazonWeights, "id")
+  lazy val googleNorms: DataFrame = TfIdf.norms(googleWeights, "id")
 
   /** Naive strategy: every Amazon×Google pair scored (sim 0.0 when no
     * shared token) — reference EntityResolution.scala:133-157.
@@ -133,10 +145,15 @@ final class ErPipeline(
         "id_a", "id_b")
 
   /** Scalable strategy: only pairs sharing ≥1 token are scored — the
-    * long weight table IS the inverted index, so the reference's
-    * build-index → token-join → groupByKey → broadcast-probe chain
-    * (ScalableEntityResolution.scala:64-129) collapses into one
-    * join + aggregate that Catalyst plans.
+    * reference's build-index → broadcast → probe chain
+    * (ScalableEntityResolution.scala:64-129) as one query: Amazon's
+    * weights pack into a token → `(doc, weight)` index that is
+    * broadcast, and each Google document is scored against it inside
+    * one task ([[DocSimilarity.invertedIndexCosine]]). No pair row is
+    * shuffled or aggregated. Amazon is the build side, so its packed
+    * weight table must fit in one task's memory and in a broadcast, as
+    * for any broadcast join. Returns (id_a, id_b, sim), one row per
+    * pair (ids are unique per catalog).
     */
   lazy val scalableSimilarities: DataFrame =
     DocSimilarity.invertedIndexCosine(
@@ -168,23 +185,24 @@ final class ErPipeline(
   * EntityResolution.scala:230-280 (evaluateModel) and
   * ScalableEntityResolution.scala:150-259 (histogram + P/R/F1 sweep).
   *
-  * Where the reference runs one distributed filter+count job per
-  * threshold (100 jobs — ScalableEntityResolution.scala:222-259) plus a
-  * custom mutable `Vector[Int]` accumulator, this computes one binned
-  * histogram in a single shuffle and derives all 101 thresholds with a
-  * window cumulative sum — the formulation that survives 100 TB of pairs.
+  * Gold is the small side of every join here: it is broadcast into the
+  * candidate stream, so candidate pairs are never shuffled. Where the
+  * reference runs one distributed filter+count job per threshold (100
+  * jobs — ScalableEntityResolution.scala:222-259) plus a custom mutable
+  * `Vector[Int]` accumulator, the sweep bins every candidate in one
+  * aggregation and derives all 101 thresholds from the ≤101 bin counts.
   */
 object ErEvaluation {
+
+  private def tagged(gold: DataFrame, tag: String) =
+    broadcast(gold.select(col("id_a"), col("id_b"), lit(true).as(tag)))
 
   /** (duplicateCount, avgSimOfDuplicates, avgSimOfNonDuplicates) —
     * reference evaluateModel (EntityResolution.scala:230-280), but as ONE
     * aggregation pass instead of a join + three separate jobs.
     */
   def evaluateModel(sims: DataFrame, gold: DataFrame): (Long, Double, Double) = {
-    val tagged = sims.join(
-      gold.select(col("id_a"), col("id_b"), lit(true).as("is_dup")),
-      Seq("id_a", "id_b"), "left")
-    val row = tagged.agg(
+    val row = sims.join(tagged(gold, "is_dup"), Seq("id_a", "id_b"), "left").agg(
       count(when(col("is_dup"), lit(1))).as("dups"),
       avg(when(col("is_dup"), col("sim"))).as("avg_dup"),
       avg(when(col("is_dup").isNull, col("sim"))).as("avg_nondup")
@@ -197,98 +215,81 @@ object ErEvaluation {
 
   /** Gold-pair similarities with absent candidates scored 0.0 —
     * reference `gs_value` (ScalableEntityResolution.scala:156-158,321-327).
+    * The candidates meet the broadcast gold pairs first; only the found
+    * pairs (at most |gold|) are broadcast back onto gold.
     */
-  def goldSimilarities(sims: DataFrame, gold: DataFrame): DataFrame =
-    gold.join(sims, Seq("id_a", "id_b"), "left")
+  def goldSimilarities(sims: DataFrame, gold: DataFrame): DataFrame = {
+    val found = sims.join(tagged(gold, "is_dup"), Seq("id_a", "id_b"))
+      .select(col("id_a"), col("id_b"), col("sim"))
+    gold.join(broadcast(found), Seq("id_a", "id_b"), "left")
       .select(col("id_a"), col("id_b"), coalesce(col("sim"), lit(0.0)).as("sim"))
+  }
 
-  /** 101-bin histogram `(bin, n_pairs, n_dups)`, bin = floor(sim*100) —
-    * replaces the reference's `VectorAccumulatorParam` (A9) with a plain
-    * aggregation.
-    */
-  def similarityHistogram(sims: DataFrame, gold: DataFrame): DataFrame =
-    sims.join(
-        gold.select(col("id_a"), col("id_b"), lit(1L).as("is_dup")),
-        Seq("id_a", "id_b"), "left")
-      .groupBy(floor(col("sim") * 100).cast("int").as("bin"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(coalesce(col("is_dup"), lit(0L))).as("n_dups"))
-
-  /** Full precision/recall/F1 sweep over thresholds k/100, k = 0..100.
+  /** Full precision/recall/F1 sweep over thresholds k/100, k = 0..100:
+    * `(bin, tp, fp, fn, precision, recall, fmeasure)`, 101 rows by bin.
     * tp(k) = gold pairs with sim ≥ k/100, fp(k) = non-gold candidates
     * with sim ≥ k/100, fn(k) = |gold| − tp(k)
     * (reference falsepos/falseneg/truepos —
-    * ScalableEntityResolution.scala:222-259). One shuffle + a 101-row
-    * window; the reference launches ~100 jobs.
+    * ScalableEntityResolution.scala:222-259). Gold pairs that are not
+    * candidates score 0.0, the reference's `gs_value` semantics.
+    *
+    * One query: gold is broadcast into the candidate stream (a left
+    * join, so candidates are never shuffled), every candidate lands in
+    * bin floor(sim·100) as gold or not, and the gold rows themselves are
+    * counted in the same aggregation under a NULL bin. The ≤102 count
+    * rows are collected, and the finishing step puts the `n_gold − found`
+    * absent gold pairs in bin 0 and sums the bins from the top. A
+    * candidate binned outside 0..100 counts in no threshold, as before.
     *
     * PRECONDITION: `sims0` must hold at most one row per (id_a, id_b),
-    * and `gold0` exactly one. n_gold is derived as Σ n_dups over the
-    * joined bin table (that is what makes this a single pass), so a
-    * duplicated candidate pair would join the same gold pair twice and
-    * inflate n_gold and tp. Every similarity generator in this library
-    * emits unique pairs (cosine pairs are groupBy(id_a, id_b) outputs;
-    * LSH candidates are `.distinct()`); dedup first if yours does not.
+    * and `gold0` exactly one: `found` counts the candidate rows that
+    * match a gold pair, so a duplicated candidate would be found twice
+    * and the absent count would come out short. Every similarity
+    * generator in this library emits unique pairs (the cosine kernel
+    * scores each pair once; LSH candidates are `.distinct()`); dedup
+    * first if yours does not.
     */
   def prfSweep(sims0: DataFrame, gold0: DataFrame): DataFrame = {
-    // ONE full-outer join covers all three pair classes in a single
-    // pass: candidate-only (isd false, real sim), gold-only (absent
-    // candidate → sim 0.0, the reference's `gs_value` semantics), and
-    // both. No caches, no separate anti-join branch, and no gold-count
-    // branch either — n_gold falls out of the bin table itself (every
-    // gold pair lands in exactly one bin, so n_gold = Σ n_dups).
-    val tagged = sims0
-      .join(gold0.select(col("id_a"), col("id_b"), lit(true).as("isd")),
-        Seq("id_a", "id_b"), "full_outer")
-      .select(floor(coalesce(col("sim"), lit(0.0)) * 100).cast("int").as("bin"),
-        coalesce(col("isd"), lit(false)).as("isd"))
-    val binCounts = tagged
+    val spark = sims0.sparkSession
+    val bin = floor(coalesce(col("sim"), lit(0.0)) * 100).cast("int")
+    val counts = sims0.join(tagged(gold0, "isd"), Seq("id_a", "id_b"), "left")
+      .select(bin.as("bin"), col("isd").isNotNull.as("isd"))
+      .union(gold0.select(lit(null).cast("int").as("bin"), lit(true).as("isd")))
       .groupBy("bin")
       .agg(count(when(col("isd"), lit(1))).as("n_dups"),
         count(when(!col("isd"), lit(1))).as("n_nondups"))
-    val spark = sims0.sparkSession
-    import spark.implicits._
-    val bins = spark.range(0, 101).select(col("id").cast("int").as("bin"))
-      .join(binCounts, Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-        coalesce(col("n_nondups"), lit(0L)).as("n_nondups"))
-    // cumulative-from-the-top counts: everything in bin ≥ k is "predicted
-    // duplicate" at threshold k/100. The unpartitioned window (Spark logs
-    // "No Partition Defined for Window") is INTENTIONAL and safe: its
-    // input is the bounded 101-row bin table at ANY corpus size, so the
-    // single-partition sort is constant work, not a scale hazard.
-    val w = Window.orderBy(col("bin").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // n_gold = Σ n_dups over the full (bounded, 101-row) frame; same
-    // ordering spec as the cumsum so both windows share one sort
-    val wAll = Window.orderBy(col("bin").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val sweep = bins
-      .select(col("bin"),
-        sum(col("n_dups")).over(w).as("tp"),
-        sum(col("n_nondups")).over(w).as("fp"),
-        sum(col("n_dups")).over(wAll).as("n_gold"))
-      .select(col("bin"), col("tp"), col("fp"), (col("n_gold") - col("tp")).as("fn"),
-        col("n_gold"))
-      .withColumn("precision",
-        when(col("tp") + col("fp") === 0, lit(null))
-          .otherwise(col("tp").cast("double") / (col("tp") + col("fp"))))
-      // ANSI mode makes x/0 an ERROR (DuckDB yields NULL) — guard the
-      // empty-gold case explicitly so both engines agree
-      .withColumn("recall",
-        when(col("n_gold") === 0, lit(null).cast("double"))
-          .otherwise(col("tp").cast("double") / col("n_gold")))
-      .drop("n_gold")
-      .withColumn("fmeasure",
-        when(col("precision").isNull || col("precision") + col("recall") === 0, lit(null))
-          .otherwise(lit(2) * col("precision") * col("recall") /
-            (col("precision") + col("recall"))))
-      .orderBy("bin")
-    // materialize the bounded 101-row result locally: callers can reuse
-    // / re-scan it freely (and release their own upstream caches) with
-    // no recomputation and nothing left persisted by the sweep itself
-    val rows = sweep.collect()
+      .collect()
+    val (dups, nondups) = (new Array[Long](101), new Array[Long](101))
+    var (nGold, found) = (0L, 0L)
+    counts.foreach { r =>
+      if (r.isNullAt(0)) nGold = r.getLong(1)
+      else {
+        found += r.getLong(1)
+        val b = r.getInt(0)
+        if (b >= 0 && b <= 100) { dups(b) += r.getLong(1); nondups(b) += r.getLong(2) }
+      }
+    }
+    dups(0) += nGold - found
+    val inRange = dups.sum
+    var (tp, fp) = (0L, 0L)
+    val rows = (100 to 0 by -1).map { b =>
+      tp += dups(b)
+      fp += nondups(b)
+      // the NULL guards mirror DuckDB: no x/0 under ANSI mode either
+      val precision = if (tp + fp == 0) None else Some(tp.toDouble / (tp + fp))
+      val recall = if (inRange == 0) None else Some(tp.toDouble / inRange)
+      val fmeasure = for (p <- precision; r <- recall if p + r != 0) yield 2 * p * r / (p + r)
+      Row(b, tp, fp, inRange - tp, boxed(precision), boxed(recall), boxed(fmeasure))
+    }.reverse
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toSeq.asJava, sweep.schema)
+    spark.createDataFrame(rows.asJava, SweepSchema)
   }
+
+  private def boxed(d: Option[Double]): java.lang.Double = d.map(Double.box).orNull
+
+  private val SweepSchema = StructType(Seq(
+    StructField("bin", IntegerType, nullable = false),
+    StructField("tp", LongType), StructField("fp", LongType), StructField("fn", LongType),
+    StructField("precision", DoubleType), StructField("recall", DoubleType),
+    StructField("fmeasure", DoubleType)))
 }

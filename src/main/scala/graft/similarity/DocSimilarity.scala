@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.functions.{PackPostings, ProbeCosine}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,56 +12,73 @@ import org.apache.spark.sql.functions._
   *  - inverted index + common-token join + broadcast maps
   *    (textanalyse/ScalableEntityResolution.scala:64-129)
   *
-  * Spark-first design: the long-form weight table `(id, token, weight)`
-  * IS the inverted index, so the scalable path collapses to a single
-  * relational expression:
+  * The scalable strategy runs as a broadcast-probe kernel
+  * ([[graft.functions.InvertedIndexKernel]]), planned from stock
+  * operators so it works in any session:
   *
-  *   dot(a,b) = SUM(wA * wB) GROUP BY (aId, bId) over an equi-join on token
+  *  1. build: the build side's `(id, token, weight)` rows are read in
+  *     one task (they all meet in one place anyway, so no gather
+  *     shuffle) and fold into a packed index — token → `(doc, weight)`
+  *     postings plus each doc's squared norm — which is broadcast inside
+  *     the query's execution (a `BroadcastNestedLoopJoin` against that
+  *     single row; building the DataFrame launches no job);
+  *  2. probe: the other side's rows group per document (one shuffle of
+  *     weight rows, none when they are already hash-partitioned by id;
+  *     never a shuffle of pairs), and each probe document is scored
+  *     inside one task by a dense accumulator that emits
+  *     `(id_a, id_b, sim)` for every build doc it shares a token with.
   *
-  * which fuses the reference's J2 (token join) + A8 (groupByKey of common
-  * tokens) + V7 (probe broadcast weight maps) into one shuffle-aggregated
-  * join that Catalyst plans (SMJ/SHJ + partial aggregation). Nothing is
-  * collected to the driver; both sides scale horizontally. Docs sharing
-  * no token never meet (their cosine is 0 in the reference too — NaN/0
-  * handling per SURVEY.md §7 stays with the caller).
+  * No exchange carries pair rows and nothing aggregates pairs. Each dot
+  * and squared norm is summed in one fixed token order, so a cosine is
+  * bit-identical under any partitioning, and an identical token bag
+  * scores exactly 1.0. `sim = dot / sqrt(ssA * ssB)`; a doc with a zero
+  * norm has no cosine and scores no pair. Docs sharing no token never
+  * meet (their cosine is 0 in the reference too).
+  *
+  * Memory bound, as for any broadcast join: the build side's whole
+  * weight table, packed (about 12 bytes per posting plus its ids and
+  * vocabulary), is held by one task while it is packed, then, broadcast,
+  * by every process of the application. Put the smaller catalog on the build
+  * side (`weightsA`, or the corpus of the self variant). The narrow work
+  * that produces the build rows since their last shuffle or cache runs
+  * in that one task too, so feed it a cached or cheaply derived table.
+  *
+  * The `norms` arguments keep the signature of [[cartesianCosine]]: the
+  * kernel derives each squared norm from the weights in the fixed token
+  * order instead, so they must be the norms of the same weights.
   */
 object DocSimilarity {
 
   /** Scalable inverted-index cosine: all pairs sharing ≥1 token.
     *
-    * @param weightsA long-form weights (idA renamed unique), tokens col "token"
-    * @param normsA   per-doc L2 norms
+    * @param weightsA long-form weights of the build side (the broadcast
+    *                 one), tokens col "token"
+    * @param weightsB long-form weights of the probe side
     * @return (idA, idB, sim)
     */
   def invertedIndexCosine(
       weightsA: DataFrame, normsA: DataFrame,
       weightsB: DataFrame, normsB: DataFrame,
-      idA: String, idB: String): DataFrame = {
-    val a = weightsA.select(col(idA), col("token"), col("weight").as("wa"))
-    val b = weightsB.select(col(idB), col("token"), col("weight").as("wb"))
-    val dots = a.join(b, "token")
-      .groupBy(col(idA), col(idB))
-      .agg(sum(col("wa") * col("wb")).as("dot"))
-    dots
-      .join(normsA.select(col(idA), col("norm").as("norm_a")), idA)
-      .join(normsB.select(col(idB), col("norm").as("norm_b")), idB)
-      .select(col(idA), col(idB),
-        (col("dot") / (col("norm_a") * col("norm_b"))).as("sim"))
-  }
+      idA: String, idB: String): DataFrame =
+    probe(weightsA, idA, weightsB, idB, idA, idB, below = false)
 
   /** Self-join variant over one corpus: unordered pairs (a < b). */
-  def selfCosinePairs(weights: DataFrame, norms: DataFrame, id: String): DataFrame = {
-    val wa = weights.select(col(id).as("id_a"), col("token"), col("weight").as("wa"))
-    val wb = weights.select(col(id).as("id_b"), col("token"), col("weight").as("wb"))
-    val na = norms.select(col(id).as("id_a"), col("norm").as("norm_a"))
-    val nb = norms.select(col(id).as("id_b"), col("norm").as("norm_b"))
-    wa.join(wb, "token")
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(sum(col("wa") * col("wb")).as("dot"))
-      .join(na, "id_a").join(nb, "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("dot") / (col("norm_a") * col("norm_b"))).as("sim"))
+  def selfCosinePairs(weights: DataFrame, norms: DataFrame, id: String): DataFrame =
+    probe(weights, id, weights, id, "id_a", "id_b", below = true)
+
+  private def probe(build: DataFrame, buildId: String, docs: DataFrame, docId: String,
+                    outA: String, outB: String, below: Boolean): DataFrame = {
+    val index = build.coalesce(1)
+      .agg(collect_list(struct(col(buildId), col("token"), col("weight").cast("double")))
+        .as("rows"))
+      .select(PackPostings(col("rows")).as("_index"))
+    docs
+      .groupBy(col(docId).as(outB))
+      .agg(collect_list(struct(col("token"), col("weight").cast("double"))).as("_terms"))
+      .crossJoin(broadcast(index))
+      .select(col(outB), inline(ProbeCosine(
+        col("_index"), col(outB), col("_terms"), outA, below)))
+      .select(col(outA), col(outB), col("sim"))
   }
 
   /** Naive cartesian cosine (reference's small-sample strategy,

@@ -1,7 +1,9 @@
 package graft.text
 
+import graft.functions.{EvalOnce, TermFrequencies}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Tokenization with the reference's exact semantics
   * (reference: textanalyse/Utils.scala:75-79 and
@@ -53,8 +55,8 @@ object Tokenize {
   * driver — textanalyse/EntityResolution.scala:121,
   * textanalyse/ScalableEntityResolution.scala:59-62), we keep everything
   * as long tables `(id, token, weight)`. At 100 TB that is the only
-  * layout that shuffles and prunes well, and it makes the similarity
-  * join a plain relational join that Catalyst/AQE can plan.
+  * layout that shuffles and prunes well; the cosine kernel packs it into
+  * its broadcast index itself (graft.similarity.DocSimilarity).
   *
   * IDF parity trap (SURVEY.md §7): the reference computes
   * `idf = N / df` — a PLAIN RATIO, no log, no smoothing
@@ -63,25 +65,18 @@ object Tokenize {
   */
 object TfIdf {
 
-  /** Explode a tokenized corpus `(id, tokens)` into `(id, token)`,
-    * keeping duplicate tokens (needed for term frequency).
+  /** Term frequency `(id, token, tf)`: count(token within doc) /
+    * count(tokens in doc) (reference: textanalyse/EntityResolution.scala:297-315).
+    * Each document's terms are counted from its own token array in ONE
+    * narrow pass ([[graft.functions.TermFrequencies]]): no `(id, token)`
+    * shuffle and no join back of the per-doc totals.
+    *
+    * PRECONDITION: `idCol` is unique per row. Two rows with one id are
+    * two documents here, each with its own frequencies; grouping would
+    * have pooled them.
     */
-  def tokenTable(docs: DataFrame, idCol: String, tokensCol: String): DataFrame =
-    docs.select(col(idCol), explode(col(tokensCol)).as("token"))
-
-  /** Term frequency: count(token within doc) / count(tokens in doc).
-    * (reference: textanalyse/EntityResolution.scala:297-315)
-    * One shuffle on (id, token); the per-doc total is a window over the
-    * same grouping key so it reuses the shuffle output.
-    */
-  def termFrequency(docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
-    val total = docs.select(col(idCol), size(col(tokensCol)).as("n_tokens"))
-    tokenTable(docs, idCol, tokensCol)
-      .groupBy(col(idCol), col("token"))
-      .agg(count(lit(1)).as("cnt"))
-      .join(total, idCol)
-      .select(col(idCol), col("token"), (col("cnt") / col("n_tokens")).as("tf"))
-  }
+  def termFrequency(docs: DataFrame, idCol: String, tokensCol: String): DataFrame =
+    docs.select(col(idCol), inline(TermFrequencies(col(tokensCol))))
 
   /** Document frequency: number of distinct docs containing each token.
     * `array_distinct` BEFORE explode keeps the exploded row count at
@@ -95,18 +90,27 @@ object TfIdf {
 
   /** IDF table `(token, idf)` with the reference's plain-ratio formula
     * `idf = N / df` (textanalyse/EntityResolution.scala:121). Kept as a
-    * DataFrame — broadcast-joined downstream, never collected.
+    * DataFrame — broadcast-joined downstream, never collected. N counts
+    * every row of `docs`; a NULL token is not a term.
     */
   def idf(docs: DataFrame, idCol: String, tokensCol: String): DataFrame = {
-    // N stays a LAZY broadcast scalar (1-row aggregate cross-joined in),
-    // never `docs.count()`: an eager count at plan-construction time runs
-    // a full corpus scan job before every query that touches TF-IDF — and
-    // repeats it when `docs` isn't cached. At 100 TB that is an extra full
-    // pass per query; this way constructing the plan launches zero jobs
-    // and the count materializes inside the query's own job (where
-    // ReuseExchange/AQE can share the scan).
-    val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    documentFrequency(docs, idCol, tokensCol)
+    // N stays a LAZY broadcast scalar, never `docs.count()`: an eager
+    // count at plan-construction time runs a full corpus scan job before
+    // every query that touches TF-IDF. It also rides the df pass itself:
+    // each doc contributes its distinct non-NULL tokens plus one NULL
+    // marker, so ONE explode and ONE shuffle count df per token and N as
+    // the marker's count. The marker row and the term rows are split by
+    // EvalOnce filters, which the optimizer cannot push below the
+    // aggregate, so both branches share that one exchange.
+    val noToken = array(lit(null).cast(StringType))
+    val counts = docs
+      .select(explode(array_union(
+        array_except(coalesce(col(tokensCol), typedLit(Seq.empty[String])), noToken),
+        noToken)).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("df"))
+    val isMarker = EvalOnce(col("token").isNull)
+    val n = counts.where(isMarker).select(col("df").cast("double").as("n_docs"))
+    counts.where(!isMarker)
       .crossJoin(broadcast(n))
       .select(col("token"), (col("n_docs") / col("df")).as("idf"))
   }

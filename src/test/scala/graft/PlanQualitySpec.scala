@@ -108,6 +108,27 @@ class PlanQualitySpec extends SparkTestBase {
       "similarity must block on tokens, not enumerate all pairs")
   }
 
+  /** Aggregates grouped by both pair ids: what the token-join
+    * formulation of the cosine needed and the broadcast probe does not. */
+  private def pairAggregates(plan: Seq[SparkPlan]): Seq[SparkPlan] = plan.collect {
+    case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+      if Set("id_a", "id_b").subsetOf(a.groupingExpressions.flatMap(_.references.map(_.name)).toSet) => a
+  }
+
+  test("q26 and the ER scalable path: broadcast probe, no (id_a, id_b) aggregate, no pair shuffle") {
+    val q26 = collectAll(executed(q("q26_cosine_pairs")))
+    assert(pairAggregates(q26).isEmpty, "q26 must not aggregate pairs")
+    assert(q26.exists(_.nodeName.contains("BroadcastNestedLoopJoin")),
+      "the packed index must reach the probe as a broadcast")
+    val er = ErFixture.pipeline(spark, ErFixture.a, ErFixture.b, ErFixture.gold)
+    val sims = collectAll(executed(er.scalableSimilarities))
+    assert(pairAggregates(sims).isEmpty, "scalableSimilarities must not aggregate pairs")
+    val pairShuffles = sims.collect {
+      case s: ShuffleExchangeExec if Set("id_a", "id_b").subsetOf(s.output.map(_.name).toSet) => s
+    }
+    assert(pairShuffles.isEmpty, s"no exchange may carry pair rows:\n${pairShuffles.mkString("\n")}")
+  }
+
   test("q34 brute-force kNN: query side broadcasts; corpus is never shuffled") {
     val plan = collectAll(executed(q("q34_knn_brute")))
     // scoring phase = broadcast nested loop over the corpus; the only
@@ -151,10 +172,18 @@ class PlanQualitySpec extends SparkTestBase {
       val w = text.TfIdf.weights(d, "doc_id", "tokens")
       val n = text.TfIdf.norms(w, "doc_id")
       n.queryExecution.optimizedPlan // force analysis + optimization, no execution
+      // the cosine kernels broadcast their index inside the query's own
+      // execution: building and planning them runs nothing either
+      def side(df: DataFrame, id: String) = df.withColumnRenamed("doc_id", id)
+      Seq(
+        similarity.DocSimilarity.invertedIndexCosine(side(w, "id_a"), side(n, "id_a"),
+          side(w, "id_b"), side(n, "id_b"), "id_a", "id_b"),
+        similarity.DocSimilarity.selfCosinePairs(w, n, "doc_id")
+      ).foreach(_.queryExecution.executedPlan)
     } finally sc.clearJobGroup()
     Thread.sleep(300) // listener bus drains async
     assert(sc.statusTracker.getJobIdsForGroup("tfidf-construct").isEmpty,
-      "TF-IDF plan construction must not launch jobs")
+      "TF-IDF and cosine plan construction must not launch jobs")
   }
 
   test("q67 decontamination: benchmark shingle set broadcasts; never a cartesian") {
@@ -1396,10 +1425,6 @@ class PlanQualitySpec extends SparkTestBase {
   // a global window anywhere is stale and fails too.
   test("catalog sweep: no WindowExec without partition keys outside the bounded-domain allowlist") {
     val allowlist: Map[String, String] = Map(
-      "q43_er_prf_sweep" -> ("prfSweep's cumulative-from-the-top counts ride " +
-        "the EXACTLY-101-row bin table (spark.range(0,101) left join) — " +
-        "bounded by construction at any corpus size; visible only to the " +
-        "listener capture because the sweep returns collected rows"),
       "q107_token_budget" -> ("BudgetSelect's running sum rides the ≤1001-row " +
         "score-bucket table; only the boundary bucket orders per-doc"),
       "q114_vocab_growth" -> "cumulative curve over EXACTLY 10 decile rows",
