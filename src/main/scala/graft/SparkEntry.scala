@@ -26,8 +26,7 @@ object SparkEntry {
       .where(col("doc_id") < 200)
       .select(col("doc_id"), text.Tokenize.tokens(col("text"), TextQueries.Stop).as("tokens"))
     val w = text.TfIdf.weights(d, "doc_id", "tokens")
-    val n = text.TfIdf.norms(w, "doc_id")
-    similarity.DocSimilarity.selfCosinePairs(w, n, "doc_id")
+    similarity.DocSimilarity.selfCosinePairs(w, "doc_id")
       .orderBy(col("sim").desc, col("id_a"), col("id_b"))
       .limit(50)
   }

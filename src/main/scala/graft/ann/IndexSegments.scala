@@ -539,3 +539,46 @@ private[graft] object IndexSegments {
     }
   }
 }
+
+/** The lifecycle calls [[IvfIndex]], [[PqIndex]] and [[IvfPqIndex]]
+  * share over their [[IndexSegments]] layout, given the dial tables
+  * each version carries beside its segment.
+  */
+private[graft] trait SegmentedIndex {
+
+  /** The dial tables every version carries forward unchanged. */
+  protected def dials: Seq[String]
+
+  /** Delete `ids` (first column) from the live index: commits a
+    * TOMBSTONE version (the dial tables carried forward + the id
+    * table). Earlier segments' rows for those ids vanish from the live
+    * relation; a later refresh may re-add an id (the
+    * delete-then-refresh ordering q272 gates). Physical excision
+    * happens at the next [[compact]].
+    */
+  def delete(ids: DataFrame, stateDir: String, deltaId: String = ""): Long =
+    IndexSegments.commitTombstone(ids, stateDir, dials, deltaId)
+
+  /** Fold every segment since the last base into ONE `base-compact`
+    * version — dial tables copied, NO retrain (encodings are immutable
+    * under frozen dials), tombstoned rows physically excised; one
+    * marker covers the dials and the folded segment, so a crash
+    * mid-compaction can never pair folded codes with a half-copied
+    * dial table — and GC below the retention floor (the default keeps
+    * the folded horizon alive for in-flight readers; reclaim with
+    * [[gc]] or the next compact). Delivered delta ids ride the
+    * sidecar, so the replay guard survives compaction. Bounds the
+    * segment fan-out and the driver-side marker reads; q271 gates
+    * `compacted ≡ pre-compaction union` hash-exact.
+    */
+  def compact(spark: SparkSession, stateDir: String,
+              retainHorizons: Int = 1,
+              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long =
+    IndexSegments.compact(spark, stateDir, dials, retainHorizons, maxDelivered)
+
+  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
+    * alive — call once in-flight readers of the old horizon are done.
+    */
+  def gc(spark: SparkSession, stateDir: String): Unit =
+    IndexSegments.gcOldHorizons(spark, stateDir)
+}

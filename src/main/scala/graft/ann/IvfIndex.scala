@@ -54,7 +54,9 @@ import org.apache.spark.sql.functions._
   * previous index intact; re-run it. [[delete]] tombstones ids;
   * [[compact]] folds the segment tail and excises tombstones.
   */
-object IvfIndex {
+object IvfIndex extends SegmentedIndex {
+
+  protected val dials: Seq[String] = Seq("centroids")
 
   /** Frozen-centroid routing: (id, centroid_id, cs) — each vector's
     * most-cosine-similar centroid, ties to the smaller centroid id,
@@ -124,38 +126,6 @@ object IvfIndex {
         Seq("centroids")) { case Seq(cents) =>
       assignTo(delta, idCol, vecCol, cents)
     }
-
-  /** Delete `ids` (first column) from the live index: commits a
-    * TOMBSTONE version (centroids carried forward + the id table).
-    * Earlier segments' rows for those ids vanish from
-    * [[assignments]]; a later [[refresh]] may re-add an id (the
-    * delete-then-refresh ordering q272 gates). Physical excision
-    * happens at the next [[compact]].
-    */
-  def delete(ids: DataFrame, stateDir: String, deltaId: String = ""): Long =
-    IndexSegments.commitTombstone(ids, stateDir, Seq("centroids"), deltaId)
-
-  /** Fold every segment since the last base into ONE `base-compact`
-    * version — centroids copied, NO retrain (assignments are immutable
-    * under frozen centroids), tombstoned rows physically excised — and
-    * GC below the retention floor (default keeps the folded horizon
-    * alive for in-flight readers; reclaim with [[gc]] or the next
-    * compact). Delivered delta ids ride the sidecar, so the replay
-    * guard survives compaction. Bounds [[assignments]]' segment
-    * fan-out and the driver-side marker reads; q271 gates
-    * `compacted ≡ pre-compaction union` hash-exact.
-    */
-  def compact(spark: SparkSession, stateDir: String,
-              retainHorizons: Int = 1,
-              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long =
-    IndexSegments.compact(spark, stateDir, Seq("centroids"), retainHorizons,
-      maxDelivered)
-
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
-  def gc(spark: SparkSession, stateDir: String): Unit =
-    IndexSegments.gcOldHorizons(spark, stateDir)
 
   /** Periodic-audit dials for [[maintain]]: `corpus` is the full live
     * vector set the gates recompute against (the audit's cost IS a

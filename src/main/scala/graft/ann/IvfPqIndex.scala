@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   * (IvfPqIndexSpec pins them); q270 gates drift ≡ 0 / retrain fit /
   * ADC recall against the full rebuild.
   */
-object IvfPqIndex {
+object IvfPqIndex extends SegmentedIndex {
+
+  protected val dials: Seq[String] = Seq("coarse", "codebooks")
 
   /** Full (re)build: store the coarse quantizer, train residual
     * codebooks on `emb` (residuals computed against the coarse table
@@ -89,33 +91,6 @@ object IvfPqIndex {
     */
   def codes(spark: SparkSession, stateDir: String): Option[DataFrame] =
     IndexSegments.live(spark, stateDir)
-
-  /** Delete `ids` (first column) from the live code table via a
-    * TOMBSTONE version (coarse table + codebooks carried forward);
-    * physical excision at the next [[compact]].
-    */
-  def delete(ids: DataFrame, stateDir: String, deltaId: String = ""): Long =
-    IndexSegments.commitTombstone(ids, stateDir, Seq("coarse", "codebooks"),
-      deltaId)
-
-  /** Fold every code segment since the last base into ONE
-    * `base-compact` version — ONE marker still covers coarse +
-    * codebooks + segment, so a crash mid-compaction can never mix
-    * folded codes with a half-copied quantizer — and GC below the
-    * retention floor (default keeps the folded horizon alive for
-    * in-flight readers; reclaim with [[gc]] or the next compact).
-    */
-  def compact(spark: SparkSession, stateDir: String,
-              retainHorizons: Int = 1,
-              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long =
-    IndexSegments.compact(spark, stateDir, Seq("coarse", "codebooks"),
-      retainHorizons, maxDelivered)
-
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
-  def gc(spark: SparkSession, stateDir: String): Unit =
-    IndexSegments.gcOldHorizons(spark, stateDir)
 
   /** Periodic-audit dials for [[maintain]] — [[PqIndex.Audit]]'s
     * composed sibling; `nprobe` sizes the ADC search's bucket probes.

@@ -29,7 +29,9 @@ import org.apache.spark.sql.functions._
   * sub-quantization error at encode time, rides along as the audit
   * column the fit gate reads without re-joining raw vectors.
   */
-object PqIndex {
+object PqIndex extends SegmentedIndex {
+
+  protected val dials: Seq[String] = Seq("codebooks")
 
   /** Full (re)build: train per-subspace codebooks on `emb`
     * ([[Pq.trainCodebooks]] — deterministic from `seedPred` seeds),
@@ -73,31 +75,6 @@ object PqIndex {
         Seq("codebooks")) { case Seq(cb) =>
       Pq.assign(Pq.subvectors(delta, idCol, vecCol, Pq.storedM(cb, stateDir)), cb)
     }
-
-  /** Delete `ids` (first column) from the live code table via a
-    * TOMBSTONE version (codebooks carried forward); physical excision
-    * at the next [[compact]]. Semantics in [[IndexSegments]].
-    */
-  def delete(ids: DataFrame, stateDir: String, deltaId: String = ""): Long =
-    IndexSegments.commitTombstone(ids, stateDir, Seq("codebooks"), deltaId)
-
-  /** Fold every code segment since the last base into ONE
-    * `base-compact` version (codebooks copied, no retrain, tombstones
-    * excised) and GC below the retention floor (default keeps the
-    * folded horizon alive for in-flight readers; reclaim with [[gc]]
-    * or the next compact). Delivered delta ids ride the sidecar.
-    */
-  def compact(spark: SparkSession, stateDir: String,
-              retainHorizons: Int = 1,
-              maxDelivered: Int = IndexSegments.DefaultMaxDelivered): Long =
-    IndexSegments.compact(spark, stateDir, Seq("codebooks"), retainHorizons,
-      maxDelivered)
-
-  /** Reclaim the pre-compaction horizon a retaining [[compact]] left
-    * alive — call once in-flight readers of the old horizon are done.
-    */
-  def gc(spark: SparkSession, stateDir: String): Unit =
-    IndexSegments.gcOldHorizons(spark, stateDir)
 
   /** Periodic-audit dials for [[maintain]] — [[IvfIndex.Audit]]'s PQ
     * sibling: `fitRatioMilli` is q267's criterion (the maintained

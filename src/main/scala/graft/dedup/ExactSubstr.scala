@@ -171,7 +171,7 @@ object ExactSubstr {
     * as a 60-bit BIGINT): the corpus-sized exchange and the dup-side
     * broadcast/shuffle carry an 8-byte primitive instead of a 32-char
     * string — roughly half the row bytes at 19.5M windows (the
-    * ProfileExactSubstr dial), which is what lets the pass run in the
+    * `graft.Profile exactsubstr` dial), which is what lets the pass run in the
     * default 8 GB fork. md5 STRINGS remain the state and oracle
     * boundary ([[windowHashes]]/[[hashCounts]] are unchanged). A
     * 60-bit collision between distinct md5s needs ~2^30 windows for

@@ -158,9 +158,7 @@ final class ErPipeline(
   lazy val scalableSimilarities: DataFrame =
     DocSimilarity.invertedIndexCosine(
         amazonWeights.withColumnRenamed("id", "id_a"),
-        amazonNorms.withColumnRenamed("id", "id_a"),
         googleWeights.withColumnRenamed("id", "id_b"),
-        googleNorms.withColumnRenamed("id", "id_b"),
         "id_a", "id_b")
 
   /** Ad-hoc two-string document similarity against the corpus IDF —
@@ -170,12 +168,9 @@ final class ErPipeline(
     import spark.implicits._
     val docs = Seq(("a", textA), ("b", textB)).toDF("id", "text")
     val w = weights(tokenize(docs))
-    val n = TfIdf.norms(w, "id")
     val sims = DocSimilarity.invertedIndexCosine(
       w.where(col("id") === "a").withColumnRenamed("id", "id_a"),
-      n.where(col("id") === "a").withColumnRenamed("id", "id_a"),
       w.where(col("id") === "b").withColumnRenamed("id", "id_b"),
-      n.where(col("id") === "b").withColumnRenamed("id", "id_b"),
       "id_a", "id_b")
     sims.select("sim").collect().headOption.map(_.getDouble(0)).getOrElse(0.0)
   }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * against nBits literal arrays inside one projection — each call
   * re-unwraps the literal `GenericArrayData` element-by-element, and a
   * 64-plane projection is past the point where whole-stage codegen
-  * keeps the pipeline fused. Measured on the ProfileBandedIndex
+  * keeps the pipeline fused. Measured on the `graft.Profile banded`
   * synthetic corpus, banding cost ~200 µs/vector; this kernel holds
   * the planes as primitive float arrays built once per (nBits, dims)
   * and walks them in one loop.

@@ -28,18 +28,27 @@ object FileScans {
   def executedScans(df: DataFrame,
                     pathPart: Option[String] = None): Seq[FileSourceScanExec] = {
     df.collect()
+    scansAfterRun(df, pathPart)
+  }
+
+  /** As [[executedScans]], for a `df` whose own plan already ran (a
+    * `collect()`; `head()` runs a different, limited plan).
+    */
+  def scansAfterRun(df: DataFrame,
+                    pathPart: Option[String] = None): Seq[FileSourceScanExec] =
     scans(df.queryExecution.executedPlan)
       .filter(s => pathPart.forall(p =>
         s.relation.location.rootPaths.exists(_.toString.contains(p))))
-  }
 
   /** (selected file count, selected bytes) across the matching scans —
     * the deterministic post-pruning footprint a cold store charges.
     */
   def selected(df: DataFrame,
-               pathPart: Option[String] = None): (Long, Long) = {
-    val ps = executedScans(df, pathPart)
+               pathPart: Option[String] = None): (Long, Long) =
+    footprint(executedScans(df, pathPart))
+
+  /** (selected file count, selected bytes) of executed scans. */
+  def footprint(ps: Seq[FileSourceScanExec]): (Long, Long) =
     (ps.map(_.metrics("numFiles").value).sum,
       ps.map(_.metrics("filesSize").value).sum)
-  }
 }

@@ -24,7 +24,7 @@ object EvalQueries {
   private def sims(s: SparkSession, dir: String): DataFrame = {
     val d = tokenized(s, dir)
     val w = TfIdf.weights(d, "doc_id", "tokens")
-    DocSimilarity.selfCosinePairs(w, TfIdf.norms(w, "doc_id"), "doc_id")
+    DocSimilarity.selfCosinePairs(w, "doc_id")
   }
 
   /** Gold = the 25 most-bigram-Jaccard-similar pairs (total order with
@@ -147,7 +147,7 @@ object EvalQueries {
           // dropped d.count() used to cost, and after this job both
           // caches are warm for sims and the Jaccard gold branch.
           w.count()
-          val sims = DocSimilarity.selfCosinePairs(w, TfIdf.norms(w, "doc_id"), "doc_id")
+          val sims = DocSimilarity.selfCosinePairs(w, "doc_id")
           val g = Dedup.bigramJaccardPairs(d, "doc_id", "tokens")
             .orderBy(col("jaccard").desc, col("id_a"), col("id_b")).limit(25)
             .select("id_a", "id_b")

@@ -344,8 +344,7 @@ object TextQueries {
       (s, dir) => {
         val d = tokenized(s, dir).where(col("doc_id") < 120)
         val w = TfIdf.weights(d, "doc_id", "tokens")
-        val n = TfIdf.norms(w, "doc_id")
-        DocSimilarity.selfCosinePairs(w, n, "doc_id")
+        DocSimilarity.selfCosinePairs(w, "doc_id")
           .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
           .orderBy("id_a", "id_b")
       }),

@@ -43,9 +43,8 @@ import org.apache.spark.sql.functions._
   * that produces the build rows since their last shuffle or cache runs
   * in that one task too, so feed it a cached or cheaply derived table.
   *
-  * The `norms` arguments keep the signature of [[cartesianCosine]]: the
-  * kernel derives each squared norm from the weights in the fixed token
-  * order instead, so they must be the norms of the same weights.
+  * Unlike [[cartesianCosine]], the kernel takes no norms table: it
+  * derives each squared norm from the weights themselves.
   */
 object DocSimilarity {
 
@@ -56,14 +55,12 @@ object DocSimilarity {
     * @param weightsB long-form weights of the probe side
     * @return (idA, idB, sim)
     */
-  def invertedIndexCosine(
-      weightsA: DataFrame, normsA: DataFrame,
-      weightsB: DataFrame, normsB: DataFrame,
-      idA: String, idB: String): DataFrame =
+  def invertedIndexCosine(weightsA: DataFrame, weightsB: DataFrame,
+                          idA: String, idB: String): DataFrame =
     probe(weightsA, idA, weightsB, idB, idA, idB, below = false)
 
   /** Self-join variant over one corpus: unordered pairs (a < b). */
-  def selfCosinePairs(weights: DataFrame, norms: DataFrame, id: String): DataFrame =
+  def selfCosinePairs(weights: DataFrame, id: String): DataFrame =
     probe(weights, id, weights, id, "id_a", "id_b", below = true)
 
   private def probe(build: DataFrame, buildId: String, docs: DataFrame, docId: String,

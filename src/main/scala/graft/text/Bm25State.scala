@@ -58,8 +58,8 @@ import org.apache.spark.sql.functions._
   * stats (N, avgdl) are one doc-count-sized agg folding to one row,
   * computed once per manifest cut by a serving layer ([[stats]] →
   * `precomputedStats`) — with it, a query's total selected bytes are
-  * the pruned postings buckets alone (ProfileBm25's
-  * `selected-bytes-total` column). The segment fan-out and the
+  * the pruned postings buckets alone (`graft.Profile bm25`'s
+  * `scan_mb_serve_total` field). The segment fan-out and the
   * driver-side marker scan are bounded by [[compact]], exactly like
   * the rest of the family.
   */

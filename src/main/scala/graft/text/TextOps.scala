@@ -124,11 +124,11 @@ object TfIdf {
       .select(col(idCol), col("token"), (col("tf") * col("idf")).as("weight"))
   }
 
-  /** Per-document L2 norms `(id, norm)` of the TF-IDF vectors —
-    * precomputed once so the pairwise cosine never recomputes them
-    * (reference: textanalyse/ScalableEntityResolution.scala:32-35, but
-    * there the norms are collected to the driver; here they stay
-    * distributed and are joined in).
+  /** Per-document L2 norms `(id, norm)` of the TF-IDF vectors — the
+    * denominators [[graft.similarity.DocSimilarity.cartesianCosine]]
+    * joins in (reference: textanalyse/ScalableEntityResolution.scala:32-35,
+    * but there the norms are collected to the driver; here they stay
+    * distributed).
     */
   def norms(weights: DataFrame, idCol: String): DataFrame =
     weights.groupBy(col(idCol))

@@ -121,11 +121,9 @@ class ErPipelineSpec extends SparkTestBase {
 
   test("selfCosinePairs is the a < b half of the two-sided kernel") {
     val w = er.amazonWeights
-    val self = DocSimilarity.selfCosinePairs(w, er.amazonNorms, "id")
+    val self = DocSimilarity.selfCosinePairs(w, "id")
     val both = pairs(DocSimilarity.invertedIndexCosine(
-      w.withColumnRenamed("id", "id_a"), er.amazonNorms.withColumnRenamed("id", "id_a"),
-      w.withColumnRenamed("id", "id_b"), er.amazonNorms.withColumnRenamed("id", "id_b"),
-      "id_a", "id_b"))
+      w.withColumnRenamed("id", "id_a"), w.withColumnRenamed("id", "id_b"), "id_a", "id_b"))
     val got = pairs(self)
     assert(got.keySet == both.keySet.filter { case (x, y) => x < y })
     assert(got.forall { case (k, s) => s == both(k) })
@@ -145,9 +143,7 @@ class ErPipelineSpec extends SparkTestBase {
         n.fold(r)(r.repartition(_))
       }
       pairs(DocSimilarity.invertedIndexCosine(
-        side(er.amazonWeights, "id_a"), er.amazonNorms.withColumnRenamed("id", "id_a"),
-        side(er.googleWeights, "id_b"), er.googleNorms.withColumnRenamed("id", "id_b"),
-        "id_a", "id_b"))
+        side(er.amazonWeights, "id_a"), side(er.googleWeights, "id_b"), "id_a", "id_b"))
     }
     try {
       for (parts <- Seq("1", "7"); aqe <- Seq("true", "false"); input <- Seq(None, Some(1), Some(8))) {

@@ -176,9 +176,9 @@ class PlanQualitySpec extends SparkTestBase {
       // execution: building and planning them runs nothing either
       def side(df: DataFrame, id: String) = df.withColumnRenamed("doc_id", id)
       Seq(
-        similarity.DocSimilarity.invertedIndexCosine(side(w, "id_a"), side(n, "id_a"),
-          side(w, "id_b"), side(n, "id_b"), "id_a", "id_b"),
-        similarity.DocSimilarity.selfCosinePairs(w, n, "doc_id")
+        similarity.DocSimilarity.invertedIndexCosine(side(w, "id_a"), side(w, "id_b"),
+          "id_a", "id_b"),
+        similarity.DocSimilarity.selfCosinePairs(w, "doc_id")
       ).foreach(_.queryExecution.executedPlan)
     } finally sc.clearJobGroup()
     Thread.sleep(300) // listener bus drains async

@@ -48,9 +48,7 @@ class VectorMathSpec extends SparkTestBase {
     val v2 = Seq(("y", "a", 5.0), ("y", "c", 2.0), ("y", "e", 7.0))
       .toDF("id", "token", "weight")
     val sim = DocSimilarity.invertedIndexCosine(
-        v1.withColumnRenamed("id", "id_a"), TfIdf.norms(v1, "id").withColumnRenamed("id", "id_a"),
-        v2.withColumnRenamed("id", "id_b"), TfIdf.norms(v2, "id").withColumnRenamed("id", "id_b"),
-        "id_a", "id_b")
+        v1.withColumnRenamed("id", "id_a"), v2.withColumnRenamed("id", "id_b"), "id_a", "id_b")
       .collect()(0).getAs[Double]("sim")
     assert(math.abs(sim - 0.35805743701971) < 1e-6)
   }
