@@ -38,7 +38,7 @@ private[graft] object ScaleChecks {
     (rows, FileScans.footprint(FileScans.scansAfterRun(df, part)))
   }
 
-  /** `bm25 [sizes] [reps] [splits]`: does `Bm25State`'s bucket-partitioned
+  /** `bm25 [sizes] [reps]`: does `Bm25State`'s bucket-partitioned
     * postings layout pay at scale? The catalog exercises the index at
     * sf0.1 (~60k docs), where a query's cost is dominated by fixed
     * overheads; the 100 TB claim is that a k-term query's cost scales
@@ -56,9 +56,10 @@ private[graft] object ScaleChecks {
     *  - `refresh` — a FIXED 2000-doc batch against the stored index
     *    (must be flat in corpus size: only the batch is tokenized);
     *  - `query_pruned_split<splits>` — the pruned query on a second
-    *    build written with `writeSplits = splits` (default 32: at toy
-    *    sizes that is 64 × 32 files per commit, which is what the check
-    *    measures, and what makes it slow to build).
+    *    build written with `writeSplits = splits`, one split per 100
+    *    docs up to 32 (32 at every default size: 64 × 32 files per
+    *    commit, which is what the check measures, and what makes it
+    *    slow to build; a toy corpus gets a toy layout).
     *
     * Sizes are comma-separated doc counts, default
     * `200000,800000,3200000` (× 60 tokens/doc over a 50k-term
@@ -66,7 +67,6 @@ private[graft] object ScaleChecks {
     */
   def bm25(spark: SparkSession, args: Seq[String]): Summary = {
     val reps = arg(args, 1, "3").toInt
-    val splits = arg(args, 2, "32").toInt
     val V = 50000 // vocabulary
     val terms = Seq("t17", "t4242", "t31337") // the 3-term query
     // deterministic synthetic docs: 60 tokens each, uniform-ish vocab
@@ -139,6 +139,7 @@ private[graft] object ScaleChecks {
         // files — the corpus-sized write parallelizes AND the pruned
         // read stops bin-packing a whole bucket into one input split
         val sdir = s"$root/split"
+        val splits = math.min(32L, math.max(1L, n / 100)).toInt
         Bm25State.build(corpus(n), "doc_id", "tokens", sdir, buckets = 64,
           writeSplits = splits)
         require(top(Bm25State.topK(spark, sdir, terms, 10).collect().toSeq) == pruned0,
@@ -192,14 +193,18 @@ private[graft] object ScaleChecks {
     *    population a screen exists to catch), the rest are unique-ish;
     *    the one-shot reference is `Dedup.incrementalNearDupCandidates`.
     *  - `srp`: SRP chunks over 64-dim embeddings, banded 4 × 16
-    *    (65536-value chunks — selective enough that only PLANTED dups
-    *    collide; random 4-bit chunks would candidate every probe
-    *    against 1/16 of the corpus, which is LSH physics, not an index
-    *    property). Every vector is one of 48 cluster sign-patterns
+    *    (65536-value chunks; random 4-bit chunks would candidate every
+    *    probe against 1/16 of the corpus, which is LSH physics, not an
+    *    index property). Every vector is one of 48 cluster patterns
     *    (copies — magnitude exact, so chunks are cluster-determined);
     *    every 100th is the shared TEMPLATE pattern the fresh probes
-    *    duplicate; fresh uniques use 8 disjoint patterns, so their
-    *    buckets are (near-)empty on the corpus side.
+    *    duplicate. Known defect: the 8 fresh "unique" patterns are NOT
+    *    disjoint from the corpus. A pattern is `((31·seed + 17j) mod
+    *    101 − 50) / 50`, and each fresh seed `48 + id` sits one residue
+    *    from a cluster seed `id % 48`, so the two vectors differ in one
+    *    component and share SRP chunks. The dial's `n_candidates`
+    *    therefore counts cluster collisions as well as the planted dups
+    *    (9,682 at 20,000 docs, where the token dial finds 400).
     *
     * Sizes are comma-separated doc counts, default
     * `200000,800000,3200000`; reps default 3.

@@ -22,10 +22,10 @@ class ProfileSpec extends SparkTestBase {
       case _ => false
     }
 
-  // doc 182 is the first to hold a query term; 2 write splits, not
-  // the default 32: a 64 × 32-file commit alone takes ~45 s at 4 cores
+  // doc 182 is the first to hold a query term; 200 docs get 2 write
+  // splits, not 32: a 64 × 32-file commit alone takes ~45 s at 4 cores
   test("bm25: pruned, full-scan, serving and split layouts agree; scans are counted") {
-    val s = run("bm25", "200", "1", "2")
+    val s = run("bm25", "200", "1")
     for (k <- Seq("scan_files_pruned", "scan_mb_pruned", "scan_mb_fullscan",
                   "scan_mb_serve_total")) {
       assert(field(s, k).keySet == Set("200"), k)
