@@ -133,8 +133,10 @@ final class ErPipeline(
   lazy val googleNorms: DataFrame = TfIdf.norms(googleWeights, "id")
 
   /** Naive strategy: every Amazon×Google pair scored (sim 0.0 when no
-    * shared token) — reference EntityResolution.scala:133-157.
-    * Returns (id_a, id_b, sim).
+    * shared token) — reference EntityResolution.scala:133-157. The
+    * pairs come from the norm tables' ids (docs with ≥1 weighted
+    * token); the scores are [[scalableSimilarities]]' kernel, so every
+    * nonzero pair carries the same bits as there. Returns (id_a, id_b, sim).
     */
   lazy val naiveSimilarities: DataFrame =
     DocSimilarity.cartesianCosine(

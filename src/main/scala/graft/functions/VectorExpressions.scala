@@ -213,8 +213,6 @@ object VectorFunctions {
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     VectorFunctions.sqlFunctions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.CosineCrossJoinElimination)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScratchDirs, Tables}
 import graft.ann.{Knn, Mmr, Project}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -2441,7 +2441,7 @@ object EmbeddingQueries {
       (s, dir) => {
         import graft.ann.IvfIndex
         val emb = Tables.read(s, dir, "embeddings")
-        val stDir = freshStateDirs(dir, "q266").head
+        val stDir = ScratchDirs.fresh(dir, "q266").head
         // stored index: trained + routed on HISTORY, committed
         IvfIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
           "embedding", col("vec_id") % 50 === 0, iters = 2, stDir)
@@ -2553,7 +2553,7 @@ object EmbeddingQueries {
       (s, dir) => {
         import graft.ann.PqIndex
         val emb = Tables.read(s, dir, "embeddings")
-        val stDir = freshStateDirs(dir, "q267").head
+        val stDir = ScratchDirs.fresh(dir, "q267").head
         PqIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
           "embedding", m = 4, seedPred = col("vec_id") < 16, iters = 2,
           stateDir = stDir)
@@ -2700,7 +2700,7 @@ object EmbeddingQueries {
         val emb = Tables.read(s, dir, "embeddings")
         val coarse = emb.where(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("bid"), col("embedding").as("bvec"))
-        val stDir = freshStateDirs(dir, "q270").head
+        val stDir = ScratchDirs.fresh(dir, "q270").head
         IvfPqIndex.build(emb.where(col("vec_id") % 5 =!= 4), "vec_id",
           "embedding", coarse, m = 4, seedPred = col("id") < 16, iters = 1,
           stateDir = stDir)
@@ -2798,7 +2798,7 @@ object EmbeddingQueries {
         val hist = emb.where(col("vec_id") % 5 <= 2)
         val d1 = emb.where(col("vec_id") % 5 === 3)
         val d2 = emb.where(col("vec_id") % 5 === 4)
-        val stDir = freshStateDirs(dir, "q271").head
+        val stDir = ScratchDirs.fresh(dir, "q271").head
         IvfIndex.build(hist, "vec_id", "embedding",
           col("vec_id") % 50 === 0, iters = 2, stDir)
         IvfIndex.refresh(d1, "vec_id", "embedding", stDir, deltaId = "d1")
@@ -2915,7 +2915,7 @@ object EmbeddingQueries {
         val emb = Tables.read(s, dir, "embeddings")
         val hist = emb.where(col("vec_id") % 5 =!= 4)
         val delta = emb.where(col("vec_id") % 5 === 4)
-        val stDir = freshStateDirs(dir, "q272").head
+        val stDir = ScratchDirs.fresh(dir, "q272").head
         IvfIndex.build(hist, "vec_id", "embedding",
           col("vec_id") % 50 === 0, iters = 2, stDir)
         IvfIndex.refresh(delta, "vec_id", "embedding", stDir, deltaId = "d1")
@@ -3086,8 +3086,7 @@ object EmbeddingQueries {
         val trt = toks.where(col("doc_id") % 19 =!= 5)
         val emb = Tables.read(s, dir, "embeddings")
         val tre = emb.where(col("vec_id") % 19 =!= 5)
-        val Seq(bmDir, ivfDir, mDir) =
-          freshStateDirs(dir, "q284bm", "q284iv", "q284mf")
+        val Seq(bmDir, ivfDir, mDir) = ScratchDirs.fresh(dir, "q284bm", "q284iv", "q284mf")
         // the serving stack exists BEFORE the verdict: cut 1 — the two
         // single-writer dirs are independent, so the builds overlap
         // from a driver pool (guide §2.6); commits/payloads unchanged
@@ -3234,7 +3233,7 @@ object EmbeddingQueries {
         val hist = corpusAll.where(col("vec_id") % 5 =!= 4)
         val delta = corpusAll.where(col("vec_id") % 5 === 4)
         val dead = corpusAll.where(col("vec_id") % 7 === 3)
-        val stDir = freshStateDirs(dir, "q288").head
+        val stDir = ScratchDirs.fresh(dir, "q288").head
         BandedIndex.build(hist, "vec_id", "embedding", stDir,
           nBands = 8, rowsPerBand = 4, dims = 64)
         // incremental refresh: ONLY the delta projected, replay-guarded
@@ -3484,7 +3483,7 @@ object EmbeddingQueries {
         val seed = toks.where(col("doc_id") % 3 === 0)
         val batch = toks.where(col("doc_id") % 3 === 1)
         val emb = Tables.read(s, dir, "embeddings")
-        val Seq(biDir, bmDir, ivfDir, clDir, qmDir, mDir) = freshStateDirs(dir,
+        val Seq(biDir, bmDir, ivfDir, clDir, qmDir, mDir) = ScratchDirs.fresh(dir,
           "q294bi", "q294bm", "q294iv", "q294cl", "q294qm", "q294mf")
         // the pinned quality model: trained ONCE on the seed split,
         // delivered twice under one id (replay no-op), then a cut
@@ -3703,23 +3702,6 @@ object EmbeddingQueries {
       })
   )
 
-  /** The state-owning queries (q266, q267, q270–q272, q275, q284, q288,
-    * q294) run in FRESH state dirs per execution: bench reps and
-    * repeated verify runs must each exercise the full build → refresh
-    * cycle, not append segments to a previous run's state. One dir per
-    * name, `<tmpdir>/graft_<name>_<input dir>_p<pid>_<run>`, removed at
-    * JVM exit; the run counter is what makes "fresh" true within one
-    * JVM.
-    */
-  private def freshStateDirs(dir: String, names: String*): Seq[String] = {
-    val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_p" +
-      ProcessHandle.current.pid + "_" + stateRuns.incrementAndGet()
-    val dirs = names.map(n =>
-      s"${System.getProperty("java.io.tmpdir")}/graft_${n}_$tag")
-    dirs.foreach(EventQueries.cleanupOnExit)
-    dirs
-  }
-  private val stateRuns = new java.util.concurrent.atomic.AtomicLong()
 
   /** q266 / q267 / q270's result over an index audit row (`IvfIndex` /
     * `PqIndex` / `IvfPqIndex.audit`): the history/delta split of
@@ -3827,7 +3809,7 @@ object EmbeddingQueries {
         import graft.ann.IvfIndex
         import graft.operators.VersionedState
         val emb = Tables.read(s, dir, "embeddings")
-        val stDir = freshStateDirs(dir, "q275").head
+        val stDir = ScratchDirs.fresh(dir, "q275").head
         // the index predates the dedup verdict: built on EVERYTHING.
         // The build (embeddings) and the verdict derivation (documents)
         // are independent inputs — overlap them (guide §2.6)

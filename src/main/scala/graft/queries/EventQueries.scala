@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScratchDirs, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,24 +16,6 @@ import org.apache.spark.sql.functions._
 object EventQueries {
 
   private val valCents = "CAST(ROUND(value*100) AS BIGINT)"
-
-  /** Register a scratch dir for recursive deletion at JVM exit —
-    * idempotent per path (a bench reruns the query 4+ times in one
-    * process; one hook suffices). The dir must outlive the query (its
-    * result frame reads it lazily), so exit time is the earliest safe
-    * reclamation point.
-    */
-  private val exitCleanups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[queries] def cleanupOnExit(path: String): Unit =
-    if (exitCleanups.add(path)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
-    }
 
   /** q277's session dials: chain edges join consecutive same-user
     * events within 8 hours; the ingest delta is the Jan-25-onward
@@ -541,7 +523,7 @@ object EventQueries {
           "_p" + ProcessHandle.current.pid
         graft.sources.ZOrder.writeZOrdered(ev, zdir,
           Seq("user_id", "value"), nFiles = 16)
-        EventQueries.cleanupOnExit(zdir)
+        ScratchDirs.cleanupOnExit(zdir)
         s.read.parquet(zdir)
           .where(col("user_id") <= 7 && col("value").between(20.0, 260.0))
           .select("event_id", "user_id", "value")
@@ -3619,10 +3601,7 @@ object EventQueries {
           .where(col("id_a").isNotNull && col("gap_us") <= SessionGapUs)
           .select(col("id_a"), col("id_b"), col("ts_b"))
           .localCheckpoint() // history and delta splits read it
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q277_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q277Runs.incrementAndGet()
-        cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q277").head
         // the delta is a TIME suffix, so an edge touches the batch iff
         // its LATER endpoint is in the delta
         ClusterState.build(
@@ -3672,9 +3651,4 @@ object EventQueries {
           .orderBy("event_id")
       })
   )
-
-  /** q277 runs in a fresh state dir per execution (the q266
-    * discipline).
-    */
-  private val q277Runs = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScratchDirs, Tables}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -1229,10 +1229,7 @@ object MultimodalQueries {
         val hist = corpusAll.where(col("id") % 5 =!= 4)
         val delta = corpusAll.where(col("id") % 5 === 4)
         val dead = corpusAll.where(col("id") % 7 === 3)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q289_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q289Runs.incrementAndGet()
-        graft.queries.EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q289").head
         PerceptualIndex.build(hist, "id", "dhash", stDir)
         // incremental refresh: ONLY the delta, replay-guarded
         PerceptualIndex.refresh(delta, "id", "dhash", stDir, "d1")
@@ -1347,10 +1344,7 @@ object MultimodalQueries {
         val hist = corpusAll.where(col("id") % 5 =!= 4)
         val delta = corpusAll.where(col("id") % 5 === 4)
         val dead = corpusAll.where(col("id") % 7 === 3)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q295_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q289Runs.incrementAndGet()
-        graft.queries.EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q295").head
         PerceptualIndex.build(hist, "id", "ahash", stDir)
         // incremental refresh: ONLY the delta, replay-guarded
         PerceptualIndex.refresh(delta, "id", "ahash", stDir, "d1")
@@ -1453,10 +1447,7 @@ object MultimodalQueries {
         val hist = corpusAll.where(col("id") % 5 =!= 4)
         val delta = corpusAll.where(col("id") % 5 === 4)
         val dead = corpusAll.where(col("id") % 7 === 3)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q297_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q289Runs.incrementAndGet()
-        graft.queries.EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q297").head
         PerceptualIndex.build(hist, "id", "vhash", stDir)
         // incremental refresh: ONLY the delta, replay-guarded
         PerceptualIndex.refresh(delta, "id", "vhash", stDir, "d1")
@@ -1480,9 +1471,4 @@ object MultimodalQueries {
           .orderBy("doc_id")
       })
   )
-
-  /** q289/q295/q297 run in a fresh state dir per execution (the q266/q274
-    * discipline).
-    */
-  private val q289Runs = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScratchDirs, Tables}
 import graft.QueryDef.cents
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1755,7 +1755,7 @@ object RelationalQueries {
         val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q225_st_" +
           dir.replaceAll("[^A-Za-z0-9._-]", "_") +
           "_p" + ProcessHandle.current.pid
-        EventQueries.cleanupOnExit(stDir)
+        ScratchDirs.cleanupOnExit(stDir)
         // 3 consumers (kmv hash pass, hll hash pass, exact count):
         // materialize the projected item table once
         val li = Tables.read(s, dir, "lineitem")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, ScratchDirs, Tables}
 import graft.text.{TextStats, TfIdf, Tokenize}
 import graft.similarity.DocSimilarity
 import graft.dedup.Dedup
@@ -4866,10 +4866,7 @@ object TextQueries {
         val delta = toks.where(col("doc_id") % 5 === 4)
         // fresh state dir per execution (the q266 discipline: bench reps
         // and repeated verify runs each exercise the full cycle)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q274_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q274").head
         ExactSubstr.build(hist, "doc_id", "tokens", L = 8, stDir)
         // incremental refresh: ONLY the delta hashed, replay-guarded
         ExactSubstr.refresh(delta, "doc_id", "tokens", stDir, deltaId = "d1")
@@ -4958,10 +4955,7 @@ object TextQueries {
           .where(col("id_a") % 5 =!= 4 && col("id_b") % 5 =!= 4)
         val deltaPairs = ver
           .where(col("id_a") % 5 === 4 || col("id_b") % 5 === 4)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q276_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q276").head
         ClusterState.build(
           toks.where(col("doc_id") % 5 =!= 4).select("doc_id"),
           "doc_id", histPairs, stDir)
@@ -5048,12 +5042,7 @@ object TextQueries {
           .where(col("id_a") < col("id_b"))
           .select("id_a", "id_b")
           .localCheckpoint() // history and delta splits read it
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        val esDir = s"${System.getProperty("java.io.tmpdir")}/graft_q278es_$tag"
-        val csDir = s"${System.getProperty("java.io.tmpdir")}/graft_q278cs_$tag"
-        val mDir = s"${System.getProperty("java.io.tmpdir")}/graft_q278m_$tag"
-        Seq(esDir, csDir, mDir).foreach(EventQueries.cleanupOnExit)
+        val Seq(esDir, csDir, mDir) = ScratchDirs.fresh(dir, "q278es", "q278cs", "q278m")
         val hist = toks.where(col("doc_id") % 5 =!= 4)
         val delta = toks.where(col("doc_id") % 5 === 4)
         // two independent single-writer dirs: builds overlapped (§2.6)
@@ -5337,10 +5326,7 @@ object TextQueries {
         val dead = toks.where(col("doc_id") % 7 === 3)
         // fresh state dir per execution (the q266 discipline: bench reps
         // and repeated verify runs each exercise the full cycle)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q281_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q281").head
         Bm25State.build(hist, "doc_id", "tokens", stDir)
         // incremental refresh: ONLY the delta tokenized, replay-guarded
         Bm25State.refresh(delta, "doc_id", "tokens", stDir, deltaId = "d1")
@@ -5410,10 +5396,7 @@ object TextQueries {
         val toks = tokenized(s, dir).localCheckpoint() // ev/tr splits + windows
         val ev = toks.where(col("doc_id") % 19 === 5)
         val tr = toks.where(col("doc_id") % 19 =!= 5)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q282_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q282").head
         // the serving index exists BEFORE the verdict; the build and
         // the contamination-verdict derivation are independent inputs —
         // overlap them (guide §2.6)
@@ -5584,10 +5567,7 @@ object TextQueries {
         val hist = corpusAll.where(col("doc_id") % 5 =!= 4)
         val delta = corpusAll.where(col("doc_id") % 5 === 4)
         val dead = corpusAll.where(col("doc_id") % 7 === 3)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q285_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q285").head
         BandedIndex.build(hist, "doc_id", "tokens", stDir)
         // incremental refresh: ONLY the delta banded, replay-guarded
         BandedIndex.refresh(delta, "doc_id", "tokens", stDir, deltaId = "d1")
@@ -5711,12 +5691,7 @@ object TextQueries {
         val ev2 = toks.where(col("doc_id") % 19 === 11)
         val tr = toks.where(col("doc_id") % 19 =!= 5 &&
           col("doc_id") % 19 =!= 11)
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        val bmDir = s"${System.getProperty("java.io.tmpdir")}/graft_q286bm_$tag"
-        val nsDir = s"${System.getProperty("java.io.tmpdir")}/graft_q286ns_$tag"
-        val mDir = s"${System.getProperty("java.io.tmpdir")}/graft_q286mf_$tag"
-        Seq(bmDir, nsDir, mDir).foreach(EventQueries.cleanupOnExit)
+        val Seq(bmDir, nsDir, mDir) = ScratchDirs.fresh(dir, "q286bm", "q286ns", "q286mf")
         // cut 1: index + needle state born together — independent
         // single-writer dirs; the train-window pass is independent of
         // both, so all three overlap (§2.6)
@@ -5888,10 +5863,7 @@ object TextQueries {
         val toks = tokenized(s, dir)
           .localCheckpoint() // splits, screens, and verification read it
         val seed = toks.where(col("doc_id") % 3 === 0)
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q287_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q287").head
         BandedIndex.build(seed, "doc_id", "tokens", stDir)
         // one admission round: screen off the MAINTAINED state, verify
         // candidates exactly, refresh ONLY the survivors (delivered
@@ -6045,12 +6017,7 @@ object TextQueries {
         val toks = tokenized(s, dir).localCheckpoint() // splits + verify
         val seed = toks.where(col("doc_id") % 3 === 0)
         val batch = toks.where(col("doc_id") % 3 === 1)
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        val biDir = s"${System.getProperty("java.io.tmpdir")}/graft_q290bi_$tag"
-        val bmDir = s"${System.getProperty("java.io.tmpdir")}/graft_q290bm_$tag"
-        val mDir = s"${System.getProperty("java.io.tmpdir")}/graft_q290mf_$tag"
-        Seq(biDir, bmDir, mDir).foreach(EventQueries.cleanupOnExit)
+        val Seq(biDir, bmDir, mDir) = ScratchDirs.fresh(dir, "q290bi", "q290bm", "q290mf")
         // cut 1: admission state + serving index born together — two
         // independent single-writer dirs, so the builds overlap from a
         // driver pool (guide §2.6); commits/payloads unchanged
@@ -6228,10 +6195,7 @@ object TextQueries {
           .localCheckpoint() // 8 GD scans + the acc scan read it
         val featB = feat.where(col("doc_id") % 19 === 7)
           .localCheckpoint() // score, batch-acc and the fit gate read it
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q291_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q291").head
         // the trainer run, delivered twice under one id: the replay
         // returns the committed version without re-training
         val v1 = QualityModel.fit(featTr, stDir, "m1")
@@ -6411,11 +6375,7 @@ object TextQueries {
         val toks = tokenized(s, dir)
           .localCheckpoint() // splits, screens, and verification read it
         val seed = toks.where(col("doc_id") % 3 === 0)
-        val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        val biDir = s"${System.getProperty("java.io.tmpdir")}/graft_q292bi_$tag"
-        val csDir = s"${System.getProperty("java.io.tmpdir")}/graft_q292cs_$tag"
-        Seq(biDir, csDir).foreach(EventQueries.cleanupOnExit)
+        val Seq(biDir, csDir) = ScratchDirs.fresh(dir, "q292bi", "q292cs")
         // the seed's own verified pairs — the one-time build cost
         val seedCand = Dedup.lshBandedCandidatePairs(seed, "doc_id",
           "tokens", 4, 2, maxBucketSize = 50)
@@ -6608,10 +6568,7 @@ object TextQueries {
           .localCheckpoint() // two fit deliveries read it
         val wcH = wcOf(col("doc_id") % 19 === 7)
           .localCheckpoint() // encode, metrics and the fit gate read it
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q293_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q293").head
         // the trainer run, delivered twice under one id: the replay
         // returns the committed version without re-training
         val v1 = BpeState.fit(wcT, "word", "cnt", merges = 3, stDir, "t1")
@@ -6708,10 +6665,7 @@ object TextQueries {
           .localCheckpoint() // two fit deliveries read it
         val batch = toks.where(col("doc_id") % 19 === 7)
           .localCheckpoint() // predict and the fit gate read it
-        val stDir = s"${System.getProperty("java.io.tmpdir")}/graft_q296_" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-          "_p" + ProcessHandle.current.pid + "_" + q274Runs.incrementAndGet()
-        EventQueries.cleanupOnExit(stDir)
+        val stDir = ScratchDirs.fresh(dir, "q296").head
         // the trainer run, delivered twice under one id: the replay
         // returns the committed version without re-training
         val v1 = NbState.fit(train, "lang", "tokens", stDir, "n1")
@@ -6742,11 +6696,6 @@ object TextQueries {
           .orderBy("doc_id")
       })
   )
-
-  /** q274/q276 run in a fresh state dir per execution (see the q266
-    * discipline in EmbeddingQueries).
-    */
-  private val q274Runs = new java.util.concurrent.atomic.AtomicLong()
 
   /** Spark side of q166 (extracted so the defs entry stays readable). */
   private def jsDrift(s: SparkSession, dir: String): DataFrame = {

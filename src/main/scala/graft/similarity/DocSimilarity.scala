@@ -43,8 +43,9 @@ import org.apache.spark.sql.functions._
   * that produces the build rows since their last shuffle or cache runs
   * in that one task too, so feed it a cached or cheaply derived table.
   *
-  * Unlike [[cartesianCosine]], the kernel takes no norms table: it
-  * derives each squared norm from the weights themselves.
+  * The kernel takes no norms table: it derives each squared norm from
+  * the weights themselves. [[cartesianCosine]] scores through it too,
+  * so both strategies return the same bits for a pair.
   */
 object DocSimilarity {
 
@@ -79,22 +80,24 @@ object DocSimilarity {
   }
 
   /** Naive cartesian cosine (reference's small-sample strategy,
-    * textanalyse/EntityResolution.scala:133-157). Correct at any scale
-    * but O(|A|·|B|); kept for parity tests and tiny inputs — the
-    * cross join is a `BroadcastNestedLoopJoin` when one side is small.
+    * textanalyse/EntityResolution.scala:133-157): every `docsA × docsB`
+    * id pair, scored 0.0 when the two share no token. Correct at any
+    * scale but O(|A|·|B|); kept for parity tests and tiny inputs.
+    *
+    * The scores are the kernel's ([[invertedIndexCosine]]) left-joined
+    * onto the id pairs, so a nonzero sim is bit-equal to the scalable
+    * one. Only the id columns of `docsA`/`docsB` are read. Under a
+    * threshold that rejects 0.0 (`sim > θ`, θ ≥ 0), Spark's own
+    * `EliminateOuterJoin` makes the left join inner (the defaulted rows
+    * cannot pass) and `ReorderJoin` turns the cross join into two
+    * equi-joins against the kernel's pairs, so no all-pairs product is
+    * built. A doc with a zero norm scores 0.0 against every doc.
     */
   def cartesianCosine(
-      weightsA: DataFrame, normsA: DataFrame,
-      weightsB: DataFrame, normsB: DataFrame,
-      idA: String, idB: String): DataFrame = {
-    val pairs = normsA.select(col(idA), col("norm").as("norm_a"))
-      .crossJoin(normsB.select(col(idB), col("norm").as("norm_b")))
-    val dots = weightsA.select(col(idA), col("token"), col("weight").as("wa"))
-      .join(weightsB.select(col(idB), col("token"), col("weight").as("wb")), "token")
-      .groupBy(col(idA), col(idB))
-      .agg(sum(col("wa") * col("wb")).as("dot"))
-    pairs.join(dots, Seq(idA, idB), "left")
-      .select(col(idA), col(idB),
-        (coalesce(col("dot"), lit(0.0)) / (col("norm_a") * col("norm_b"))).as("sim"))
-  }
+      weightsA: DataFrame, docsA: DataFrame,
+      weightsB: DataFrame, docsB: DataFrame,
+      idA: String, idB: String): DataFrame =
+    docsA.select(col(idA)).crossJoin(docsB.select(col(idB)))
+      .join(invertedIndexCosine(weightsA, weightsB, idA, idB), Seq(idA, idB), "left")
+      .select(col(idA), col(idB), coalesce(col("sim"), lit(0.0)).as("sim"))
 }

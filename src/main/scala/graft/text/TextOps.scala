@@ -124,11 +124,12 @@ object TfIdf {
       .select(col(idCol), col("token"), (col("tf") * col("idf")).as("weight"))
   }
 
-  /** Per-document L2 norms `(id, norm)` of the TF-IDF vectors — the
-    * denominators [[graft.similarity.DocSimilarity.cartesianCosine]]
-    * joins in (reference: textanalyse/ScalableEntityResolution.scala:32-35,
-    * but there the norms are collected to the driver; here they stay
-    * distributed).
+  /** Per-document L2 norms `(id, norm)` of the TF-IDF vectors
+    * (reference: textanalyse/ScalableEntityResolution.scala:32-35, but
+    * there the norms are collected to the driver; here they stay
+    * distributed). [[graft.similarity.DocSimilarity.cartesianCosine]]
+    * reads only their ids: its cosines come from the kernel, which
+    * derives each norm from the weights in a fixed order.
     */
   def norms(weights: DataFrame, idCol: String): DataFrame =
     weights.groupBy(col(idCol))

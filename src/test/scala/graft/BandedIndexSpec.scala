@@ -25,9 +25,6 @@ class BandedIndexSpec extends SparkTestBase {
     3L -> "red green blue cyan magenta",
     4L -> "red green blue cyan magenta")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_bi_$tag").toString + "/st"
-
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select(col("id_new").cast("long"), col("id_corpus").cast("long"))
       .as[(Long, Long)].collect().toSet

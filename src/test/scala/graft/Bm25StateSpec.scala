@@ -26,9 +26,6 @@ class Bm25StateSpec extends SparkTestBase {
     3L -> "m n o x u v w s",
     4L -> "g h i j")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_bm_$tag").toString + "/st"
-
   private def top(dir: String, terms: Seq[String] = Seq("x"), k: Int = 10,
                   asOf: Option[Long] = None): Seq[(Long, Double)] =
     Bm25State.topK(spark, dir, terms, k, asOf = asOf)

@@ -21,7 +21,7 @@ class BucketingSpec extends SparkTestBase {
   }
 
   test("orderkey-bucketed orders ⋈ lineitem plans with zero exchanges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    val dir = tempDir("graft_bucketed")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try {
@@ -56,7 +56,7 @@ class BucketingSpec extends SparkTestBase {
   test("centroid-bucketed vector index: retrieval join never shuffles the corpus side") {
     import org.apache.spark.sql.functions._
     import graft.streaming.VectorStreams
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec_index").toString
+    val dir = tempDir("graft_vec_index")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try {

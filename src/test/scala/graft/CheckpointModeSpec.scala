@@ -21,7 +21,7 @@ class CheckpointModeSpec extends SparkTestBase {
   import spark.implicits._
 
   private lazy val tmp = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val d = tempDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(s"$d/reliable")
     d
   }

@@ -16,9 +16,6 @@ import org.apache.spark.sql.functions._
 class ClusterStateSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cs_$tag").toString + "/st"
-
   private def idsDf(ids: Seq[Long]): DataFrame = ids.toDF("id")
   private def pairsDf(ps: Seq[(Long, Long)]): DataFrame =
     ps.toDF("id_a", "id_b")

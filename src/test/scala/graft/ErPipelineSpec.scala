@@ -27,8 +27,7 @@ object ErFixture {
   /** Writes the catalogs and returns a pipeline over them. */
   def pipeline(spark: org.apache.spark.sql.SparkSession, a: Seq[Seq[String]],
                b: Seq[Seq[String]], gold: Seq[(Int, Int)]): ErPipeline = {
-    val dir = Files.createTempDirectory("er-fixture")
-    dir.toFile.deleteOnExit()
+    val dir = java.nio.file.Paths.get(SparkTestBase.tempDir("er-fixture"))
     new ErPipeline(spark,
       catalog(dir, "a.csv", "a", a), catalog(dir, "b.csv", "b", b),
       write(dir, "gold.csv", "\"idAmazon\",\"idGoogleBase\"" +:
@@ -64,12 +63,10 @@ class ErPipelineSpec extends SparkTestBase {
 
   private lazy val scalable = pairs(er.scalableSimilarities)
 
-  test("scalable pairs are the naive strategy's nonzero pairs, sims within 1e-9") {
+  test("scalable pairs are the naive strategy's nonzero pairs, sims bit-equal") {
     val naive = pairs(er.naiveSimilarities)
     assert(naive.size == 40 * 30, "the naive strategy scores every pair")
-    val nonzero = naive.filter(_._2 != 0.0)
-    assert(scalable.keySet == nonzero.keySet)
-    assert(scalable.forall { case (k, s) => math.abs(s - nonzero(k)) <= 1e-9 })
+    assert(scalable == naive.filter(_._2 != 0.0))
     assert(scalable.size == er.scalableSimilarities.count(), "one row per pair")
   }
 
@@ -137,19 +134,26 @@ class ErPipelineSpec extends SparkTestBase {
     val conf = spark.conf
     val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
       .map(k => k -> conf.get(k))
-    def rerun(n: Option[Int]): Map[(String, String), Double] = {
-      def side(w: DataFrame, id: String) = {
-        val r = w.withColumnRenamed("id", id)
-        n.fold(r)(r.repartition(_))
-      }
-      pairs(DocSimilarity.invertedIndexCosine(
-        side(er.amazonWeights, "id_a"), side(er.googleWeights, "id_b"), "id_a", "id_b"))
+    def side(w: DataFrame, id: String, n: Option[Int]) = {
+      val r = w.withColumnRenamed("id", id)
+      n.fold(r)(r.repartition(_))
     }
+    def rerun(n: Option[Int]): Map[(String, String), Double] =
+      pairs(DocSimilarity.invertedIndexCosine(
+        side(er.amazonWeights, "id_a", n), side(er.googleWeights, "id_b", n), "id_a", "id_b"))
+    def rerunNaive(n: Option[Int]): Map[(String, String), Double] =
+      pairs(DocSimilarity.cartesianCosine(
+        side(er.amazonWeights, "id_a", n), side(er.amazonNorms, "id_a", n),
+        side(er.googleWeights, "id_b", n), side(er.googleNorms, "id_b", n), "id_a", "id_b"))
     try {
       for (parts <- Seq("1", "7"); aqe <- Seq("true", "false"); input <- Seq(None, Some(1), Some(8))) {
         conf.set("spark.sql.shuffle.partitions", parts)
         conf.set("spark.sql.adaptive.enabled", aqe)
-        assert(bits(rerun(input)) == ref, s"partitions=$parts aqe=$aqe input=$input")
+        val at = s"partitions=$parts aqe=$aqe input=$input"
+        assert(bits(rerun(input)) == ref, at)
+        val naive = rerunNaive(input)
+        assert(naive.size == 40 * 30, at)
+        assert(bits(naive.filter(_._2 != 0.0)) == ref, s"naive: $at")
       }
     } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }

@@ -27,9 +27,6 @@ class ExactSubstrSpec extends SparkTestBase {
     2L -> "p q r p q r p q",
     3L -> "e f g h x y z w")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_es_$tag").toString + "/st"
-
   private def spansNow(dir: String, toks: DataFrame): Set[(Long, Long, Long)] =
     ExactSubstr.spans(toks, "doc_id", "tokens", ExactSubstr.storedL(spark, dir),
         ExactSubstr.dupHashes(spark, dir))

@@ -14,7 +14,7 @@ class FormatsSpec extends SparkTestBase {
 
   private def roundTrip(fmt: String,
                         opts: Map[String, String] = Map.empty): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$fmt").toString
+    val dir = tempDir(s"graft-$fmt")
     docs.write.mode("overwrite").options(opts).format(fmt).save(dir)
     val back = spark.read.options(opts).format(fmt)
       .schema(docs.schema) // CSV/JSON need the schema pinned (no inference drift)
@@ -42,7 +42,7 @@ class FormatsSpec extends SparkTestBase {
     // columns. Batch 1 lacks `quality`; batch 2 adds it. mergeSchema
     // must union the file schemas, serve old rows with NULL in the new
     // column, and keep filters on the new column working (NULL-safe).
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("graft-evolve")
     docs.select(col("doc_id"), col("text"))
       .where(col("doc_id") < 25)
       .write.mode("append").parquet(dir)

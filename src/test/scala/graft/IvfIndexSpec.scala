@@ -24,9 +24,6 @@ class IvfIndexSpec extends SparkTestBase {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ivf_$tag").toString + "/idx"
-
   test("refresh from disk ≡ one-shot routing; centroids frozen across versions") {
     val dir = freshDir("restart")
     val hist = vecs(0 until 40)

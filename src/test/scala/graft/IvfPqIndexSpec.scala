@@ -25,9 +25,6 @@ class IvfPqIndexSpec extends SparkTestBase {
     df.where(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("bid"), col("embedding").as("bvec"))
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ivfpq_$tag").toString + "/idx"
-
   test("refresh from disk ≡ one-shot route+encode; coarse and codebooks frozen") {
     val dir = freshDir("restart")
     val hist = vecs(0 until 40)

@@ -24,9 +24,6 @@ class MaintainSpec extends SparkTestBase {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mt_$tag").toString + "/st"
-
   test("IVF maintain: N batches keep liveMarkers ≤ dial; replay reported; healthy gates") {
     val dir = freshDir("ivf")
     IvfIndex.build(vecs(0 until 40), "vec_id", "embedding",

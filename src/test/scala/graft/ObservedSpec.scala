@@ -7,7 +7,7 @@ class ObservedSpec extends SparkTestBase {
   import spark.implicits._
 
   private lazy val tmp =
-    java.nio.file.Files.createTempDirectory("graft-observed").toString
+    tempDir("graft-observed")
 
   test("write-with-audit: metrics equal a separate pass, for zero extra scans") {
     val df = Seq((1L, 10.50, "a"), (2L, -0.25, "b"), (3L, 4.75, null))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkTestBase {
 
   test("filter on the partition column prunes directories at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     val h = substring(md5(col("doc_id").cast("string")), 1, 1)
     spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .withColumn("split",
@@ -34,7 +34,7 @@ class PartitionPruningSpec extends SparkTestBase {
   }
 
   test("writePartitioned bounds files per partition directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val dir = tempDir("graft_layout")
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     graft.sources.PartitionedLayout.writePartitioned(
       docs, dir, Seq("lang"), filesPerPartition = 3)

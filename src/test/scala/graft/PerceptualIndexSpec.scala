@@ -25,9 +25,6 @@ class PerceptualIndexSpec extends SparkTestBase {
   private val D = 0x00AA55AA55AA55L
   private val hist = hashes(1L -> A, 2L -> B, 3L -> C, 4L -> D)
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_pi_$tag").toString + "/st"
-
   private def collisions(df: DataFrame): Set[(Long, Long, Int)] =
     df.select(col("id").cast("long"), col("matched_id").cast("long"),
         col("hamming"))

@@ -428,7 +428,7 @@ class PlanQualitySpec extends SparkTestBase {
     // useless when every file spans the full value range
     val events = graft.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "user_id", "value")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zprune").toString
+    val tmp = tempDir("graft_zprune")
     val zDir = s"$tmp/z"
     val linDir = s"$tmp/lin"
     graft.sources.ZOrder.writeZOrdered(events, zDir, Seq("user_id", "value"), 16)

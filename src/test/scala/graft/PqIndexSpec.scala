@@ -21,9 +21,6 @@ class PqIndexSpec extends SparkTestBase {
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_pq_$tag").toString + "/idx"
-
   test("refresh from disk ≡ one-shot encoding; codebooks frozen; m recovered") {
     val dir = freshDir("restart")
     PqIndex.build(vecs(0 until 40), "vec_id", "embedding", m = 2,

@@ -23,7 +23,7 @@ class ResumeSpec extends SparkTestBase {
   import spark.implicits._
 
   private lazy val tmp =
-    java.nio.file.Files.createTempDirectory("graft-resume").toString
+    tempDir("graft-resume")
 
   /** Plant an uncommitted in-flight step (no `_SUCCESS`) — the dir a
     * write that died mid-flight leaves behind.

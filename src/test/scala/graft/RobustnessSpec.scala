@@ -330,7 +330,7 @@ class RobustnessSpec extends SparkTestBase {
 
   test("index lifecycle degenerate edges: delete of absent ids, delete-all, compact of empty") {
     import graft.ann.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_rb_idx").toString + "/idx"
+    val dir = freshDir("rb_idx")
     val vecs = (0L until 12L).map(i =>
       (i, Array.tabulate(4)(d => (i % 3 + d).toFloat + 1f))).toDF("vec_id", "embedding")
     IvfIndex.build(vecs, "vec_id", "embedding", col("vec_id") % 6 === 0,
@@ -355,7 +355,7 @@ class RobustnessSpec extends SparkTestBase {
 
   test("ExactSubstr degenerate edges: all-short docs, empty delta, full retraction") {
     import graft.dedup.ExactSubstr
-    val dir = java.nio.file.Files.createTempDirectory("graft_rb_es").toString + "/st"
+    val dir = freshDir("rb_es")
     val short = Seq((1L, Seq("a", "b")), (2L, Seq.empty[String]))
       .toDF("doc_id", "tokens")
     // no doc reaches L=4: the base commits an EMPTY count table and
@@ -385,7 +385,7 @@ class RobustnessSpec extends SparkTestBase {
 
   test("ClusterState degenerate edges: pairless build, delete-everything, drop-only compact, rebuild resets") {
     import graft.dedup.ClusterState
-    val dir = java.nio.file.Files.createTempDirectory("graft_rb_cs").toString + "/st"
+    val dir = freshDir("rb_cs")
     def ids(xs: Long*) = xs.toDF("id")
     def pairs(ps: (Long, Long)*) = ps.toDF("id_a", "id_b")
     // a pairless build: every doc a singleton
@@ -413,7 +413,7 @@ class RobustnessSpec extends SparkTestBase {
 
   test("multibyte delta ids: round-trip the replay guard whole; over-long ids are rejected, never truncated") {
     import graft.ann.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_rb_mb").toString + "/idx"
+    val dir = freshDir("rb_mb")
     val vecs = (0L until 8L).map(i =>
       (i, Array.tabulate(4)(d => (i % 3 + d).toFloat + 1f))).toDF("vec_id", "embedding")
     IvfIndex.build(vecs.where(col("vec_id") < 5), "vec_id", "embedding",

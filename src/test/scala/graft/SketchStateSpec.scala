@@ -40,8 +40,7 @@ class SketchStateSpec extends SparkTestBase {
   }
 
   test("state table survives a restart; replayed delta is a no-op") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sketch_state").toString
+    val base = tempDir("graft_sketch_state")
     val (stateH, stateK) = (s"$base/hll", s"$base/kmv")
     val history = (1 to 40).map(i => ("click", s"user$i"))
     val delta = (30 to 70).map(i => ("click", s"user$i")) :+ ("view", "v1")
@@ -73,8 +72,7 @@ class SketchStateSpec extends SparkTestBase {
   test("histogram state survives a restart; replay DOUBLE-COUNTS — the documented hazard") {
     implicit val ctx = spark.sqlContext
     import graft.functions.BucketHistogram
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_hist_state").toString + "/hist"
+    val stateDir = freshDir("hist_state")
     val width = 10L
     def run(batches: Seq[Seq[(String, Long)]]): Unit = {
       val input = MemoryStream[(String, Long)]
@@ -111,8 +109,7 @@ class SketchStateSpec extends SparkTestBase {
 
   test("histogram batch-id guard: a replayed foreachBatch id is a no-op") {
     import graft.functions.BucketHistogram
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_hist_guard").toString + "/hist"
+    val stateDir = freshDir("hist_guard")
     val width = 10L
     def mergeWithId(rows: Seq[(String, Long)], id: String): Unit =
       SketchState.mergeHistogramBatch(rows.toDF("grp", "cents"),
@@ -143,8 +140,7 @@ class SketchStateSpec extends SparkTestBase {
     // read() (committed state intact), and the next merge must build
     // on the COMMITTED state — never on the torn one, never from
     // scratch.
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sketch_crash").toString
+    val base = tempDir("graft_sketch_crash")
     val (stateH, stateK) = (s"$base/hll", s"$base/kmv")
     val history = (1 to 40).map(i => ("click", s"user$i"))
     runStream(stateH, stateK, Seq(history)) // commits v1
@@ -173,8 +169,7 @@ class SketchStateSpec extends SparkTestBase {
   }
 
   test("a state directory with foreign content is an error, never empty state") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sketch_foreign").toString
+    val dir = tempDir("graft_sketch_foreign")
     // e.g. the pre-versioned flat layout, or a caller's wrong path
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "part-00000.parquet"), "flat-layout relic")
@@ -186,8 +181,7 @@ class SketchStateSpec extends SparkTestBase {
   }
 
   test("a crashed FIRST commit reads as empty state (nothing was ever committed)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sketch_first").toString + "/hll"
+    val dir = freshDir("sketch_first")
     val torn = new java.io.File(s"$dir/v${"0" * 18}1")
     assert(torn.mkdirs())
     java.nio.file.Files.writeString(
@@ -200,8 +194,7 @@ class SketchStateSpec extends SparkTestBase {
   }
 
   test("GC keeps exactly the last two committed versions") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sketch_gc").toString
+    val base = tempDir("graft_sketch_gc")
     val (stateH, stateK) = (s"$base/hll", s"$base/kmv")
     runStream(stateH, stateK,
       Seq(Seq(("a", "1")), Seq(("a", "2")), Seq(("a", "3")), Seq(("a", "4"))))
@@ -215,8 +208,7 @@ class SketchStateSpec extends SparkTestBase {
   }
 
   test("a key alive only in history survives a delta that lacks it") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sketch_state2").toString
+    val base = tempDir("graft_sketch_state2")
     val (stateH, stateK) = (s"$base/hll", s"$base/kmv")
     runStream(stateH, stateK, Seq(Seq(("old", "a"), ("old", "b"))))
     runStream(stateH, stateK, Seq(Seq(("new", "c"))))

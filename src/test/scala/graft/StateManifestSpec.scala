@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
 class StateManifestSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mf_$tag").toString + "/st"
-
   private def vecs(ids: Range): DataFrame =
     ids.map { i =>
       (i.toLong, Array.tabulate(4)(d => ((i % 3) * 7 + d).toFloat + 1f))

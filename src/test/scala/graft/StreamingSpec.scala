@@ -796,7 +796,7 @@ class StreamingSpec extends SparkTestBase {
   test("hot-swap serving: a republished index goes live without stream restart") {
     implicit val ctx = spark.sqlContext
     import graft.streaming.VectorStreams
-    val root = java.nio.file.Files.createTempDirectory("ivf-versions").toString
+    val root = tempDir("ivf-versions")
     // v1 corpus: only vector 1 near the x-axis
     val corpus1 = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),
@@ -1072,8 +1072,8 @@ class StreamingSpec extends SparkTestBase {
     // emitted windows are not re-emitted, (b) state (open windows +
     // watermark) carries across the restart so later data closes the
     // windows opened before the stop
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val srcDir = tempDir("graft-src")
+    val ckpt = tempDir("graft-ckpt")
     val schema = batch1.toDF().schema
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
 
@@ -1091,7 +1091,7 @@ class StreamingSpec extends SparkTestBase {
     // the parquet file SOURCE watches top-level files, not directories:
     // stage each batch's part file in flat, like an ingest job would
     def land(rows: Seq[UserEvent], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-land").toString
+      val tmp = tempDir("graft-land")
       rows.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get

@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class VersionedStateSpec extends SparkTestBase {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_vs_$tag").toString + "/st"
-
   private def commitOne(dir: String, prev: Option[Long], label: String,
                         gcBelow: Long = Long.MinValue): Long =
     VersionedState.commit(spark, dir, prev, label, gcBelow) { vdir =>

@@ -35,10 +35,10 @@ class ZOrderSpec extends SparkTestBase {
       .select(col("event_id"), col("user_id"), col("value"))
     val nFiles = 16
 
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val zDir = tempDir("graft_zorder")
     ZOrder.writeZOrdered(events, zDir, Seq("user_id", "value"), nFiles)
 
-    val linDir = java.nio.file.Files.createTempDirectory("graft_linear").toString
+    val linDir = tempDir("graft_linear")
     events.repartitionByRange(nFiles, col("user_id"))
       .sortWithinPartitions("user_id")
       .write.mode("overwrite").parquet(linDir)
