@@ -1,8 +1,15 @@
 package graft.ann
 
 import graft.operators.{GateVerdict, VersionedState}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** The shared SEGMENT ALGEBRA of the durable index family
   * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]]) — everything the three
@@ -439,8 +446,9 @@ private[graft] object IndexSegments {
     *  - every segment since the latest base reads with the BASE
     *    segment's explicit schema (a partitionBy write of an all-empty
     *    negation creates no part files, so inference would fail exactly
-    *    on the segment whose emptiness is the point), and a base
-    *    lacking the expected columns fails with the rebuild remedy;
+    *    on the segment whose emptiness is the point), read from one of
+    *    its footers ([[footerSchema]]), and a base lacking the expected
+    *    columns fails with the rebuild remedy;
     *  - `pre` runs BELOW the live-sum agg (partition-prune pushdowns —
     *    term buckets, chunk buckets);
     *  - `liveOnly = true` (every read path) keeps positive PRIMARY
@@ -457,8 +465,9 @@ private[graft] object IndexSegments {
                  liveOnly: Boolean = true): DataFrame = {
     val base = lastBase(cs, stateDir)
     val vs = cs.map(_._1).filter(_ >= base)
-    val sch = spark.read.parquet(
-      s"${VersionedState.versionPath(stateDir, vs.head)}/$table").schema
+    val baseDir = s"${VersionedState.versionPath(stateDir, vs.head)}/$table"
+    val sch = footerSchema(spark, baseDir)
+      .getOrElse(spark.read.parquet(baseDir).schema)
     val missing = (keys ++ cnts).filterNot(sch.fieldNames.contains)
     require(missing.isEmpty,
       s"$stateDir's $table base lacks column(s) ${missing.mkString(", ")}" +
@@ -473,6 +482,45 @@ private[graft] object IndexSegments {
         cnts.tail.map(c => sum(c).cast("long").as(c)): _*)
       .where(if (liveOnly) col(cnts.head) > 0
              else cnts.map(col(_) =!= 0).reduce(_ || _))
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers for a table this
+    * module wrote, read from ONE data file's footer on the driver
+    * (inference launches a one-task footer job, and every live read
+    * anchors on its base's schema): the footer's Spark schema under the
+    * session conf, every field nullable as a file source reads it, plus
+    * the partition directory columns on the way to that file, typed as
+    * partition inference types the integer bucket ids. None when `dir`
+    * holds no data file (or a directory value is not an integer) — the
+    * caller falls back to inference.
+    */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  dir: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus) =
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+    def firstFile(p: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(p).filter(visible)
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    if (!fs.exists(root)) return None
+    firstFile(root).flatMap { file =>
+      val parts = Iterator.iterate(file.getPath.getParent)(_.getParent)
+        .takeWhile(_.depth > root.depth).map(_.getName.split("=", 2)).toSeq.reverse
+      val typed = spark.sessionState.conf.partitionColumnTypeInferenceEnabled
+      if (!parts.forall(kv => kv.length == 2 && (!typed || kv(1).toIntOption.nonEmpty))) None
+      else {
+        val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.NO_FILTER))
+        val data = ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        Some(StructType(data.fields.map(_.copy(nullable = true)) ++ parts.map(kv =>
+          StructField(kv(0), if (typed) IntegerType else StringType))))
+      }
+    }
   }
 
   /** The GC floor a compaction commit should use: `next` (reclaim

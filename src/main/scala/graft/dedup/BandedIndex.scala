@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.ann.IndexSegments
-import graft.operators.{Bucket, CountedState, CountedTable}
+import graft.operators.{Bucket, CountedState, CountedTable, Observed}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   *
   * The per-batch state delta is one map-side signature pass over the
   * BATCH (the native MinHash kernel) + one bucket-partitioned write.
-  * A probe computes the fresh side's band rows map-side, collects its
+  * A probe computes the fresh side's band rows map-side, observes its
   * ≤ B DISTINCT bucket ids (bounded by the dial, not the batch), and
   * reads ONLY those bucket directories of each segment — a partition
   * filter, the file-skip the Bm25State postings pruning established —
@@ -191,12 +191,12 @@ object BandedIndex {
   /** The banded screen [[BandedIndex]] and
     * [[graft.multimodal.PerceptualIndex]] share: the fresh batch's band
     * rows (derived map-side at the stored dials, local-checkpointed),
-    * its ≤ B DISTINCT bucket ids collected driver-side (bounded by the
-    * dial, not the batch), the stored side read ONLY from those bucket
-    * partitions, the skew cap counting BOTH sides' bucket members
-    * (exactly like the one-shot path), and the (band, chunk) join of
-    * fresh rows `f` to stored rows `c` — the family projects (and
-    * verifies) the pairs.
+    * its ≤ B DISTINCT bucket ids observed on the checkpoint's own job
+    * (bounded by the dial, not the batch), the stored side read ONLY
+    * from those bucket partitions, the skew cap counting BOTH sides'
+    * bucket members (exactly like the one-shot path), and the (band,
+    * chunk) join of fresh rows `f` to stored rows `c` — the family
+    * projects (and verifies) the pairs.
     */
   private[graft] def bandedScreen(state: CountedState, fresh: DataFrame,
                                   idCol: String, payloadCol: String,
@@ -206,15 +206,15 @@ object BandedIndex {
     val t = state.tables.head
     val b = t.bucket.get
     val d = state.storedDials(spark, stateDir, asOf)
-    val f = state.derive(fresh, idCol, payloadCol, d).head
-      .withColumn(b.column, CountedState.bucketExpr(col(b.key), d("B")))
-      .localCheckpoint() // batch-bounded; bucket collect + probe read it
-    val buckets = f.select(b.column).distinct().collect().map(_.getInt(0)).toSeq
+    // batch-bounded checkpoint; its own job observes the ≤ B bucket ids
+    val (f, buckets) = Observed.metric(state.derive(fresh, idCol, payloadCol, d).head
+        .withColumn(b.column, CountedState.bucketExpr(col(b.key), d("B"))),
+      collect_set(col(b.column)), scala.collection.Seq.empty[Int])(_.localCheckpoint())
     val keys = t.keys.map(col)
     // .get is safe: storedDials above already refused an uncommitted
     // (or empty-asOf) state
     val stored = state.live(spark, stateDir, t, asOf,
-        Some(col(b.column).isin(buckets: _*))).get
+        Some(col(b.column).isin(buckets.toSeq: _*))).get
       .select(keys :+ lit(0).as("_side"): _*)
     val tagged = stored.unionByName(f.select(keys :+ lit(1).as("_side"): _*))
     val kept = Dedup.capBuckets(tagged, Seq("band", "chunk"), maxBucketSize)

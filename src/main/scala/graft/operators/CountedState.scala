@@ -10,8 +10,9 @@ import scala.collection.immutable.ListMap
   * `B` dial. A bucket-partitioned write of zero rows commits no parquet
   * footer, and every later explicit-schema read anchors on the base —
   * so a family with such a table refuses an empty build (and an empty
-  * compaction fold). `needs` names what the build input must contain
-  * for the derivation to yield a row (the refusal's remedy text).
+  * compaction fold), counted inside the write itself. `needs` names
+  * what the build input must contain for the derivation to yield a row
+  * (the refusal's remedy text).
   */
 private[graft] final case class Bucket(column: String, key: String,
                                        needs: String)
@@ -23,8 +24,12 @@ private[graft] final case class Bucket(column: String, key: String,
 private[graft] final case class CountedTable(name: String, keys: Seq[String],
                                              counts: Seq[String],
                                              bucket: Option[Bucket] = None) {
+  /** Every count column negated; a bucket column (a rewrite's
+    * [[CountedState]] fold carries it) passes through first.
+    */
   private[operators] def negated(df: DataFrame): DataFrame =
-    df.select(keys.map(col) ++ counts.map(c => (-col(c)).as(c)): _*)
+    df.select(bucket.map(_.column).filter(df.columns.contains).toSeq.map(col) ++
+      keys.map(col) ++ counts.map(c => (-col(c)).as(c)): _*)
 }
 
 /** The LINEAR-COUNT state engine behind [[graft.text.Bm25State]]
@@ -118,30 +123,63 @@ private[graft] final class CountedState(
     * into the exchange so a corpus-sized write (build/compact) spreads
     * each bucket over ~that many tasks/files — purely physical (the
     * bucket stays the partition directory; live sums are
-    * file-count-blind). Independent tables overlap from the driver
-    * pool ([[Par]]).
+    * file-count-blind). A frame that already carries the bucket column
+    * is a [[rewriteSums]] fold, already hash-partitioned by it, and is
+    * written without a second exchange. `refuse` (build, compact)
+    * counts each bucket-partitioned table's rows inside its write and
+    * fails with its text on zero — inside [[VersionedState.commit]]'s
+    * writer, so no marker is made. Independent tables overlap from the
+    * driver pool ([[Par]]).
     */
   private def write(frames: Seq[DataFrame], d: Dials, vdir: String,
-                    splits: Int = 1): Unit =
+                    splits: Int = 1,
+                    refuse: Option[(CountedTable, Bucket) => String] = None): Unit =
     Par.run(tables.zip(frames).map { case (t, df) => () =>
       val path = s"$vdir/${t.name}"
       t.bucket match {
         case None => df.write.mode("overwrite").parquet(path)
         case Some(b) =>
           val nB = d("B")
-          val withB = df.withColumn(b.column, CountedState.bucketExpr(col(b.key), nB))
-          // salted, not keyed on the raw id: distinct partitioner keys
-          // stay at nB·splits, so each bucket spreads over ~splits
-          // tasks/files — keying on (bucket, id) would spread every
-          // bucket over ALL tasks (≈ nB·splits files per bucket, the
-          // small-file failure mode)
-          val parted =
-            if (splits <= 1) withB.repartition(nB, col(b.column))
-            else withB.repartition(nB * splits, col(b.column),
-              pmod(hash(col(id.get)), lit(splits)))
-          parted.write.mode("overwrite").partitionBy(b.column).parquet(path)
+          def parted(df: DataFrame): DataFrame =
+            if (df.columns.contains(b.column)) df
+            else {
+              val withB = df.withColumn(b.column, CountedState.bucketExpr(col(b.key), nB))
+              // salted, not keyed on the raw id: distinct partitioner
+              // keys stay at nB·splits, so each bucket spreads over
+              // ~splits tasks/files — keying on (bucket, id) would
+              // spread every bucket over ALL tasks (≈ nB·splits files
+              // per bucket, the small-file failure mode)
+              if (splits <= 1) withB.repartition(nB, col(b.column))
+              else withB.repartition(nB * splits, col(b.column),
+                pmod(hash(col(id.get)), lit(splits)))
+            }
+          def save(df: DataFrame): Unit =
+            parted(df).write.mode("overwrite").partitionBy(b.column).parquet(path)
+          refuse match {
+            case None => save(df)
+            case Some(msg) =>
+              val (_, rows) = Observed.metric(df, count(lit(1)), 0L)(save)
+              require(rows != 0L, msg(t, b))
+          }
       }
     })
+
+  /** `t`'s live sums for a rewrite of the whole table (a compaction
+    * fold, an erasure). For a bucket-partitioned table written
+    * one-file-per-bucket (`splits ≤ 1`) the sums group by (bucket,
+    * keys) over input hash-partitioned by the bucket, so the fold's
+    * exchange is also the write's. `liveOnly` as in [[live]].
+    */
+  private def rewriteSums(spark: SparkSession, stateDir: String,
+                          t: CountedTable, d: Dials, splits: Int,
+                          liveOnly: Boolean): DataFrame =
+    t.bucket.filter(_ => splits <= 1) match {
+      case Some(b) =>
+        IndexSegments.liveCounts(spark, stateDir, committed(spark, stateDir, None),
+          t.name, b.column +: t.keys, t.counts,
+          pre = _.repartition(d("B"), col(b.column)), liveOnly = liveOnly)
+      case None => live(spark, stateDir, t, liveOnly = liveOnly).get
+    }
 
   /** Per-key totals of `t` across the read horizon, or None before the
     * first commit. `where` (e.g. a bucket prune) lands BELOW the sum as
@@ -163,23 +201,21 @@ private[graft] final class CountedState(
     * `base:<dials>`; prior versions (and the replay guard) GC'd. A
     * layout with a bucket-partitioned table refuses a build whose
     * DERIVED rows are empty (a raw non-empty check passes a corpus the
-    * derivation drops whole).
+    * derivation drops whole) — counted by the write, which the refusal
+    * then removes: the prior state is untouched.
     */
   def build(in: DataFrame, idCol: String, payloadCol: String,
             stateDir: String, dials: Seq[(String, Int)],
             writeSplits: Int = 1): Long = {
     val d = ListMap(dials: _*)
     val frames = derive(in, idCol, payloadCol, d)
-    tables.zip(frames).foreach { case (t, f) =>
-      t.bucket.foreach(b => require(!f.isEmpty,
-        s"build() needs at least one ${b.needs} — an all-dropped base " +
-          "commits no parquet footers to anchor later reads; build on " +
-          "the first real batch instead"))
-    }
     val spark = in.sparkSession
     val prev = VersionedState.currentVersion(spark, stateDir)
     VersionedState.commit(spark, stateDir, prev, label = label("base", d),
-      gcBelow = prev.getOrElse(0L) + 1L)(write(frames, d, _, writeSplits))
+      gcBelow = prev.getOrElse(0L) + 1L)(write(frames, d, _, writeSplits,
+        refuse = Some((_, b) => s"build() needs at least one ${b.needs} — " +
+          "an all-dropped base commits no parquet footers to anchor later " +
+          "reads; build on the first real batch instead")))
   }
 
   private def requireBuilt(spark: SparkSession, stateDir: String,
@@ -223,8 +259,8 @@ private[graft] final class CountedState(
 
   /** Erasure BY ID ALONE: negate the ids' LIVE rows in every table (the
     * rows name the id, so the negation re-derives from the state itself
-    * — idempotent at the algebra level). One scan per table against the
-    * broadcast erasure batch.
+    * — idempotent at the algebra level). One scan per table, semi-joined
+    * to the broadcast erasure batch behind the fold's one exchange.
     */
   def delete(ids: DataFrame, idCol: String, stateDir: String,
              deltaId: String): Long = {
@@ -232,9 +268,10 @@ private[graft] final class CountedState(
     val prev = requireBuilt(spark, stateDir, "delete")
     IndexSegments.replayGuarded(spark, stateDir, "drop", deltaId) { l =>
       val d = storedDials(spark, stateDir)
-      val victims = broadcast(ids.select(col(idCol).as(id.get)).distinct())
-      val frames = tables.map(t =>
-        t.negated(live(spark, stateDir, t).get.join(victims, id.get)))
+      val victims = broadcast(ids.select(col(idCol).as(id.get)))
+      val frames = tables.map(t => t.negated(
+        rewriteSums(spark, stateDir, t, d, splits = 1, liveOnly = true)
+          .join(victims, Seq(id.get), "left_semi")))
       VersionedState.commit(spark, stateDir, prev, label = l)(write(frames, d, _))
     }
   }
@@ -243,8 +280,9 @@ private[graft] final class CountedState(
     * `base-compact:<dials>` version (zero totals dropped, NONZERO totals
     * preserved), carry the replay guard's delivered-id sidecar, and GC
     * below the retention floor. A fully-erased bucket-partitioned table
-    * must not fold (it would leave no schema anchor): keep the horizon
-    * and build() on the next corpus.
+    * must not fold (it would leave no schema anchor): the write counts
+    * its rows and refuses, leaving the horizon as it was — build() on
+    * the next corpus.
     */
   def compact(spark: SparkSession, stateDir: String, retainHorizons: Int,
               maxDelivered: Int, writeSplits: Int): Long = {
@@ -253,20 +291,18 @@ private[graft] final class CountedState(
     val (base, d) = lastBaseOf(cs, stateDir)
     val cur = cs.last._1
     if (cur == base) return cur
-    val folded = tables.map(t => live(spark, stateDir, t, liveOnly = false).get)
-    tables.zip(folded).foreach { case (t, f) =>
-      if (t.bucket.nonEmpty) require(!f.isEmpty,
-        s"refusing to compact $stateDir: the live ${t.name} table is EMPTY " +
-          "(every row erased) — an empty base-compact would leave no " +
-          "schema anchor; keep the horizon and build() on the next corpus instead")
-    }
+    val folded = tables.map(t =>
+      rewriteSums(spark, stateDir, t, d, writeSplits, liveOnly = false))
     val delivered = IndexSegments.retainDelivered(
       IndexSegments.deliveredLabelsOrdered(spark, stateDir, cs),
       maxDelivered, stateDir)
     VersionedState.commit(spark, stateDir, Some(cur),
       label = label("base-compact", d),
       gcBelow = IndexSegments.compactGcFloor(cs, cur + 1, retainHorizons)) { vdir =>
-      write(folded, d, vdir, writeSplits)
+      write(folded, d, vdir, writeSplits, refuse = Some((t, _) =>
+        s"refusing to compact $stateDir: the live ${t.name} table is EMPTY " +
+          "(every row erased) — an empty base-compact would leave no " +
+          "schema anchor; keep the horizon and build() on the next corpus instead"))
       VersionedState.writeLines(spark, vdir, IndexSegments.DeliveredFile,
         delivered)
     }
@@ -277,7 +313,9 @@ private[graft] final class CountedState(
     * horizon's marker count exceeds `maxLiveMarkers`, and — when
     * `auditCorpus` (the full live input) is supplied — gate every
     * maintained table against a one-shot re-derivation (full outer join
-    * on the keys; any missing row or differing count is drift).
+    * on the keys; any missing row or differing count is drift), every
+    * table's mismatches tagged into one union under one global count:
+    * one action however many tables.
     */
   def maintain(delta: DataFrame, idCol: String, payloadCol: String,
                stateDir: String, deltaId: String, maxLiveMarkers: Int,
@@ -289,7 +327,7 @@ private[graft] final class CountedState(
         maxDelivered = IndexSegments.DefaultMaxDelivered, writeSplits = 1),
       (auditCorpus.toSeq.map { corpus =>
         val oneShot = derive(corpus, idCol, payloadCol, storedDials(spark, stateDir))
-        val diffs = tables.zip(oneShot).map { case (t, f) =>
+        val tagged = tables.zip(oneShot).zipWithIndex.map { case ((t, f), i) =>
           live(spark, stateDir, t).get
             .join(f.select(t.keys.map(col) ++
                 t.counts.map(c => col(c).as(s"${c}_one")): _*),
@@ -297,8 +335,11 @@ private[graft] final class CountedState(
             .where(t.counts.map(c => col(c) =!= col(s"${c}_one"))
               .foldLeft(col(t.counts.head).isNull ||
                 col(s"${t.counts.head}_one").isNull)(_ || _))
-            .count()
-        }
+            .select(lit(i).as("_t"))
+        }.reduce(_.unionByName(_))
+        val perTable = tables.indices.map(i => count(when(col("_t") === i, 1)))
+        val row = tagged.agg(perTable.head, perTable.tail: _*).head()
+        val diffs = tables.indices.map(row.getLong)
         val names = tables.map(_.name).mkString(" + ")
         if (diffs.forall(_ == 0))
           GateVerdict.Ok("drift", s"maintained $names ≡ one-shot re-derivation")

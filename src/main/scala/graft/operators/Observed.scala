@@ -33,6 +33,19 @@ object Observed {
     (result, obs.get)
   }
 
+  /** Run `action` over `df` with ONE `metric` observed; returns (action
+    * result, metric value). An input found empty — by the optimizer,
+    * or by adaptive execution once the exchange above it ran empty —
+    * may lose its observation from the executed plan, and Spark then
+    * reports no metric at all; `whenPruned` is the value for that case
+    * (the metric over zero rows: 0 for a count, empty for a set).
+    */
+  def metric[T, M](df: DataFrame, metric: Column, whenPruned: M)
+                  (action: DataFrame => T): (T, M) = {
+    val (result, m) = audited(df, Map("m" -> metric))(action)
+    (result, m.get("m").fold(whenPruned)(_.asInstanceOf[M]))
+  }
+
   /** Parquet write + audit in one pass: writes `df` to `path`
     * (overwrite) and returns the observed metrics — the manifest row
     * a pipeline stores next to the output it just produced.

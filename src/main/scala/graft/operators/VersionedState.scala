@@ -108,7 +108,12 @@ object VersionedState {
   /** Write version prev+1 via `write` (handed the fresh version
     * directory) and atomically commit it with `label` in the marker;
     * then delete committed versions strictly below `gcBelow` (marker
-    * and payload). Returns the committed version number.
+    * and payload). Returns the committed version number. A `write` that
+    * throws (a refusal counted inside the write, a failed job) has its
+    * half-written directory removed before the rethrow, so a refused
+    * commit leaves the directory listing as it found it; a failed
+    * marker create does not, since that directory may be a second
+    * writer's.
     */
   def commit(spark: SparkSession, stateDir: String, prev: Option[Long],
              label: String = "", gcBelow: Long = Long.MinValue)
@@ -137,7 +142,8 @@ object VersionedState {
     // first — it was never committed, nothing is lost
     val vdir = new Path(versionPath(stateDir, next))
     if (fs.exists(vdir)) fs.delete(vdir, true)
-    write(vdir.toString)
+    try write(vdir.toString)
+    catch { case e: Throwable => fs.delete(vdir, true); throw e }
     fs.mkdirs(commits)
     // create-exclusive IS the commit point; an existing marker means a
     // second writer committed this version — surface, don't clobber

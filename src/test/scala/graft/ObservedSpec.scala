@@ -33,6 +33,22 @@ class ObservedSpec extends SparkTestBase {
     assert(n === 100L && m("n") === 100L && m("mx") === 99L)
   }
 
+  test("one metric: its value, or the given zero when an empty input drops the observation") {
+    val (n, mx) = Observed.metric(spark.range(10).toDF("id"), max(col("id")), -1L)(_.count())
+    assert(n === 10L && mx === 9L)
+    // once the exchange above it ran empty, adaptive execution replaces
+    // the partitioned write's sorted stage holding the observed node,
+    // and Spark reports no metric
+    val none = spark.range(10).toDF("id").where(col("id") > 100L)
+    def save(df: org.apache.spark.sql.DataFrame): Unit =
+      df.withColumn("p", pmod(col("id"), lit(3L))).repartition(4, col("p"))
+        .write.mode("overwrite").partitionBy("p").parquet(s"$tmp/none")
+    assert(Observed.audited(none, Map("n" -> count(lit(1))))(save)._2.isEmpty,
+      "precondition: the pruned observation reports no metric")
+    val (_, rows) = Observed.metric(none, count(lit(1)), 0L)(save)
+    assert(rows === 0L)
+  }
+
   test("empty metric map is refused") {
     intercept[IllegalArgumentException] {
       Observed.audited(spark.range(1).toDF("id"), Map.empty)(_.count())

@@ -106,6 +106,22 @@ class VersionedStateSpec extends SparkTestBase {
     assert(spark.read.parquet(VersionedState.versionPath(dir, 2L)).count() === 3L)
   }
 
+  test("a writer that throws has its half-written version removed; the error surfaces") {
+    val dir = freshDir("refused")
+    commitOne(dir, None, "base")
+    val e = intercept[IllegalArgumentException] {
+      VersionedState.commit(spark, dir, Some(1L), "delta") { vdir =>
+        spark.range(3).write.mode("overwrite").parquet(s"$vdir/half")
+        require(false, "refused mid-write")
+      }
+    }
+    assert(e.getMessage.contains("refused mid-write"))
+    assert(!new java.io.File(VersionedState.versionPath(dir, 2L)).exists,
+      "a refused commit must leave no unmarked version dir behind")
+    assert(VersionedState.committed(spark, dir).map(_._1) === Seq(1L))
+    assert(commitOne(dir, Some(1L), "delta") === 2L)
+  }
+
   test("sidecar lines round-trip whole — multibyte, empty, and missing files") {
     val dir = freshDir("sidecar")
     VersionedState.commit(spark, dir, None, "base") { vdir =>
