@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The shared SEGMENT ALGEBRA of the durable index family
   * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]]) — everything the three
@@ -491,8 +491,9 @@ private[graft] object IndexSegments {
     * session conf, every field nullable as a file source reads it, plus
     * the partition directory columns on the way to that file, typed as
     * partition inference types the integer bucket ids. None when `dir`
-    * holds no data file (or a directory value is not an integer) — the
-    * caller falls back to inference.
+    * holds no data file, a directory value is not an integer, or
+    * partition type inference is off — the caller falls back to
+    * inference.
     */
   private[graft] def footerSchema(spark: SparkSession,
                                   dir: String): Option[StructType] = {
@@ -510,15 +511,15 @@ private[graft] object IndexSegments {
     firstFile(root).flatMap { file =>
       val parts = Iterator.iterate(file.getPath.getParent)(_.getParent)
         .takeWhile(_.depth > root.depth).map(_.getName.split("=", 2)).toSeq.reverse
-      val typed = spark.sessionState.conf.partitionColumnTypeInferenceEnabled
-      if (!parts.forall(kv => kv.length == 2 && (!typed || kv(1).toIntOption.nonEmpty))) None
+      if (!spark.sessionState.conf.partitionColumnTypeInferenceEnabled ||
+          !parts.forall(kv => kv.length == 2 && kv(1).toIntOption.nonEmpty)) None
       else {
         val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
           HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.NO_FILTER))
         val data = ParquetFileFormat.readSchemaFromFooter(footer,
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
         Some(StructType(data.fields.map(_.copy(nullable = true)) ++ parts.map(kv =>
-          StructField(kv(0), if (typed) IntegerType else StringType))))
+          StructField(kv(0), IntegerType))))
       }
     }
   }

@@ -64,7 +64,7 @@ class CountedStateSpec extends SparkTestBase {
   private def listing(dir: String): Seq[String] = {
     val root = java.nio.file.Paths.get(dir)
     val s = java.nio.file.Files.walk(root)
-    try s.map(p => root.relativize(p).toString).toArray.toSeq.map(_.toString).sorted
+    try s.toArray.toSeq.map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString).sorted
     finally s.close()
   }
 
